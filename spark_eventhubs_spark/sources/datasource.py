@@ -26,11 +26,15 @@ Scale design (100 TB):
   from parquet footer row-group statistics (`hub_bounds`) — no data
   pages are read to plan a batch, mirroring the reference's
   ``allBoundedSeqNos`` service probe (EventHubsClient.scala:124-139).
-- **One InputPartition per (hub partition, planned range)** — the
-  reference's partition-aligned parallelism (EventHubsRDD.scala:46-57).
-  Each task reads only its partition directory (hive pruning) and only
-  the row groups overlapping its seqNo range (stats pruning), via
-  Arrow batches end to end.
+- **Read tasks sized to the micro-batch.** The planner resolves each
+  (hub partition, seqNo range) to the files and row groups that hold
+  it, from the same footer memo ``hub_bounds`` uses, and packs the
+  ranges into ``min(#ranges, ceil(events / EVENTS_PER_TASK))`` tasks.
+  A large batch keeps the reference's partition-aligned parallelism
+  (EventHubsRDD.scala:46-57), one task per hub partition; a small
+  trigger becomes one task, because every Python task costs a worker
+  round trip that a few thousand events do not repay. A task reads
+  only its planned row groups, via Arrow end to end.
 - **Rate limiting** reuses the proportional backlog-weighted split
   (streaming/ratelimit.py, ref EventHubsSource.scala:263-319) inside
   ``latestOffset``; the streaming engine's own offset log provides
@@ -52,11 +56,11 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pacompute
-import pyarrow.dataset as pads
 import pyarrow.parquet as papq
 
 from pyspark.sql.datasource import (
@@ -107,12 +111,6 @@ def _arrow_out_schema() -> pa.Schema:
     return pa.schema(
         [fs.field("body"), pa.field("partition", pa.string())]
         + [fs.field(n) for n in _FILE_COLUMNS[1:]]
-    )
-
-
-def _partitioning() -> pads.Partitioning:
-    return pads.partitioning(
-        pa.schema([pa.field("partition", pa.string())]), flavor="hive"
     )
 
 
@@ -356,12 +354,57 @@ def _resolve_positions(
     return out
 
 
+# Events one read task is sized for. Each task costs a Python worker
+# round trip per trigger, plus a Python write task and a staged file
+# when the query writes to a hub, so a few-thousand-event trigger runs
+# fastest as one task. On a 4-core host, 80k-event backlog triggers
+# drained within run-to-run noise as 1, 2 or 4 tasks, so at this size
+# a large batch keeps the reference's one task per hub partition.
+EVENTS_PER_TASK = 20_000
+
+
+class PlannedRange(NamedTuple):
+    """One hub partition's seqNo range [from, until) and the row groups
+    that hold it, as ((file path, (row group index, ...)), ...)."""
+
+    partition_id: int
+    from_seq_no: int
+    until_seq_no: int
+    row_groups: Tuple[Tuple[str, Tuple[int, ...]], ...]
+
+    @property
+    def width(self) -> int:
+        return self.until_seq_no - self.from_seq_no
+
+
 @dataclass
 class RangeInputPartition(InputPartition):
+    """One read task. ``ranges`` are the planned ranges it reads, in
+    partition order; the four scalar fields describe the first one."""
+
     hub_dir: str
     partition_id: int
     from_seq_no: int
     until_seq_no: int
+    ranges: Tuple[PlannedRange, ...] = ()
+
+
+def _range_row_groups(
+    pdir: Optional[str], frm: int, until: int
+) -> Tuple[Tuple[str, Tuple[int, ...]], ...]:
+    """Files and row groups whose footer seqNo stats overlap
+    [frm, until); a group without stats is kept (it may hold events)."""
+    if pdir is None:
+        return ()
+    out = []
+    for f in _parquet_files(pdir):
+        rgs = tuple(
+            i for i, n, mn, mx in _rg_stats(f, "sequenceNumber")
+            if n and (mn is None or mx is None or (int(mn) < until and int(mx) >= frm))
+        )
+        if rgs:
+            out.append((f, rgs))
+    return tuple(out)
 
 
 def _plan_range_partitions(
@@ -370,15 +413,38 @@ def _plan_range_partitions(
     end: Dict[int, int],
     earliest: Dict[int, Tuple[int, int]],
 ) -> List[RangeInputPartition]:
-    parts = []
+    """Plan each partition's range from footer stats, then pack the
+    ranges into tasks: largest range first onto the least-loaded task,
+    ranges kept whole, so a batch of at least EVENTS_PER_TASK events per
+    range stays partition-aligned."""
+    dirs = _partition_dirs(hub_dir)
+    ranges = []
     for pid in sorted(end):
         frm = start.get(pid, 0)
         # data-loss guard: clamp to earliest (ref EventHubsSource.scala:246-260)
         frm = max(frm, earliest.get(pid, (0, 0))[0])
         until = end[pid]
         if until > frm:
-            parts.append(RangeInputPartition(hub_dir, pid, frm, until))
-    return parts
+            ranges.append(
+                PlannedRange(pid, frm, until, _range_row_groups(dirs.get(pid), frm, until))
+            )
+    if not ranges:
+        return []
+    n_tasks = min(len(ranges), -(-sum(r.width for r in ranges) // EVENTS_PER_TASK))
+    tasks: List[List[PlannedRange]] = [[] for _ in range(n_tasks)]
+    load = [0] * n_tasks
+    for r in sorted(ranges, key=lambda r: (-r.width, r.partition_id)):
+        i = load.index(min(load))
+        tasks[i].append(r)
+        load[i] += r.width
+    for t in tasks:
+        t.sort(key=lambda r: r.partition_id)
+    return [
+        RangeInputPartition(
+            hub_dir, t[0].partition_id, t[0].from_seq_no, t[0].until_seq_no, tuple(t)
+        )
+        for t in sorted(tasks, key=lambda t: t[0].partition_id)
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -386,34 +452,40 @@ def _plan_range_partitions(
 # ---------------------------------------------------------------------------
 
 def _read_range(p: RangeInputPartition) -> Iterator[pa.RecordBatch]:
-    """Read [from, until) of one hub partition as Arrow batches:
-    hive pruning picks the one partition directory, footer stats prune
-    row groups, and the receive contract — seqNo-sorted, exactly
-    until-from rows (ref CachedEventHubsReceiver.scala:227-287) — is
-    enforced before yielding."""
-    ds = pads.dataset(p.hub_dir, format="parquet", partitioning=_partitioning())
-    filt = (
-        (pads.field("partition") == str(p.partition_id))
-        & (pads.field("sequenceNumber") >= p.from_seq_no)
-        & (pads.field("sequenceNumber") < p.until_seq_no)
-    )
-    tbl = ds.to_table(filter=filt)
-    tbl = tbl.sort_by("sequenceNumber")
-    n = tbl.num_rows
-    if n != p.until_seq_no - p.from_seq_no:
-        raise RuntimeError(
-            f"receive contract violated: partition {p.partition_id} "
-            f"[{p.from_seq_no},{p.until_seq_no}) expected "
-            f"{p.until_seq_no - p.from_seq_no} events, got {n}"
-        )
+    """Read a task's planned ranges as Arrow batches: only the planned
+    row groups are read, each masked to its range, and the receive
+    contract — seqNo-sorted, exactly until-from rows per range
+    (ref CachedEventHubsReceiver.scala:227-287) — is enforced before a
+    range is yielded."""
     out_schema = _arrow_out_schema()
-    cols = [
-        tbl.column(f.name).cast(f.type)
-        if f.name != "partition"
-        else pa.chunked_array([pa.array([str(p.partition_id)] * n, pa.string())])
-        for f in out_schema
-    ]
-    yield from pa.table(cols, schema=out_schema).to_batches(max_chunksize=65536)
+    if not p.ranges:
+        yield from out_schema.empty_table().to_batches()
+        return
+    file_schema = _arrow_file_schema()
+    for r in p.ranges:
+        pieces = []
+        for path, rgs in r.row_groups:
+            tbl = papq.ParquetFile(path).read_row_groups(list(rgs), columns=_FILE_COLUMNS)
+            seq = tbl.column("sequenceNumber")
+            keep = pacompute.and_(
+                pacompute.greater_equal(seq, r.from_seq_no),
+                pacompute.less(seq, r.until_seq_no),
+            )
+            pieces.append(tbl.filter(keep).cast(file_schema))
+        tbl = pa.concat_tables(pieces) if pieces else file_schema.empty_table()
+        tbl = tbl.sort_by("sequenceNumber")
+        n = tbl.num_rows
+        if n != r.width:
+            raise RuntimeError(
+                f"receive contract violated: partition {r.partition_id} "
+                f"[{r.from_seq_no},{r.until_seq_no}) expected "
+                f"{r.width} events, got {n}"
+            )
+        tbl = tbl.add_column(
+            1, out_schema.field("partition"),
+            pa.array([str(r.partition_id)] * n, pa.string()),
+        )
+        yield from tbl.to_batches(max_chunksize=65536)
 
 
 # ---------------------------------------------------------------------------
@@ -436,12 +508,7 @@ class EventHubsBatchReader(DataSourceReader):
         return parts or [RangeInputPartition(hub_dir, 0, 0, 0)]
 
     def read(self, partition: RangeInputPartition) -> Iterator[pa.RecordBatch]:
-        if partition.until_seq_no <= partition.from_seq_no:
-            yield from pa.table(
-                {f.name: pa.array([], f.type) for f in _arrow_out_schema()}
-            ).to_batches()
-            return
-        yield from _read_range(partition)
+        return _read_range(partition)
 
 
 # ---------------------------------------------------------------------------
@@ -565,12 +632,7 @@ class EventHubsStreamReader(DataSourceStreamReader):
         return parts or [RangeInputPartition(self.hub_dir, 0, 0, 0)]
 
     def read(self, partition: RangeInputPartition) -> Iterator[pa.RecordBatch]:
-        if partition.until_seq_no <= partition.from_seq_no:
-            yield from pa.table(
-                {f.name: pa.array([], f.type) for f in _arrow_out_schema()}
-            ).to_batches()
-            return
-        yield from _read_range(partition)
+        return _read_range(partition)
 
     def commit(self, end: dict) -> None:
         self._cursor_write(self._unpack(end))
@@ -620,9 +682,8 @@ class EventHubsWriterBase:
         self.schema = schema
         self.hub_dir = _hub_dir_from_options(options)
         self.cols = _validate_write_schema(schema)
-        self.partition_count = int(
-            options.get("eventhubs.partitioncount") or 4
-        )
+        pc = options.get("eventhubs.partitioncount")
+        self.partition_count = int(pc) if pc else None
 
     # -- executor side: stage rows as a small parquet file --
     def write(self, iterator) -> StagedFileMessage:
@@ -677,82 +738,111 @@ class EventHubsWriterBase:
                 os.remove(m.path)
 
 
+# Partition count a sink routes over when eventhubs.partitionCount is unset.
+DEFAULT_PARTITION_COUNT = 4
+
+_STAGED_COLUMNS = ["body", "partition", "partitionKey", "properties"]
+
+
+def _per_distinct(col: pa.ChunkedArray, fn: Callable[[str], int]) -> np.ndarray:
+    """``fn`` applied once per distinct value of a null-free column,
+    broadcast back to its rows."""
+    enc = col.combine_chunks().dictionary_encode()
+    lut = np.array([fn(v) for v in enc.dictionary.to_pylist()], np.int64)
+    return lut[enc.indices.to_numpy()]
+
+
+def _route(
+    tbl: pa.Table, partition_count: int, max_partitions: int, rr_start: int
+) -> np.ndarray:
+    """Target partition per staged row: a pinned ``partition`` as an int,
+    else the ``partitionKey`` hash, else round-robin from ``rr_start`` in
+    row order (ref SimulatedEventHubs.scala:86-101). A pinned id outside
+    [0, max_partitions) is refused: a hub's partition count is fixed at
+    creation, so the id names no partition."""
+    part, key = tbl.column("partition"), tbl.column("partitionKey")
+    pinned = part.is_valid().to_numpy(zero_copy_only=False)
+    keyed = ~pinned & key.is_valid().to_numpy(zero_copy_only=False)
+    rr = ~pinned & ~keyed
+    pids = np.empty(tbl.num_rows, np.int64)
+    pids[pinned] = _per_distinct(part.filter(pa.array(pinned)), int)
+    bad = pids[pinned][(pids[pinned] < 0) | (pids[pinned] >= max_partitions)]
+    if len(bad):
+        raise ValueError(
+            f"partition id {int(bad[0])} does not exist: the hub has "
+            f"{max_partitions} partitions, ids 0..{max_partitions - 1}"
+        )
+    pids[keyed] = _per_distinct(
+        key.filter(pa.array(keyed)), lambda k: _hash_partition_key(k, partition_count)
+    )
+    pids[rr] = (rr_start + np.arange(int(rr.sum()))) % partition_count
+    return pids
+
+
 def commit_staged_paths(
-    hub_dir: str, paths: List[str], commit_tag: str, partition_count: int
+    hub_dir: str, paths: List[str], commit_tag: str,
+    partition_count: Optional[int] = None,
 ) -> int:
     """Assign dense per-partition sequence numbers to staged event files
     and append them to the hub log — the broker role the service plays
     on arrival. Used by the DataSource writers and the ForeachWriter
-    sink. Returns the number of events committed."""
-    bounds = hub_bounds(hub_dir, partition_count)
-    next_seq = {pid: hi for pid, (_, hi) in bounds.items()}
-    total = sum(hi - lo for lo, hi in bounds.values())
-    rr = total  # round-robin cursor (ref SimulatedEventHubs.scala:86-101)
-    now_us = int(time.time() * 1_000_000)
-    buckets: Dict[int, Dict[str, list]] = {}
-    n_events = 0
-
-    for path in paths:
-        tbl = papq.read_table(path)
-        for i in range(tbl.num_rows):
-            pid_s = tbl.column("partition")[i].as_py()
-            key = tbl.column("partitionKey")[i].as_py()
-            if pid_s is not None:
-                pid = int(pid_s)
-            elif key is not None:
-                pid = _hash_partition_key(key, partition_count)
-            else:
-                pid = rr % partition_count
-                rr += 1
-            seq = next_seq.setdefault(pid, 0)
-            next_seq[pid] = seq + 1
-            n_events += 1
-            b = buckets.setdefault(
-                pid,
-                {"body": [], "offset": [], "sequenceNumber": [],
-                 "enqueuedTime": [], "publisher": [], "partitionKey": [],
-                 "properties": [], "systemProperties": []},
-            )
-            b["body"].append(tbl.column("body")[i].as_py())
-            b["offset"].append(str(seq))
-            b["sequenceNumber"].append(seq)
-            b["enqueuedTime"].append(now_us)
-            b["publisher"].append(None)
-            b["partitionKey"].append(key)
-            b["properties"].append(tbl.column("properties")[i].as_py() or [])
-            b["systemProperties"].append([])
-
-    fs = _arrow_file_schema()
-    for pid, b in buckets.items():
-        pdir = os.path.join(hub_dir, f"partition={pid}")
-        os.makedirs(pdir, exist_ok=True)
-        out = pa.table(
-            {
-                "body": pa.array(b["body"], pa.binary()),
-                "offset": pa.array(b["offset"], pa.string()),
-                "sequenceNumber": pa.array(b["sequenceNumber"], pa.int64()),
-                "enqueuedTime": pa.array(b["enqueuedTime"], pa.timestamp("us", tz="UTC")),
-                "publisher": pa.array(b["publisher"], pa.string()),
-                "partitionKey": pa.array(b["partitionKey"], pa.string()),
-                "properties": pa.array(b["properties"], pa.map_(pa.string(), pa.string())),
-                "systemProperties": pa.array(b["systemProperties"], pa.map_(pa.string(), pa.string())),
-            },
-            schema=fs,
+    sink. Rows route over ``partition_count`` partitions (default
+    DEFAULT_PARTITION_COUNT); a pinned id must be below
+    ``partition_count`` when given, else below the larger of the hub's
+    partition directory count and the default. Returns the number of
+    events committed."""
+    tables = [papq.read_table(path, columns=_STAGED_COLUMNS) for path in paths]
+    n_events = sum(t.num_rows for t in tables)
+    if n_events:
+        routing = partition_count or DEFAULT_PARTITION_COUNT
+        max_partitions = partition_count or max(
+            len(_partition_dirs(hub_dir)), DEFAULT_PARTITION_COUNT
         )
-        # Write-then-RENAME (never write the visible name in place):
-        # readers scan partition dirs for footer stats on every
-        # micro-batch — at a 5 ms trigger cadence a reader reliably
-        # catches an in-place write mid-flight and dies with "Parquet
-        # magic bytes not found in footer" (reproduced at sf10,
-        # round 12). The dot-prefix keeps the in-flight file invisible
-        # to _parquet_files; os.replace is atomic within a directory,
-        # so a committed file is only ever seen complete — which is
-        # also what the _RG_STATS_CACHE immutability contract
-        # (top of file) has always assumed of this path.
-        final = os.path.join(pdir, f"commit-{commit_tag}.parquet")
-        tmp = os.path.join(pdir, f".inprogress-commit-{commit_tag}.parquet")
-        papq.write_table(out, tmp)
-        os.replace(tmp, final)
+        bounds = hub_bounds(hub_dir, routing)
+        next_seq = {pid: hi for pid, (_, hi) in bounds.items()}
+        total = sum(hi - lo for lo, hi in bounds.values())
+        tbl = pa.concat_tables(tables).combine_chunks()
+        pids = _route(tbl, routing, max_partitions, total)
+        fs = _arrow_file_schema()
+        now_us = int(time.time() * 1_000_000)
+        empty_map = pa.scalar([], fs.field("properties").type)
+        order = np.argsort(pids, kind="stable")
+        uniq, firsts, counts = np.unique(pids[order], return_index=True, return_counts=True)
+        for pid, i, n in zip(uniq.tolist(), firsts.tolist(), counts.tolist()):
+            rows = tbl.take(pa.array(order[i:i + n]))
+            seq = next_seq.get(pid, 0) + np.arange(n, dtype=np.int64)
+            out = pa.table(
+                [
+                    rows.column("body"),
+                    pacompute.cast(pa.array(seq), pa.string()),
+                    pa.array(seq),
+                    pa.array(np.full(n, now_us), pa.timestamp("us", tz="UTC")),
+                    pa.nulls(n, pa.string()),
+                    rows.column("partitionKey"),
+                    pacompute.fill_null(rows.column("properties"), empty_map),
+                    pa.MapArray.from_arrays(
+                        np.zeros(n + 1, np.int32),
+                        pa.array([], pa.string()), pa.array([], pa.string()),
+                    ),
+                ],
+                schema=fs,
+            )
+            pdir = os.path.join(hub_dir, f"partition={pid}")
+            os.makedirs(pdir, exist_ok=True)
+            # Write-then-RENAME (never write the visible name in place):
+            # readers scan partition dirs for footer stats on every
+            # micro-batch — at a 5 ms trigger cadence a reader reliably
+            # catches an in-place write mid-flight and dies with "Parquet
+            # magic bytes not found in footer" (reproduced at sf10,
+            # round 12). The dot-prefix keeps the in-flight file invisible
+            # to _parquet_files; os.replace is atomic within a directory,
+            # so a committed file is only ever seen complete — which is
+            # also what the _RG_STATS_CACHE immutability contract
+            # (top of file) has always assumed of this path.
+            final = os.path.join(pdir, f"commit-{commit_tag}.parquet")
+            tmp = os.path.join(pdir, f".inprogress-commit-{commit_tag}.parquet")
+            papq.write_table(out, tmp)
+            os.replace(tmp, final)
     for path in paths:
         if os.path.exists(path):
             os.remove(path)

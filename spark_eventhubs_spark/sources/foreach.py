@@ -95,7 +95,7 @@ class EventHubsForeachWriter:
         )
 
 
-def flush_foreach_staged(hub_dir: str, partition_count: int = 4) -> int:
+def flush_foreach_staged(hub_dir: str, partition_count: Optional[int] = None) -> int:
     """Commit all staged foreach files into the hub log (dense per-
     partition seqNos, one appended file per partition). Returns the
     number of events committed."""

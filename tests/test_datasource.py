@@ -575,3 +575,324 @@ def test_compaction_evicts_footer_stat_cache(spark, tmp_path):
     assert not live, f"stale cache keys for deleted files: {live}"
     # bounds still correct from the new files
     assert all(hi > lo for lo, hi in ds.hub_bounds(hub).values())
+
+
+# ------------------------------------ read-task planning (pure pyarrow)
+
+def _write_log(hub, counts, files_per_partition=4, row_group_size=None):
+    """A hub log written directly with pyarrow: ``counts[pid]`` events
+    per partition, dense seqNos from 0, split over sorted files."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    from spark_eventhubs_spark.sources.datasource import _arrow_file_schema
+
+    fs = _arrow_file_schema()
+    for pid, n in counts.items():
+        pdir = os.path.join(hub, f"partition={pid}")
+        os.makedirs(pdir, exist_ok=True)
+        step = -(-n // files_per_partition)
+        for i, lo in enumerate(range(0, n, step)):
+            seq = list(range(lo, min(n, lo + step)))
+            tbl = pa.table(
+                [
+                    pa.array([f"{pid}:{s}".encode() for s in seq], pa.binary()),
+                    pa.array([str(s) for s in seq], pa.string()),
+                    pa.array(seq, pa.int64()),
+                    pa.array([1_704_067_200_000_000 + s for s in seq],
+                             pa.timestamp("us", tz="UTC")),
+                    pa.nulls(len(seq), pa.string()),
+                    pa.nulls(len(seq), pa.string()),
+                    pa.array([[]] * len(seq), pa.map_(pa.string(), pa.string())),
+                    pa.array([[]] * len(seq), pa.map_(pa.string(), pa.string())),
+                ],
+                schema=fs,
+            )
+            papq.write_table(tbl, os.path.join(pdir, f"part-{i:05d}.parquet"),
+                             row_group_size=row_group_size)
+    return hub
+
+
+def _read_all(reader, parts):
+    got = []
+    for p in parts:
+        for b in reader.read(p):
+            got.extend(zip(b.column("partition").to_pylist(),
+                           b.column("sequenceNumber").to_pylist(),
+                           b.column("body").to_pylist()))
+    return got
+
+
+def test_small_batch_packs_into_one_task(tmp_path):
+    """A 3k-event batch over 4 partitions is one read task, and that
+    task yields every (partition, seqNo) of every range exactly once,
+    each range in seqNo order."""
+    from spark_eventhubs_spark.sources.datasource import EventHubsBatchReader
+
+    hub = _write_log(str(tmp_path / "hub"), {0: 1200, 1: 900, 2: 600, 3: 300})
+    reader = EventHubsBatchReader({"path": hub})
+    parts = reader.partitions()
+    assert len(parts) == 1
+    (p,) = parts
+    assert [r.partition_id for r in p.ranges] == [0, 1, 2, 3]
+    assert (p.partition_id, p.from_seq_no, p.until_seq_no) == (0, 0, 1200)
+    got = _read_all(reader, parts)
+    expect = [(str(pid), s, f"{pid}:{s}".encode())
+              for pid, n in ((0, 1200), (1, 900), (2, 600), (3, 300))
+              for s in range(n)]
+    assert got == expect
+
+
+def test_large_batch_keeps_one_task_per_partition(tmp_path):
+    """An 80k-event batch skewed 40/30/20/10 plans one task per hub
+    partition (partition-aligned, like the reference's RDD), each
+    reading only its own range."""
+    from spark_eventhubs_spark.sources.datasource import (
+        EVENTS_PER_TASK,
+        EventHubsBatchReader,
+    )
+
+    counts = {0: 32_000, 1: 24_000, 2: 16_000, 3: 8_000}
+    assert sum(counts.values()) >= len(counts) * EVENTS_PER_TASK
+    hub = _write_log(str(tmp_path / "hub"), counts, files_per_partition=8)
+    reader = EventHubsBatchReader({"path": hub})
+    parts = reader.partitions()
+    assert [(p.partition_id, len(p.ranges)) for p in parts] == [
+        (0, 1), (1, 1), (2, 1), (3, 1)]
+    for p in parts:
+        rows = _read_all(reader, [p])
+        assert [s for _, s, _ in rows] == list(range(counts[p.partition_id]))
+        assert {pid for pid, _, _ in rows} == {str(p.partition_id)}
+
+
+def test_packing_is_greedy_largest_first():
+    """Ranges stay whole and go largest first onto the least-loaded
+    task; task count is ceil(events / EVENTS_PER_TASK) capped by the
+    range count."""
+    from spark_eventhubs_spark.sources import datasource as ds
+
+    per = ds.EVENTS_PER_TASK
+    start = {0: 0, 1: 0, 2: 0, 3: 0}
+    end = {0: per, 1: per * 3 // 4, 2: per // 2, 3: per // 4}
+    bounds = {pid: (0, e) for pid, e in end.items()}
+    parts = ds._plan_range_partitions("/nonexistent", start, end, bounds)
+    assert [[r.partition_id for r in p.ranges] for p in parts] == [[0], [1], [2, 3]]
+    # no events, no tasks; a drained partition plans no range
+    assert ds._plan_range_partitions("/nonexistent", end, end, bounds) == []
+
+
+def test_row_group_lost_between_plan_and_read_breaks_receive_contract(tmp_path):
+    """A planned row group that lost events before the read raises the
+    receive-contract error for that partition, even inside a packed
+    task that reads other partitions first."""
+    import pyarrow.parquet as papq
+
+    from spark_eventhubs_spark.sources.datasource import EventHubsBatchReader
+
+    hub = _write_log(str(tmp_path / "hub"), {0: 500, 1: 500, 2: 500, 3: 500},
+                     files_per_partition=2, row_group_size=100)
+    reader = EventHubsBatchReader({"path": hub})
+    (p,) = reader.partitions()
+    assert len(p.ranges) == 4
+    victim = os.path.join(hub, "partition=2", "part-00001.parquet")
+    tbl = papq.read_table(victim)
+    papq.write_table(tbl.filter(
+        tbl.column("sequenceNumber").to_numpy() != 420), victim, row_group_size=100)
+    with pytest.raises(RuntimeError, match=r"receive contract violated: partition 2 "
+                       r"\[0,500\) expected 500 events, got 499"):
+        _read_all(reader, [p])
+
+
+def test_planning_reads_no_data_pages(tmp_path, monkeypatch):
+    """partitions() plans files and row groups from footer statistics
+    alone; data pages are read only by the task."""
+    import pyarrow.parquet as papq
+
+    from spark_eventhubs_spark.sources.datasource import (
+        EventHubsBatchReader,
+        EventHubsStreamReader,
+    )
+
+    hub = _write_log(str(tmp_path / "hub"), {0: 300, 1: 200})
+
+    def no_pages(*a, **k):
+        raise AssertionError("data pages read while planning")
+
+    with monkeypatch.context() as m:
+        for name in ("read_row_groups", "read_row_group", "read", "iter_batches"):
+            m.setattr(papq.ParquetFile, name, no_pages)
+        m.setattr(papq, "read_table", no_pages)
+        batch_parts = EventHubsBatchReader({"path": hub}).partitions()
+        stream = EventHubsStreamReader({"path": hub})
+        stream_parts = stream.partitions({"events": {"0": 10, "1": 0}},
+                                         {"events": {"0": 300, "1": 150}})
+    assert sum(len(p.ranges) for p in batch_parts) == 2
+    assert len(_read_all(stream, stream_parts)) == 290 + 150
+
+
+def test_module_import_leaves_pyarrow_dataset_unloaded():
+    """The read path is pyarrow.parquet only; importing the DataSource
+    module (once per streaming query in Spark's source runner) must not
+    pull in pyarrow.dataset."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys; import spark_eventhubs_spark.sources.datasource; "
+         "print('pyarrow.dataset' in sys.modules)"],
+        cwd=root, capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "False"
+
+
+# --------------------------------------- commit routing (pure pyarrow)
+
+def _stage(hub, name, rows):
+    """Stage (body, partition, partitionKey, properties) rows the way
+    the writers do."""
+    import pyarrow as pa
+    import pyarrow.parquet as papq
+
+    staging = os.path.join(hub, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    path = os.path.join(staging, name)
+    papq.write_table(pa.table({
+        "body": pa.array([r[0] for r in rows], pa.binary()),
+        "partition": pa.array([r[1] for r in rows], pa.string()),
+        "partitionKey": pa.array([r[2] for r in rows], pa.string()),
+        "properties": pa.array([r[3] for r in rows], pa.map_(pa.string(), pa.string())),
+    }), path)
+    return path
+
+
+def _committed(hub):
+    """{pid: [(seqNo, body, partitionKey, properties), ...]} in seqNo order."""
+    import pyarrow.parquet as papq
+
+    from spark_eventhubs_spark.sources.datasource import _parquet_files, _partition_dirs
+
+    out = {}
+    for pid, d in _partition_dirs(hub).items():
+        rows = [r for f in _parquet_files(d) for r in papq.read_table(f).to_pylist()]
+        for r in rows:
+            assert r["offset"] == str(r["sequenceNumber"])
+            assert r["publisher"] is None and r["systemProperties"] == []
+        out[pid] = sorted((r["sequenceNumber"], r["body"], r["partitionKey"],
+                           r["properties"]) for r in rows)
+    return out
+
+
+def test_commit_routes_and_numbers_like_the_per_row_rules(tmp_path):
+    """Pinned rows go to their partition, keyed rows to md5(key) mod N,
+    and the rest round-robin from the hub's event total, in staged-file
+    then row order; seqNos are dense per partition and continue across
+    commits."""
+    import hashlib
+
+    from spark_eventhubs_spark.sources.datasource import commit_staged_paths
+
+    hub = str(tmp_path / "hub")
+    os.makedirs(hub)
+    a = [(b"a0", "2", None, [("k", "v")]), (b"a1", None, "alpha", []),
+         (b"a2", None, None, []), (b"a3", None, "beta", [("x", "1"), ("y", "2")]),
+         (b"a4", None, "alpha", []), (b"a5", None, None, []), (b"a6", "0", None, [])]
+    b = [(b"b0", None, None, [("n", "0")]), (b"b1", None, "beta", []),
+         (b"b2", "2", None, []), (b"b3", None, None, []), (b"b4", None, "gamma", [])]
+    c = [(b"c0", None, None, []), (b"c1", None, "alpha", []), (b"c2", "3", None, [])]
+
+    def expected(batches, state):
+        # the per-row rules, written out by hand
+        for rows in batches:
+            for body, part, key, props in rows:
+                if part is not None:
+                    pid = int(part)
+                elif key is not None:
+                    pid = int.from_bytes(hashlib.md5(key.encode()).digest()[:8], "big") % 4
+                else:
+                    pid = state["rr"] % 4
+                    state["rr"] += 1
+                seq = state["next"].get(pid, 0)
+                state["next"][pid] = seq + 1
+                state["rows"].setdefault(pid, []).append((seq, body, key, props))
+        return {pid: sorted(rs) for pid, rs in state["rows"].items()}
+
+    state = {"rr": 0, "next": {}, "rows": {}}
+    paths = [_stage(hub, "s-0.parquet", a), _stage(hub, "s-1.parquet", b)]
+    assert commit_staged_paths(hub, paths, "t0", 4) == len(a) + len(b)
+    assert _committed(hub) == expected([a, b], state)
+    assert not os.listdir(os.path.join(hub, "_staging"))
+    # the round-robin cursor restarts from the hub's event total
+    state["rr"] = len(a) + len(b)
+    assert commit_staged_paths(hub, [_stage(hub, "s-2.parquet", c)], "t1", 4) == 3
+    assert _committed(hub) == expected([c], state)
+    for rows in _committed(hub).values():
+        assert [r[0] for r in rows] == list(range(len(rows)))
+
+
+def test_commit_with_no_rows_writes_nothing(tmp_path):
+    from spark_eventhubs_spark.sources.datasource import commit_staged_paths
+
+    hub = str(tmp_path / "hub")
+    os.makedirs(hub)
+    assert commit_staged_paths(hub, [_stage(hub, "s.parquet", [])], "t0") == 0
+    assert commit_staged_paths(hub, [], "t1") == 0
+    assert _committed(hub) == {}
+
+
+def test_writer_rejects_both_routings_at_write_time(tmp_path):
+    from pyspark.sql import Row
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from spark_eventhubs_spark.sources.datasource import EventHubsStreamWriter
+
+    schema = StructType([StructField(n, StringType())
+                         for n in ("body", "partition", "partitionKey")])
+    w = EventHubsStreamWriter({"path": str(tmp_path / "hub")}, schema)
+    rows = [Row(body="a", partition="1", partitionKey=None),
+            Row(body="b", partition="1", partitionKey="k")]
+    with pytest.raises(ValueError, match="mutually exclusive"):
+        w.write(iter(rows))
+
+
+def test_commit_rejects_pinned_partition_outside_the_hub(tmp_path):
+    """A pinned id outside [0, N) names no partition and must not create
+    one: N is the configured partition count, else the larger of the
+    hub's partition directories and the default of 4."""
+    from spark_eventhubs_spark.sources.datasource import commit_staged_paths, hub_bounds
+
+    hub = str(tmp_path / "hub")
+    os.makedirs(hub)
+    for pid in ("7", "4", "-1"):
+        staged = _stage(hub, "s.parquet", [(b"x", "0", None, []), (b"y", pid, None, [])])
+        with pytest.raises(ValueError, match=f"partition id {pid} does not exist"):
+            commit_staged_paths(hub, [staged], "t0")
+        assert not os.path.exists(os.path.join(hub, f"partition={pid}"))
+    # nothing was committed, not even the valid row
+    assert hub_bounds(hub, 4) == {p: (0, 0) for p in range(4)}
+    # an explicit partition count admits ids below it, and only those
+    staged = _stage(hub, "s7.parquet", [(b"z", "7", None, [])])
+    assert commit_staged_paths(hub, [staged], "t1", partition_count=8) == 1
+    with pytest.raises(ValueError, match="partition id 7 does not exist"):
+        commit_staged_paths(hub, [_stage(hub, "s7.parquet", [(b"z", "7", None, [])])],
+                            "t2", partition_count=4)
+    # unset: a hub that already has 8 partition dirs keeps accepting 0..7
+    for pid in range(8):
+        os.makedirs(os.path.join(hub, f"partition={pid}"), exist_ok=True)
+    assert commit_staged_paths(
+        hub, [_stage(hub, "s6.parquet", [(b"w", "6", None, [])])], "t3") == 1
+    assert hub_bounds(hub)[6] == (0, 1) and hub_bounds(hub)[7] == (0, 1)
+
+
+def test_batch_sink_rejects_pinned_partition_outside_the_hub(spark, tmp_path):
+    register_eventhubs(spark)
+    hub = str(tmp_path / "hub")
+    os.makedirs(hub)
+    df = spark.createDataFrame([("a", "0"), ("b", "7")], "body string, partition string")
+    with pytest.raises(Exception, match="partition id 7 does not exist"):
+        df.write.format("eventhubs").mode("append").option("path", hub).save()
+    assert hub_bounds(hub) == {}
+    (df.write.format("eventhubs").mode("append").option("path", hub)
+     .option("eventhubs.partitionCount", "8").save())
+    assert hub_bounds(hub) == {0: (0, 1), 7: (0, 1)}
