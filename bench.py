@@ -35,6 +35,16 @@ def _replica_layout(sf_dir: str):
         return None
 
 
+def _host_driver_mem() -> str:
+    """A quarter of the host's MemTotal, at least 1g."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = int(fh.readline().split()[1])
+    except (OSError, ValueError, IndexError):
+        return "1g"
+    return f"{max(1, kb // (4 << 20))}g"
+
+
 def main() -> None:
     # Measurement hygiene: flush pending filesystem writeback BEFORE
     # timing anything. A bench started minutes after a multi-GB write
@@ -69,7 +79,7 @@ def main() -> None:
     except OSError:
         host_load_1m = -1.0
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     # "sf10", "sf0.1", and suffixed replica dirs like "sf10_a" all
     # stamp their numeric scale; anything unparseable stamps -1 (the
     # bench_ratio --factor override path) instead of crashing
@@ -152,7 +162,7 @@ def main() -> None:
             .config("spark.ui.showConsoleProgress", "false")
             .config(
                 "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
             )
             .getOrCreate()
         )

@@ -20,6 +20,10 @@ Layout:
     functions/  shared deterministic hashing / tokenization helpers
 """
 
+# First, so every Spark worker that unpickles a connector object stops
+# re-reading pyspark.zip's directory on each task (see _zipimport).
+from spark_eventhubs_spark import _zipimport  # noqa: F401
+
 __version__ = "0.1.0"
 
 from spark_eventhubs_spark.conf import EventHubsConf

@@ -738,7 +738,8 @@ class EventHubsWriterBase:
                 os.remove(m.path)
 
 
-# Partition count a sink routes over when eventhubs.partitionCount is unset.
+# Least partition count a sink routes over when eventhubs.partitionCount is
+# unset; a hub whose partition directories go higher routes over all of them.
 DEFAULT_PARTITION_COUNT = 4
 
 _STAGED_COLUMNS = ["body", "partition", "partitionKey", "properties"]
@@ -752,13 +753,11 @@ def _per_distinct(col: pa.ChunkedArray, fn: Callable[[str], int]) -> np.ndarray:
     return lut[enc.indices.to_numpy()]
 
 
-def _route(
-    tbl: pa.Table, partition_count: int, max_partitions: int, rr_start: int
-) -> np.ndarray:
+def _route(tbl: pa.Table, partition_count: int, rr_start: int) -> np.ndarray:
     """Target partition per staged row: a pinned ``partition`` as an int,
     else the ``partitionKey`` hash, else round-robin from ``rr_start`` in
     row order (ref SimulatedEventHubs.scala:86-101). A pinned id outside
-    [0, max_partitions) is refused: a hub's partition count is fixed at
+    [0, partition_count) is refused: a hub's partition count is fixed at
     creation, so the id names no partition."""
     part, key = tbl.column("partition"), tbl.column("partitionKey")
     pinned = part.is_valid().to_numpy(zero_copy_only=False)
@@ -766,11 +765,11 @@ def _route(
     rr = ~pinned & ~keyed
     pids = np.empty(tbl.num_rows, np.int64)
     pids[pinned] = _per_distinct(part.filter(pa.array(pinned)), int)
-    bad = pids[pinned][(pids[pinned] < 0) | (pids[pinned] >= max_partitions)]
+    bad = pids[pinned][(pids[pinned] < 0) | (pids[pinned] >= partition_count)]
     if len(bad):
         raise ValueError(
             f"partition id {int(bad[0])} does not exist: the hub has "
-            f"{max_partitions} partitions, ids 0..{max_partitions - 1}"
+            f"{partition_count} partitions, ids 0..{partition_count - 1}"
         )
     pids[keyed] = _per_distinct(
         key.filter(pa.array(keyed)), lambda k: _hash_partition_key(k, partition_count)
@@ -786,23 +785,21 @@ def commit_staged_paths(
     """Assign dense per-partition sequence numbers to staged event files
     and append them to the hub log — the broker role the service plays
     on arrival. Used by the DataSource writers and the ForeachWriter
-    sink. Rows route over ``partition_count`` partitions (default
-    DEFAULT_PARTITION_COUNT); a pinned id must be below
-    ``partition_count`` when given, else below the larger of the hub's
-    partition directory count and the default. Returns the number of
-    events committed."""
+    sink. Rows route over ``partition_count`` partitions when given, else
+    over the larger of the hub's highest ``partition=`` id + 1 and
+    DEFAULT_PARTITION_COUNT; a pinned id must be below that count.
+    Returns the number of events committed."""
     tables = [papq.read_table(path, columns=_STAGED_COLUMNS) for path in paths]
     n_events = sum(t.num_rows for t in tables)
     if n_events:
-        routing = partition_count or DEFAULT_PARTITION_COUNT
-        max_partitions = partition_count or max(
-            len(_partition_dirs(hub_dir)), DEFAULT_PARTITION_COUNT
+        n_partitions = partition_count or max(
+            max(_partition_dirs(hub_dir), default=-1) + 1, DEFAULT_PARTITION_COUNT
         )
-        bounds = hub_bounds(hub_dir, routing)
+        bounds = hub_bounds(hub_dir, n_partitions)
         next_seq = {pid: hi for pid, (_, hi) in bounds.items()}
         total = sum(hi - lo for lo, hi in bounds.values())
         tbl = pa.concat_tables(tables).combine_chunks()
-        pids = _route(tbl, routing, max_partitions, total)
+        pids = _route(tbl, n_partitions, total)
         fs = _arrow_file_schema()
         now_us = int(time.time() * 1_000_000)
         empty_map = pa.scalar([], fs.field("properties").type)

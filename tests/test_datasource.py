@@ -885,6 +885,39 @@ def test_commit_rejects_pinned_partition_outside_the_hub(tmp_path):
     assert hub_bounds(hub)[6] == (0, 1) and hub_bounds(hub)[7] == (0, 1)
 
 
+def test_commit_routes_over_every_partition_of_a_larger_hub(tmp_path):
+    """Without a configured count, rows route over the hub's partition
+    directories when they go past the default of 4: body-only rows reach
+    all 6 partitions and keyed rows hash mod 6."""
+    import hashlib
+
+    from spark_eventhubs_spark.sources.datasource import commit_staged_paths
+
+    hub = str(tmp_path / "hub")
+    for pid in range(6):
+        os.makedirs(os.path.join(hub, f"partition={pid}"))
+    bodies = [(f"r{i}".encode(), None, None, []) for i in range(12)]
+    assert commit_staged_paths(hub, [_stage(hub, "s0.parquet", bodies)], "t0") == 12
+    assert {pid: len(rows) for pid, rows in _committed(hub).items()} == {
+        pid: 2 for pid in range(6)}
+    keys = [f"key-{i}" for i in range(40)]
+    keyed = [(k.encode(), None, k, []) for k in keys]
+    assert commit_staged_paths(hub, [_stage(hub, "s1.parquet", keyed)], "t1") == 40
+    want = {k: int.from_bytes(hashlib.md5(k.encode()).digest()[:8], "big") % 6
+            for k in keys}
+    got = {r[2]: pid for pid, rows in _committed(hub).items() for r in rows if r[2]}
+    assert got == want
+    assert {4, 5} & set(want.values())
+    # sparse directories: a hub that has partition=7 has 8 partitions
+    sparse = str(tmp_path / "sparse")
+    for pid in (0, 7):
+        os.makedirs(os.path.join(sparse, f"partition={pid}"))
+    rows = [(b"p", "7", None, [])] + [(f"s{i}".encode(), None, None, []) for i in range(8)]
+    assert commit_staged_paths(sparse, [_stage(sparse, "s.parquet", rows)], "t0") == 9
+    assert {pid: len(rs) for pid, rs in _committed(sparse).items()} == {
+        **{pid: 1 for pid in range(7)}, 7: 2}
+
+
 def test_batch_sink_rejects_pinned_partition_outside_the_hub(spark, tmp_path):
     register_eventhubs(spark)
     hub = str(tmp_path / "hub")

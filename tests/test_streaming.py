@@ -29,6 +29,27 @@ def test_rate_limit_proportional_skewed():
     assert got == {0: 8, 1: 1, 2: 1, 3: 0}
 
 
+def test_ratelimit_import_leaves_runner_and_pandas_unloaded():
+    """The native reader imports the rate limiter in Spark's source runner,
+    a fresh process per streaming query; the package's names stay lazy."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys; import spark_eventhubs_spark.streaming.ratelimit; "
+         "print(sorted(m for m in ('pandas', 'spark_eventhubs_spark.streaming.source') "
+         "if m in sys.modules))"],
+        cwd=root, capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]"
+    from spark_eventhubs_spark.streaming import MicroBatchRunner as lazy_runner
+    from spark_eventhubs_spark.streaming import rate_limit as lazy_rate_limit
+
+    assert lazy_runner is MicroBatchRunner and lazy_rate_limit is rate_limit
+
+
 def test_rate_limit_passthrough_when_no_backlog():
     until = {0: 5, 1: 7}
     assert rate_limit(100, {0: 5, 1: 7}, until, {}) == until
