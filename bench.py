@@ -369,36 +369,41 @@ def main() -> None:
         metric_errors["hub_scan"] = str(e).split("\n")[0][:200]
 
     # --- streaming metrics vs BASELINE.md's 0.2 ms/event worked example ---
-    # (a) end-to-end micro-batch replay at the reference's default trigger
-    #     size (partitionCount * 1000): events/sec incl. planning+execution
+    # (a) end-to-end readStream.format("eventhubs") drain at the
+    #     reference's default trigger size (partitionCount * 1000) into a
+    #     noop sink: events/sec incl. planning+execution
     # (b) planner-only cost per trigger on the materialized hub log
     #     (footer-stat bounds + rate limit + range planning, no data read)
     import shutil
     import tempfile
 
-    from spark_eventhubs_spark.conf import EventHubsConf
-    from spark_eventhubs_spark.connstr import file_hub_connection_string
     from spark_eventhubs_spark.sources.datasource import (
         EventHubsStreamReader,
         materialize_hub,
+        register_eventhubs,
     )
-    from spark_eventhubs_spark.sources.hub import SimulatedEventHubs
-    from spark_eventhubs_spark.streaming.source import EventHubsSource, MicroBatchRunner
 
     work = tempfile.mkdtemp(prefix="bench_hub_")
     stream_eps = ms_per_event = n_batches = planner_ms = n_plans = -1
     try:
         hub_dir = materialize_hub(spark, sf_dir, f"{work}/hublog")
-        hub = SimulatedEventHubs(spark, name="events", hub_log_dir=hub_dir)
-        conf = EventHubsConf(file_hub_connection_string(sf_dir, "events"))
-        conf.set("eventhubs.maxEventsPerTrigger", str(4 * 1000))
-        src = EventHubsSource(spark, conf, hub)
-        runner = MicroBatchRunner(
-            src, f"{work}/ckpt", lambda df, bid: df.count()
-        )
+        register_eventhubs(spark)
         t0 = time.time()
-        n_batches = runner.run()
+        q = (
+            spark.readStream.format("eventhubs")
+            .option("path", hub_dir)
+            .option("eventhubs.maxEventsPerTrigger", str(4 * 1000))
+            .load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", f"{work}/ckpt")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
         stream_s = time.time() - t0
+        n_batches = sum(1 for f in os.listdir(f"{work}/ckpt/commits") if f.isdigit())
         if n_events <= 0:  # the scan section failed before counting
             n_events = spark.read.parquet(events_path).count()
         stream_eps = round(n_events / stream_s) if stream_s > 0 else -1

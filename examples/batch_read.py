@@ -1,15 +1,18 @@
-"""Batch read: bounded scan of the simulated hub between positions.
+"""Batch read: bounded scan of a hub between positions.
 
 Mirrors the reference's batch quickstart
-(docs/structured-streaming-eventhubs-integration.md §batch): build a
-conf, pick start/end positions, read a bounded 9-column DataFrame,
-then run plain DataFrame ops on it.
+(docs/structured-streaming-eventhubs-integration.md §batch): ingest the
+raw events table into a hub log, build a conf, pick start/end
+positions, read a bounded 9-column DataFrame, then run plain DataFrame
+ops on it.
 
 Run:  python examples/batch_read.py [sf_dir]
 """
 
 import os
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -25,8 +28,12 @@ def main() -> None:
                              shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
 
+    # the hub is a partition=<pid>/ parquet log; a raw events table is
+    # materialized into one first
+    hub_root = tempfile.mkdtemp(prefix="batch_read_")
+    eh.materialize_hub(spark, sf_dir, os.path.join(hub_root, "events"))
     conf = (
-        eh.EventHubsConf(eh.file_hub_connection_string(sf_dir, "events"))
+        eh.EventHubsConf(eh.file_hub_connection_string(hub_root, "events"))
         .set_starting_position(EventPosition.from_sequence_number(100))
         .set_ending_position(EventPosition.from_sequence_number(200))
     )
@@ -42,6 +49,7 @@ def main() -> None:
     )
     out.show()
     spark.stop()
+    shutil.rmtree(hub_root, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -4,8 +4,8 @@ query and data-processing capabilities of Azure/spark-eventhubs.
 The reference (``/root/reference``, azure-eventhubs-spark v2.3.20) is a
 Scala connector exposing Azure Event Hubs as a Spark source/sink. This
 package re-expresses its semantics Spark-first over a file-backed
-simulated event hub (parquet ``events`` table), plus the LLM-data-
-pipeline operators (dedup, similarity search, multimodal columns, text
+event hub (a parquet log behind ``format("eventhubs")``), plus the
+LLM-data-pipeline operators (dedup, similarity search, multimodal columns, text
 analysis) designed for 100 TB scale.
 
 Layout:
@@ -14,8 +14,9 @@ Layout:
     position    EventPosition                 (ref: eventhubs/EventPosition.scala)
     offsets     OffsetRange / source offsets  (ref: eventhubs/rdd/OffsetRange.scala, sql/eventhubs/JsonUtils.scala)
     plans/      canonical hub view derivation (ref: sql/eventhubs/EventHubsSourceProvider.scala eventHubsSchema)
-    sources/    simulated hub, client (translate), batch relation, writer
-    streaming/  micro-batch source, rate limiting, slow-partition tracker
+    sources/    format("eventhubs") DataSource: batch + stream reader and
+                writer, position translation, read_eventhubs/write_eventhubs
+    streaming/  rate limiting, slow-partition tracker, stateful operators
     operators/  dedup, similarity, text analysis, multimodal
     functions/  shared deterministic hashing / tokenization helpers
 """
@@ -48,8 +49,8 @@ __all__ = [
 ]
 
 _LAZY = {
-    "read_eventhubs": ("spark_eventhubs_spark.sources.batch", "read_eventhubs"),
-    "write_eventhubs": ("spark_eventhubs_spark.sources.writer", "write_eventhubs"),
+    "read_eventhubs": ("spark_eventhubs_spark.sources.datasource", "read_eventhubs"),
+    "write_eventhubs": ("spark_eventhubs_spark.sources.datasource", "write_eventhubs"),
     "register_eventhubs": ("spark_eventhubs_spark.sources.datasource", "register_eventhubs"),
     "materialize_hub": ("spark_eventhubs_spark.sources.datasource", "materialize_hub"),
     "build_session": ("spark_eventhubs_spark.session", "build_session"),

@@ -397,7 +397,7 @@ class EventHubsConf(Mapping[str, str]):
     # surface and validation live here; the execution path — class
     # resolution, constructor selection, token acquisition at
     # connection-open time — is spark_eventhubs_spark/auth.py, invoked
-    # by read_eventhubs and EventHubsSource exactly where the
+    # when a format("eventhubs") reader is created, the moment the
     # reference's ClientConnectionPool invokes it.
     def set_use_aad_auth(self, b: bool) -> "EventHubsConf":
         return self.set(USE_AAD_AUTH_KEY, "true" if b else "false")

@@ -7,7 +7,7 @@ with distinguished start-of-stream (``"-1"``) / end-of-stream
 (``"@latest"``) sentinels (``eventhubs/package.scala:34-35``).
 
 Resolution of a position to a concrete per-partition sequence number is
-the client's job (`sources.client.translate`), matching
+the planner's job (`sources.datasource._resolve_positions`), matching
 ``eventhubs/client/EventHubsClient.scala:264-353``.
 """
 

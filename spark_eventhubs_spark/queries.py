@@ -37,6 +37,7 @@ from spark_eventhubs_spark.operators import runtime_filter as RF
 from spark_eventhubs_spark.operators import similarity as S
 from spark_eventhubs_spark.operators import text as T
 from spark_eventhubs_spark.plans.hubview import (
+    EVENT_HUBS_SCHEMA,
     cache_dataframe,
     clear_cached_plans,
     configure_session,
@@ -227,12 +228,9 @@ def _hub_log_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats. Same rows as ``load_hub_flat``'s view-mode shim by
     construction; the materialization is a session-cached ingest
     artifact shared with the streaming entries."""
-    from spark_eventhubs_spark.sources.hub import SimulatedEventHubs
 
     def _build():
-        hub = SimulatedEventHubs(
-            spark, hub_log_dir=_hub_stream_dir(spark, sf_dir)
-        ).dataframe()
+        hub = spark.read.schema(EVENT_HUBS_SCHEMA).parquet(_hub_stream_dir(spark, sf_dir))
         return hub.select(
             F.col("body").cast("string").alias("body_str"),
             F.col("partition"),

@@ -1,6 +1,7 @@
-from spark_eventhubs_spark.sources.hub import SimulatedEventHubs
-from spark_eventhubs_spark.sources.client import SimulatedClient
-from spark_eventhubs_spark.sources.batch import read_eventhubs
-from spark_eventhubs_spark.sources.writer import write_eventhubs
+from spark_eventhubs_spark.sources.datasource import (
+    read_eventhubs,
+    register_eventhubs,
+    write_eventhubs,
+)
 
-__all__ = ["SimulatedEventHubs", "SimulatedClient", "read_eventhubs", "write_eventhubs"]
+__all__ = ["read_eventhubs", "write_eventhubs", "register_eventhubs"]

@@ -37,13 +37,18 @@ Scale design (100 TB):
   only its planned row groups, via Arrow end to end.
 - **Rate limiting** reuses the proportional backlog-weighted split
   (streaming/ratelimit.py, ref EventHubsSource.scala:263-319) inside
-  ``latestOffset``; the streaming engine's own offset log provides
-  exactly-once planning.
+  ``latestOffset``, after the optional ``maxRatePerPartition`` clamp
+  and weighted by the slow-partition tracker when
+  ``slowPartitionAdjustment`` is on; the streaming engine's own offset
+  log provides exactly-once planning.
 - The write path stages per-task Arrow files, then ``commit()``
   assigns dense per-partition sequence numbers centrally — the role
   the service's broker plays on arrival; at-least-once delivery with
   batchId idempotence, matching the reference sink
   (EventHubsSink.scala:35-42).
+
+``read_eventhubs(spark, conf)`` and ``write_eventhubs(df, conf)`` are
+thin wrappers over the same format for ``EventHubsConf`` users.
 
 Deployment note: like any Python DataSource, the package must be
 importable by Spark's Python workers (pip-install on executors, or
@@ -53,7 +58,9 @@ PYTHONPATH; tests/bench set PYTHONPATH before session start).
 from __future__ import annotations
 
 import json
+import logging
 import os
+import threading
 import time
 from dataclasses import dataclass
 from typing import Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple
@@ -73,6 +80,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from spark_eventhubs_spark.streaming.tracker import (
+    TRACKING_BATCH_COUNT,
+    PartitionsStatusTracker,
+)
+
+log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # schema (ref EventHubsSourceProvider.scala:152-165)
@@ -332,8 +346,12 @@ def _resolve_positions(
     conf, hub_dir: str, bounds: Dict[int, Tuple[int, int]], use_start: bool
 ) -> Dict[int, int]:
     """EventPosition → seqNo per partition against footer-stat bounds
-    (same rules as sources.client.SimulatedClient.translate,
-    ref EventHubsClient.scala:264-353)."""
+    (ref EventHubsClient.scala:264-353, SimulatedClient.scala:89-113):
+    a seqNo passes through raw, isInclusive ignored, because ranges are
+    [from, until); start/end sentinels are the partition's earliest and
+    latest; an offset is a stringified seqNo; an enqueuedTime resolves
+    to the first seqNo at or after it, or latest when it is past the
+    newest event. Starts below earliest clamp later, in planning."""
     out: Dict[int, int] = {}
     for pid, (lo, hi) in bounds.items():
         pos = (conf.starting_position_for(pid) if use_start
@@ -422,7 +440,14 @@ def _plan_range_partitions(
     for pid in sorted(end):
         frm = start.get(pid, 0)
         # data-loss guard: clamp to earliest (ref EventHubsSource.scala:246-260)
-        frm = max(frm, earliest.get(pid, (0, 0))[0])
+        lo = earliest.get(pid, (0, 0))[0]
+        if frm < lo:
+            log.warning(
+                "partition %s: requested start seqNo %s is below the earliest "
+                "seqNo %s; the events in between have expired, clamping to "
+                "earliest", pid, frm, lo,
+            )
+            frm = lo
         until = end[pid]
         if until > frm:
             ranges.append(
@@ -451,18 +476,23 @@ def _plan_range_partitions(
 # executor-side read (pure pyarrow)
 # ---------------------------------------------------------------------------
 
-def _read_range(p: RangeInputPartition) -> Iterator[pa.RecordBatch]:
+def _read_range(
+    p: RangeInputPartition,
+    on_range: Optional[Callable[[int, int, int, int], None]] = None,
+) -> Iterator[pa.RecordBatch]:
     """Read a task's planned ranges as Arrow batches: only the planned
     row groups are read, each masked to its range, and the receive
     contract — seqNo-sorted, exactly until-from rows per range
     (ref CachedEventHubsReceiver.scala:227-287) — is enforced before a
-    range is yielded."""
+    range is yielded. ``on_range(partition, from seqNo, events,
+    elapsed ms)`` is called once each range has been received."""
     out_schema = _arrow_out_schema()
     if not p.ranges:
         yield from out_schema.empty_table().to_batches()
         return
     file_schema = _arrow_file_schema()
     for r in p.ranges:
+        t0 = time.perf_counter()
         pieces = []
         for path, rgs in r.row_groups:
             tbl = papq.ParquetFile(path).read_row_groups(list(rgs), columns=_FILE_COLUMNS)
@@ -481,6 +511,9 @@ def _read_range(p: RangeInputPartition) -> Iterator[pa.RecordBatch]:
                 f"[{r.from_seq_no},{r.until_seq_no}) expected "
                 f"{r.width} events, got {n}"
             )
+        if on_range is not None:
+            on_range(r.partition_id, r.from_seq_no, n,
+                     int((time.perf_counter() - t0) * 1000))
         tbl = tbl.add_column(
             1, out_schema.field("partition"),
             pa.array([str(r.partition_id)] * n, pa.string()),
@@ -492,13 +525,27 @@ def _read_range(p: RangeInputPartition) -> Iterator[pa.RecordBatch]:
 # batch reader (ref EventHubsRelation.scala:45-71)
 # ---------------------------------------------------------------------------
 
+def _open_conf(options):
+    """The reader's conf. The AAD callback runs here, when a reader is
+    created: the moment the reference's client opens its connection
+    (ref client/ClientConnectionPool.scala:63-80). A bad class path or a
+    failing token acquisition fails the read before anything is
+    planned; the file-backed hub needs no token afterwards."""
+    from spark_eventhubs_spark.auth import acquire_connection_token
+
+    conf = _conf_from_options(options)
+    acquire_connection_token(conf)
+    return conf
+
+
 class EventHubsBatchReader(DataSourceReader):
     def __init__(self, options) -> None:
         self.options = options
+        self._conf = _open_conf(options)
 
     def partitions(self) -> Sequence[InputPartition]:
         hub_dir = _hub_dir_from_options(self.options)
-        conf = _conf_from_options(self.options)
+        conf = self._conf
         bounds = hub_bounds(hub_dir, conf.partition_count)
         start = _resolve_positions(conf, hub_dir, bounds, use_start=True)
         end = _resolve_positions(conf, hub_dir, bounds, use_start=False)
@@ -512,16 +559,114 @@ class EventHubsBatchReader(DataSourceReader):
 
 
 # ---------------------------------------------------------------------------
+# receive log: the slow-partition tracker's input
+# (ref PartitionPerformanceReceiver.scala:27-67)
+# ---------------------------------------------------------------------------
+
+def _write_json(path: str, obj) -> None:
+    """Write-then-rename, so a reader in another process only ever sees
+    a complete file. The temp name is the writer's own: a retried task
+    can write the same record while its first attempt still runs."""
+    tmp = f"{path}.{os.getpid()}-{threading.get_ident()}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
+def _read_json(path: str):
+    try:
+        with open(path) as fh:
+            return json.load(fh)
+    except (OSError, ValueError):
+        return None  # pruned or replaced since it was listed
+
+
+class _ReceiveLog:
+    """What ``slowPartitionAdjustment`` needs across Spark's processes,
+    as small files under ``<hub>/_receive/<consumerGroup>/``:
+
+    - ``batch-<sum of from seqNos>.json``: one planned batch's ranges
+      ``[[partition, from, until], ...]``, written by ``partitions()``;
+    - ``recv-<partition>-<from>.json``: one range's
+      ``[partition, from, events, elapsed ms]``, written by ``read()``.
+
+    The reference's executors send the second kind to a driver RPC
+    endpoint. Here ``latestOffset`` rebuilds a
+    :class:`PartitionsStatusTracker` from the files instead. Only the
+    tracker's window of batches is kept."""
+
+    def __init__(self, hub_dir: str, group: str) -> None:
+        self.dir = os.path.join(hub_dir, "_receive", group)
+
+    def _names(self, prefix: str) -> List[str]:
+        try:
+            names = os.listdir(self.dir)
+        except FileNotFoundError:
+            return []
+        return sorted(n for n in names if n.startswith(prefix) and n.endswith(".json"))
+
+    def _drop(self, names) -> None:
+        for name in names:
+            try:
+                os.remove(os.path.join(self.dir, name))
+            except FileNotFoundError:
+                pass
+
+    def reset(self) -> None:
+        self._drop(self._names(""))
+
+    def record_batch(self, ranges: List[Tuple[int, int, int]]) -> None:
+        os.makedirs(self.dir, exist_ok=True)
+        key = sum(frm for _, frm, _ in ranges)
+        _write_json(os.path.join(self.dir, f"batch-{key:020d}.json"), ranges)
+        batches = self._names("batch-")
+        self._drop(batches[:-TRACKING_BATCH_COUNT])
+        live = {
+            f"recv-{pid}-{frm}.json"
+            for name in batches[-TRACKING_BATCH_COUNT:]
+            for pid, frm, _ in _read_json(os.path.join(self.dir, name)) or []
+        }
+        self._drop(n for n in self._names("recv-") if n not in live)
+
+    def record_receive(self, pid: int, frm: int, events: int, elapsed_ms: int) -> None:
+        os.makedirs(self.dir, exist_ok=True)
+        _write_json(os.path.join(self.dir, f"recv-{pid}-{frm}.json"),
+                    [pid, frm, events, elapsed_ms])
+
+    def performance_percentages(
+        self, partition_count: int, acceptable_ms: int
+    ) -> Optional[Dict[int, float]]:
+        tracker = PartitionsStatusTracker(partition_count, acceptable_ms)
+        batches = self._names("batch-")[-TRACKING_BATCH_COUNT:]
+        for batch_id, name in enumerate(batches):
+            ranges = _read_json(os.path.join(self.dir, name)) or []
+            tracker.add_batch(batch_id, [PlannedRange(p, f, u, ()) for p, f, u in ranges])
+        for name in self._names("recv-"):
+            rec = _read_json(os.path.join(self.dir, name))
+            if rec is not None:
+                tracker.update_partition_performance(*rec)
+        return tracker.partitions_performance_percentage()
+
+
+# ---------------------------------------------------------------------------
 # streaming reader (ref EventHubsSource.scala)
 # ---------------------------------------------------------------------------
 
 class EventHubsStreamReader(DataSourceStreamReader):
     """Micro-batch source: latestOffset probes footer-stat bounds and
-    applies the proportional rate limit (ref EventHubsSource.scala
-    getOffset :206-244 + rateLimit :263-319); partitions() diffs two
-    offsets into per-partition ranges (getBatch :329-420). Offsets are
-    the reference's JSON shape {"<hub>": {"<pid>": seqNo}}
+    applies the admission controls (ref EventHubsSource.scala getOffset
+    :206-244 + rateLimit :263-319); partitions() diffs two offsets into
+    per-partition ranges (getBatch :329-420). Offsets are the
+    reference's JSON shape {"<hub>": {"<pid>": seqNo}}
     (JsonUtils.scala:63-100).
+
+    **Admission control.** ``maxRatePerPartition`` (per-partition
+    ``maxRatesPerPartition`` entries beat it) caps each partition at
+    ``from + maxRate_p`` (EventHubsDirectDStream.scala:97-105);
+    ``maxEventsPerTrigger`` then splits its budget across partitions by
+    backlog. With ``slowPartitionAdjustment`` on, the split is weighted
+    by the tracker's performance percentages, rebuilt from the
+    :class:`_ReceiveLog` that ``partitions()`` and ``read()`` write.
 
     **Cursor file.** Spark serves initialOffset/latestOffset/partitions/
     commit from more than one python worker process, so admission-control
@@ -550,10 +695,11 @@ class EventHubsStreamReader(DataSourceStreamReader):
     def __init__(self, options) -> None:
         self.options = options
         self.hub_dir = _hub_dir_from_options(options)
-        self._conf = _conf_from_options(options)
+        self._conf = _open_conf(options)
         self.name = self._conf.name or os.path.basename(self.hub_dir.rstrip("/")) or "events"
         group = self._conf.consumer_group.replace("$", "_")
         self._cursor_path = os.path.join(self.hub_dir, "_cursors", f"{group}.json")
+        self._receive_log = _ReceiveLog(self.hub_dir, group)
 
     def _pack(self, seq_nos: Dict[int, int]) -> dict:
         return {self.name: {str(p): int(s) for p, s in sorted(seq_nos.items())}}
@@ -564,11 +710,8 @@ class EventHubsStreamReader(DataSourceStreamReader):
 
     # -- cursor file ops --
     def _cursor_read(self) -> Optional[Dict[int, int]]:
-        try:
-            with open(self._cursor_path) as fh:
-                return {int(k): int(v) for k, v in json.load(fh).items()}
-        except (OSError, ValueError):
-            return None
+        cur = _read_json(self._cursor_path)
+        return None if cur is None else {int(k): int(v) for k, v in cur.items()}
 
     def _cursor_write(self, seq_nos: Dict[int, int], merge: bool = True) -> Dict[int, int]:
         os.makedirs(os.path.dirname(self._cursor_path), exist_ok=True)
@@ -578,10 +721,7 @@ class EventHubsStreamReader(DataSourceStreamReader):
                 cur[pid] = max(cur.get(pid, 0), s)
         else:
             cur = dict(seq_nos)
-        tmp = self._cursor_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({str(p): s for p, s in cur.items()}, fh)
-        os.replace(tmp, self._cursor_path)
+        _write_json(self._cursor_path, {str(p): s for p, s in cur.items()})
         return cur
 
     def initialOffset(self) -> dict:
@@ -589,31 +729,47 @@ class EventHubsStreamReader(DataSourceStreamReader):
         start = _resolve_positions(self._conf, self.hub_dir, bounds, use_start=True)
         # a fresh query = a fresh consumer: reset (not merge) the cursor
         self._cursor_write(start, merge=False)
+        if self._conf.slow_partition_adjustment:
+            self._receive_log.reset()
         return self._pack(start)
 
     def latestOffset(self) -> dict:
         from spark_eventhubs_spark.streaming.ratelimit import rate_limit
 
-        bounds = hub_bounds(self.hub_dir, self._conf.partition_count)
+        conf = self._conf
+        bounds = hub_bounds(self.hub_dir, conf.partition_count)
         latest = {pid: b[1] for pid, b in bounds.items()}
         # bare key first, prefixed alias second (EventHubsConf.scala:711-712)
-        raw = self._conf.get("maxEventsPerTrigger") or self._conf.get(
-            "eventhubs.maxEventsPerTrigger"
-        )
-        cursor = self._cursor_read()
-        if cursor is None and raw is not None:
-            # the engine calls latestOffset before initialOffset on a
-            # fresh stream: seed the cursor from the configured start so
-            # the very first trigger is already throttled
-            cursor = self._cursor_write(
-                _resolve_positions(self._conf, self.hub_dir, bounds, use_start=True)
-            )
-        if raw is None:
+        raw = conf.get("maxEventsPerTrigger") or conf.get("eventhubs.maxEventsPerTrigger")
+        if raw is None and not conf.max_rate_configured:
             target = latest
         else:
+            cursor = self._cursor_read()
+            if cursor is None:
+                # the engine calls latestOffset before initialOffset on a
+                # fresh stream: seed the cursor from the configured start so
+                # the very first trigger is already throttled
+                cursor = self._cursor_write(
+                    _resolve_positions(conf, self.hub_dir, bounds, use_start=True)
+                )
             earliest = {pid: b[0] for pid, b in bounds.items()}
             start = {pid: max(cursor.get(pid, 0), earliest[pid]) for pid in latest}
-            target = rate_limit(int(raw), start, latest, earliest, None)
+            if conf.max_rate_configured:
+                # applied before the proportional split, so both controls
+                # compose; max(start, ...) holds at start if the hub's
+                # latest ever regresses (EventHubsDirectDStream.scala:106)
+                latest = {
+                    pid: max(start[pid], min(hi, start[pid] + conf.max_rate_per_partition_for(pid)))
+                    for pid, hi in latest.items()
+                }
+            target = latest
+            if raw is not None:
+                factors = None
+                if conf.slow_partition_adjustment:
+                    factors = self._receive_log.performance_percentages(
+                        len(latest), conf.max_acceptable_batch_receive_time_ms
+                    )
+                target = rate_limit(int(raw), start, latest, earliest, factors)
         # monotonic merge guarantees this answer is >= every previous one
         merged = self._cursor_write(target)
         return self._pack({pid: merged.get(pid, s) for pid, s in target.items()})
@@ -629,9 +785,20 @@ class EventHubsStreamReader(DataSourceStreamReader):
             pos = self._conf.starting_position_for(pid)
             s[pid] = pos.seq_no if pos.seq_no is not None else bounds[pid][0]
         parts = _plan_range_partitions(self.hub_dir, s, e, bounds)
+        if parts and self._conf.slow_partition_adjustment:
+            # every partition of the batch, empty ones too: the tracker
+            # counts an empty range as already reported. A batch with no
+            # events is not recorded (the engine plans one when it
+            # restarts): as the newest batch it would hide the last real one.
+            planned = {r.partition_id: r.from_seq_no for p in parts for r in p.ranges}
+            self._receive_log.record_batch(
+                [[pid, planned.get(pid, e[pid]), e[pid]] for pid in sorted(e)]
+            )
         return parts or [RangeInputPartition(self.hub_dir, 0, 0, 0)]
 
     def read(self, partition: RangeInputPartition) -> Iterator[pa.RecordBatch]:
+        if self._conf.slow_partition_adjustment:
+            return _read_range(partition, self._receive_log.record_receive)
         return _read_range(partition)
 
     def commit(self, end: dict) -> None:
@@ -917,6 +1084,41 @@ def register_eventhubs(spark) -> None:
     spark.dataSource.register(EventHubsDataSource)
 
 
+def read_eventhubs(spark, conf):
+    """``spark.read.format("eventhubs")`` over the conf's hub: a bounded
+    9-column DataFrame between its starting and ending positions."""
+    register_eventhubs(spark)
+    return spark.read.format("eventhubs").options(**conf.to_map()).load()
+
+
+def _hub_size(hub_dir: str) -> int:
+    return sum(hi - lo for lo, hi in hub_bounds(hub_dir).values())
+
+
+def write_eventhubs(df, conf, batch_id: Optional[int] = None) -> int:
+    """``df.write.format("eventhubs")`` to the conf's hub. Returns the
+    number of events appended, read from footer statistics (so exact
+    only while no other writer appends to the hub), or 0 when
+    ``batch_id`` was already written: a re-delivered batch is skipped
+    (ref EventHubsSink.scala:35-42). The ``_batch_commits/<id>`` marker
+    is written after the data, so a crash between the two re-writes the
+    batch on redelivery: at-least-once."""
+    hub_dir = _hub_dir_from_options(conf)
+    marker = None
+    if batch_id is not None:
+        marker = os.path.join(hub_dir, "_batch_commits", str(batch_id))
+        if os.path.exists(marker):
+            return 0
+    before = _hub_size(hub_dir)
+    register_eventhubs(df.sparkSession)
+    df.write.format("eventhubs").mode("append").options(**conf.to_map()).save()
+    written = _hub_size(hub_dir) - before
+    if marker is not None:
+        os.makedirs(os.path.dirname(marker), exist_ok=True)
+        open(marker, "w").close()
+    return written
+
+
 # ---------------------------------------------------------------------------
 # materialization: events table -> hub directory
 # ---------------------------------------------------------------------------
@@ -949,6 +1151,11 @@ def materialize_hub(spark, sf_dir_or_events: str, hub_dir: str,
     return hub_dir
 
 
+# hub side-dirs a log rewrite carries over: the sink's batchId ledgers,
+# the consumer cursors and the slow-partition receive logs
+_META_DIRS = ("_commits", "_batch_commits", "_cursors", "_receive")
+
+
 def compact_hub_log(spark, hub_dir: str, partition_count: int = 4) -> dict:
     """Compact the hub log: fold each partition's accumulated
     ``commit-*.parquet`` files (one per streaming micro-batch commit —
@@ -956,8 +1163,7 @@ def compact_hub_log(spark, hub_dir: str, partition_count: int = 4) -> dict:
     one sorted file per partition.
 
     Rewrites via a staging dir then swaps, preserving the metadata
-    side-dirs (``_commits`` batchId ledger, ``_cursors`` consumer
-    cursors) and the two invariants planning depends on: per-partition
+    side-dirs (``_META_DIRS``) and the two invariants planning depends on: per-partition
     seqNo density and footer-stat min/max (files stay sorted by
     sequenceNumber). Readers planned BEFORE the swap may fail and must
     replan — same contract as any file-compaction job; at scale this
@@ -992,7 +1198,7 @@ def compact_hub_log(spark, hub_dir: str, partition_count: int = 4) -> dict:
         .parquet(tmp)
     )
     # carry metadata side-dirs over before the swap
-    for meta in ("_commits", "_cursors"):
+    for meta in _META_DIRS:
         src = os.path.join(hub_dir, meta)
         if os.path.isdir(src):
             shutil.copytree(src, os.path.join(tmp, meta), dirs_exist_ok=True)
@@ -1010,8 +1216,8 @@ def truncate_hub_log(
     """Retention: drop events below ``keep_from[pid]`` per partition —
     the file-backed analogue of the service's retention period expiring
     old events. After truncation ``hub_bounds`` reports the new
-    earliest from footer stats, and the data-loss guard (S5,
-    ``_adjust_starting_offset``) clamps any older checkpoint/start
+    earliest from footer stats, and the data-loss guard in
+    ``_plan_range_partitions`` clamps any older checkpoint/start
     position forward with a warning, exactly as the reference does when
     a consumer falls behind retention.
 
@@ -1063,7 +1269,7 @@ def truncate_hub_log(
         .partitionBy("partition")
         .parquet(tmp)
     )
-    for meta in ("_commits", "_cursors"):
+    for meta in _META_DIRS:
         src = os.path.join(hub_dir, meta)
         if os.path.isdir(src):
             shutil.copytree(src, os.path.join(tmp, meta), dirs_exist_ok=True)

@@ -1,6 +1,6 @@
 """Proportional, performance-weighted rate limiting.
 
-Port of ``EventHubsSource.rateLimit``
+Port of the reference's ``rateLimit``
 (core/src/main/scala/org/apache/spark/sql/eventhubs/EventHubsSource.scala:263-319)
 with the exact rounding/starvation semantics the reference's tests pin
 (EventHubsSourceSuite.scala:331-393):
@@ -15,8 +15,8 @@ with the exact rounding/starvation semantics the reference's tests pin
 Pure dict math on the driver — there is deliberately no Spark job here;
 this is admission control that happens before a plan exists (SURVEY
 §4.1). Keys are partition ids (int); the reference's NameAndPartition
-wrapper is only needed with multiple hubs, which ``EventHubsSource``
-handles by keeping one planner per hub.
+wrapper is only needed with multiple hubs, which the stream reader
+handles by keeping one reader per hub.
 """
 
 from __future__ import annotations

@@ -18,10 +18,11 @@ with the reference's exact semantics:
 - metric messages for evicted/unknown (partition, requestSeqNo) pairs
   are ignored (:155-161)
 
-This is driver-side planner state (plain Python), the Spark-native
-replacement for the reference's executor->driver RPC endpoint
-(PartitionPerformanceReceiver.scala): our executors report via the
-measured ``applyInPandas`` pass in streaming/source.py.
+This is planner state (plain Python). The reference's executors report
+receive times to a driver RPC endpoint (PartitionPerformanceReceiver.scala);
+here the ``format("eventhubs")`` stream reader's read tasks write them to
+a receive log and ``latestOffset`` rebuilds the tracker from it
+(sources/datasource.py ``_ReceiveLog``).
 """
 
 from __future__ import annotations
@@ -121,12 +122,10 @@ class PartitionsStatusTracker:
         self,
         partition_count: int,
         acceptable_batch_receive_time_ms: int = 30_000,
-        throttling_status_plugin=None,
     ) -> None:
         self.partition_count = partition_count
         self.acceptable_batch_receive_time_ms = acceptable_batch_receive_time_ms
         self.enough_updates_count = (partition_count // 2) + 1
-        self.throttling_status_plugin = throttling_status_plugin
         self._batches: Dict[int, _BatchStatus] = {}
         self._pair_to_batch: Dict[tuple, int] = {}
 
@@ -188,20 +187,7 @@ class PartitionsStatusTracker:
         candidates = [b for b in self._batches.values() if b.received_enough_updates]
         if not candidates:
             return None
-        batch = max(candidates, key=lambda b: b.batch_id)
-        ppp = batch.performance_percentages()
-        if ppp is not None and self.throttling_status_plugin is not None:
-            self.throttling_status_plugin.on_partitions_performance_status_update(
-                batch.batch_id,
-                {pid: p.batch_size for pid, p in batch.partitions.items()},
-                {pid: p.batch_receive_time_ms for pid, p in batch.partitions.items()},
-                ppp,
-            )
-        return ppp
-
-    def clean_up(self) -> None:
-        self._batches.clear()
-        self._pair_to_batch.clear()
+        return max(candidates, key=lambda b: b.batch_id).performance_percentages()
 
     @property
     def batch_ids_in_tracker(self):

@@ -14,8 +14,6 @@ from spark_eventhubs_spark.auth import (
 from spark_eventhubs_spark.conf import EventHubsConf
 from spark_eventhubs_spark.connstr import file_hub_connection_string
 
-from conftest import SF_DIR
-
 CALLS = []
 
 
@@ -60,12 +58,30 @@ class AadMockFuture(AadAuthenticationCallback):
         return f
 
 
+class AadMarker(AadAuthenticationCallback):
+    """Appends each requested audience to the file named by its
+    ``marker`` param, so a call made in a Spark Python worker is visible
+    to the test."""
+
+    def __init__(self, params):
+        self._path = params["marker"]
+
+    @property
+    def authority(self):
+        return "marker-tenant"
+
+    def acquire_token(self, audience, authority, state):
+        with open(self._path, "a") as fh:
+            fh.write(audience + "\n")
+        return "tok-" + authority
+
+
 class NotACallback:
     pass
 
 
-def _conf(**kw):
-    return EventHubsConf(file_hub_connection_string(SF_DIR, "events"))
+def _conf(directory="/unused"):
+    return EventHubsConf(file_hub_connection_string(directory, "events"))
 
 
 def test_no_aad_returns_none():
@@ -112,18 +128,29 @@ def test_bad_class_path_and_wrong_type_error():
         )
 
 
-def test_callback_runs_at_connection_open(spark):
-    """read_eventhubs must execute the callback before planning — a
-    failing acquisition aborts the read, and a succeeding one is
-    actually called (ref ClientConnectionPool.scala:63-80)."""
-    from spark_eventhubs_spark.sources.batch import read_eventhubs
+def test_callback_runs_at_connection_open(spark, tmp_path):
+    """format("eventhubs") executes the callback when it creates its
+    reader, before planning — a failing acquisition aborts the read, and
+    a succeeding one is actually called (ref ClientConnectionPool.scala:63-80).
+    The reader is created in a Spark Python worker, which imports this
+    module from the session's files."""
+    from pyspark.sql import functions as F
 
-    CALLS.clear()
-    conf = _conf().set_aad_auth_callback(f"{__name__}.AadMock")
-    df = read_eventhubs(spark, conf)
-    assert len(CALLS) == 1 and CALLS[0][0] == EVENTHUBS_AUDIENCE
-    assert df.count() > 0
+    from spark_eventhubs_spark.sources.datasource import read_eventhubs, write_eventhubs
 
-    class_path = f"{__name__}.NotACallback"
-    with pytest.raises(TypeError):
-        read_eventhubs(spark, _conf().set_aad_auth_callback(class_path))
+    spark.sparkContext.addPyFile(__file__)
+    write_eventhubs(spark.range(3).select(F.col("id").cast("string").alias("body")),
+                    _conf(str(tmp_path)))
+    marker = tmp_path / "calls"
+    conf = (
+        _conf(str(tmp_path))
+        .set_aad_auth_callback(f"{__name__}.AadMarker")
+        .set_aad_auth_callback_params({"marker": str(marker)})
+    )
+    assert read_eventhubs(spark, conf).count() == 3
+    calls = marker.read_text().splitlines()
+    assert calls and set(calls) == {EVENTHUBS_AUDIENCE}
+
+    bad = _conf(str(tmp_path)).set_aad_auth_callback(f"{__name__}.NotACallback")
+    with pytest.raises(Exception, match="must subclass"):
+        read_eventhubs(spark, bad).count()

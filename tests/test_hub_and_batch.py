@@ -1,7 +1,9 @@
-"""Hub view / client / batch relation tests — modeled on the
-reference's EventHubsRelationSuite + EventHubsRDDSuite +
-SimulatedClient behaviors (SURVEY §5 tiers 1, 4, 6)."""
+"""Hub view, position translation and batch relation tests — modeled
+on the reference's EventHubsRelationSuite + EventHubsRDDSuite +
+SimulatedClient.scala behaviors (SURVEY §5 tiers 1, 4, 6), over a
+materialized hub read through ``format("eventhubs")``."""
 
+import logging
 from datetime import datetime, timezone
 
 import pytest
@@ -11,44 +13,53 @@ from spark_eventhubs_spark.conf import EventHubsConf
 from spark_eventhubs_spark.connstr import file_hub_connection_string
 from spark_eventhubs_spark.plans.hubview import EVENT_HUBS_SCHEMA, load_hub
 from spark_eventhubs_spark.position import EventPosition
-from spark_eventhubs_spark.sources.batch import (
-    metadata_count,
-    plan_ranges,
+from spark_eventhubs_spark.sources.datasource import (
+    EventHubsBatchReader,
+    _plan_range_partitions,
+    _resolve_positions,
+    hub_bounds,
+    materialize_hub,
     read_eventhubs,
-    scan_ranges,
+    truncate_hub_log,
 )
-from spark_eventhubs_spark.sources.client import SimulatedClient
-from spark_eventhubs_spark.sources.hub import SimulatedEventHubs
 
 
 @pytest.fixture(scope="module")
-def hub(spark, sf_dir):
-    return SimulatedEventHubs(spark, events_parquet=f"{sf_dir}/events.parquet")
+def hub_root(spark, sf_dir, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("hubroot"))
+    materialize_hub(spark, sf_dir, f"{root}/events")
+    return root
 
 
 @pytest.fixture(scope="module")
-def client(hub):
-    return SimulatedClient(hub)
+def hub(hub_root):
+    return f"{hub_root}/events"
 
 
-def conf_for(sf_dir, **kw):
-    return EventHubsConf(file_hub_connection_string(sf_dir, "events"))
+@pytest.fixture(scope="module")
+def bounds(hub):
+    return hub_bounds(hub)
+
+
+def conf_for(hub_root):
+    return EventHubsConf(file_hub_connection_string(hub_root, "events"))
 
 
 def _names_types(schema):
     return [(f.name, f.dataType.simpleString()) for f in schema.fields]
 
 
-def test_hub_schema_is_canonical(hub):
-    # fixed 9-col schema (EventHubsSourceProvider.scala:152-165);
-    # nullability flags are Catalyst-inferred, so compare names + types
-    assert _names_types(hub.dataframe().schema) == _names_types(EVENT_HUBS_SCHEMA)
+def test_hub_schema_is_canonical(spark, sf_dir):
+    # view mode over the raw events table: the fixed 9-col schema
+    # (EventHubsSourceProvider.scala:152-165); nullability flags are
+    # Catalyst-inferred, so compare names + types
+    assert _names_types(load_hub(spark, sf_dir).schema) == _names_types(EVENT_HUBS_SCHEMA)
 
 
-def test_seqnos_dense_per_partition(hub):
+def test_seqnos_dense_per_partition(spark, sf_dir):
     # dense, zero-based, gap-free — EventHubsRDDSuite.scala:100-118
     rows = (
-        hub.dataframe()
+        load_hub(spark, sf_dir)
         .groupBy("partition")
         .agg(
             F.min("sequenceNumber").alias("lo"),
@@ -64,102 +75,90 @@ def test_seqnos_dense_per_partition(hub):
         assert r["n"] == r["nd"] == r["hi"] + 1
 
 
-def test_bounded_seq_nos_latest_is_last_plus_one(hub):
-    bounds = hub.bounded_seq_nos()
+def test_bounded_seq_nos_latest_is_last_plus_one(spark, hub_root, bounds):
     total = sum(hi - lo for lo, hi in bounds.values())
-    assert total == hub.dataframe().count()
+    assert total == read_eventhubs(spark, conf_for(hub_root)).count()
 
 
-def test_translate_start_end_sentinels(client, sf_dir):
-    conf = conf_for(sf_dir)  # defaults: start-of-stream → end-of-stream
-    start = client.translate(conf, use_start=True)
-    end = client.translate(conf, use_start=False)
-    bounds = client.all_bounded_seq_nos()
-    assert start == {p: b[0] for p, b in bounds.items()}
-    assert end == {p: b[1] for p, b in bounds.items()}
+def test_translate_start_end_sentinels(hub_root, hub, bounds):
+    conf = conf_for(hub_root)  # defaults: start-of-stream → end-of-stream
+    assert _resolve_positions(conf, hub, bounds, True) == {p: b[0] for p, b in bounds.items()}
+    assert _resolve_positions(conf, hub, bounds, False) == {p: b[1] for p, b in bounds.items()}
 
 
-def test_translate_seqno_passthrough(client, sf_dir):
+def test_translate_seqno_passthrough(hub_root, hub, bounds):
     # seqNos pass through raw — SimulatedClient.scala:89-113
-    conf = conf_for(sf_dir)
+    conf = conf_for(hub_root)
     conf.set_starting_position(EventPosition.from_sequence_number(10, is_inclusive=True))
-    assert client.translate(conf, use_start=True) == {p: 10 for p in range(4)}
+    assert _resolve_positions(conf, hub, bounds, True) == {p: 10 for p in range(4)}
     conf.set_starting_position(EventPosition.from_sequence_number(10, is_inclusive=False))
-    assert client.translate(conf, use_start=True) == {p: 10 for p in range(4)}
+    assert _resolve_positions(conf, hub, bounds, True) == {p: 10 for p in range(4)}
 
 
-def test_translate_enqueued_time(client, hub, sf_dir):
+def test_translate_enqueued_time(spark, sf_dir, hub_root, hub, bounds):
     # time → earliest seqNo with enqueuedTime >= t (EventHubsClient.scala:306-338)
     t = datetime(2024, 1, 10, tzinfo=timezone.utc)
-    conf = conf_for(sf_dir)
+    conf = conf_for(hub_root)
     conf.set_starting_position(EventPosition.from_enqueued_time(t))
-    got = client.translate(conf, use_start=True)
+    got = _resolve_positions(conf, hub, bounds, True)
     expected_rows = (
-        hub.dataframe()
+        load_hub(spark, sf_dir)
         .where(F.col("enqueuedTime") >= F.lit(t.replace(tzinfo=None)))
         .groupBy("partition")
         .agg(F.min("sequenceNumber").alias("s"))
         .collect()
     )
     expected = {int(r["partition"]): r["s"] for r in expected_rows}
-    bounds = client.all_bounded_seq_nos()
     for p in range(4):
         assert got[p] == expected.get(p, bounds[p][1])
 
 
-def test_time_seq_nos_job_count_independent_of_bound_count(spark, client):
-    """The enqueuedTime translation is ONE conditional-min aggregation
-    for ALL distinct time bounds (min(seqNo) FILTER (enqueuedTime >= t)
-    per bound) — the reference resolves each bound with per-partition
-    service probes (EventHubsClient.scala:306-338); ours must not run
-    one Spark job per bound either. AQE may split a single action into
-    several jobs, so pin that the job count does not GROW with the
-    number of bounds."""
+def test_time_seq_nos_job_count_independent_of_bound_count(spark, hub_root, hub, bounds):
+    """enqueuedTime positions resolve from parquet footers, so planning
+    runs no Spark job however many distinct time bounds it resolves —
+    the reference resolves each bound with per-partition service probes
+    (EventHubsClient.scala:306-338)."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     ts = [datetime(2024, 1, d, tzinfo=timezone.utc) for d in (5, 10, 15, 20)]
-    client._time_seq_nos(ts[:1])  # warm: parquet footer reads, caches
-
-    sc.setJobGroup("tsn-one", "one bound")
-    client._time_seq_nos(ts[:1])
+    conf = conf_for(hub_root)
+    conf.set_starting_positions(
+        {p: EventPosition.from_enqueued_time(t) for p, t in enumerate(ts)}
+    )
     sc.setJobGroup("tsn-four", "four bounds")
-    four = client._time_seq_nos(ts)
+    four = _resolve_positions(conf, hub, bounds, True)
     sc.setJobGroup("tsn-done", "")
-    one_jobs = len(tracker.getJobIdsForGroup("tsn-one"))
-    four_jobs = len(tracker.getJobIdsForGroup("tsn-four"))
-    assert four_jobs == one_jobs
-    # and the merged result still matches per-bound resolution
-    for t in ts:
-        single = client._time_seq_nos([t])
-        assert single == {k: v for k, v in four.items() if k[1] == str(t)}
+    assert tracker.getJobIdsForGroup("tsn-four") == []
+    # and the per-partition result matches per-bound resolution
+    for p, t in enumerate(ts):
+        single = conf_for(hub_root).set_starting_position(EventPosition.from_enqueued_time(t))
+        assert _resolve_positions(single, hub, bounds, True)[p] == four[p]
 
 
-def test_translate_time_past_latest_resolves_to_latest(client, sf_dir):
-    conf = conf_for(sf_dir)
+def test_translate_time_past_latest_resolves_to_latest(hub_root, hub, bounds):
+    conf = conf_for(hub_root)
     conf.set_starting_position(
         EventPosition.from_enqueued_time(datetime(2999, 1, 1, tzinfo=timezone.utc))
     )
-    got = client.translate(conf, use_start=True)
-    bounds = client.all_bounded_seq_nos()
-    assert got == {p: b[1] for p, b in bounds.items()}
+    assert _resolve_positions(conf, hub, bounds, True) == {p: b[1] for p, b in bounds.items()}
 
 
-def test_full_scan_equals_table(spark, hub, client, sf_dir):
-    conf = conf_for(sf_dir)
-    df = read_eventhubs(spark, conf, hub=hub)
-    assert df.count() == hub.dataframe().count()
+def test_full_scan_equals_table(spark, sf_dir, hub_root):
+    df = read_eventhubs(spark, conf_for(hub_root))
+    assert df.count() == load_hub(spark, sf_dir).count()
     assert _names_types(df.schema) == _names_types(EVENT_HUBS_SCHEMA)
 
 
-def test_bounded_scan_and_metadata_count(spark, hub, client, sf_dir):
-    conf = conf_for(sf_dir)
+def test_bounded_scan_and_metadata_count(spark, hub_root):
+    conf = conf_for(hub_root)
     conf.set_starting_position(EventPosition.from_sequence_number(10))
     conf.set_ending_position(EventPosition.from_sequence_number(40))
-    ranges = plan_ranges(client, conf)
-    # [10, 40) per partition — 30 events each
-    assert metadata_count(ranges) == 4 * 30
-    df = scan_ranges(hub.dataframe(), ranges)
-    assert df.count() == metadata_count(ranges)
+    # [10, 40) per partition — 30 events each, counted from the plan
+    # alone (ref EventHubsRDD.scala:59-61)
+    parts = EventHubsBatchReader(conf).partitions()
+    assert sum(r.width for p in parts for r in p.ranges) == 4 * 30
+    df = read_eventhubs(spark, conf)
+    assert df.count() == 4 * 30
     got = df.groupBy("partition").agg(
         F.min("sequenceNumber").alias("lo"), F.max("sequenceNumber").alias("hi")
     ).collect()
@@ -167,33 +166,42 @@ def test_bounded_scan_and_metadata_count(spark, hub, client, sf_dir):
         assert r["lo"] == 10 and r["hi"] == 39
 
 
-def test_data_loss_guard_clamps_to_earliest(spark, hub, client, sf_dir, caplog):
-    conf = conf_for(sf_dir)
-    # per-partition earliest is 0; ask for a start "before" it via raw offset -5? use seq 0;
-    # instead simulate expiry by requesting start < earliest on a shifted-view hub.
-    # Here earliest==0 so exercise fail_on_data_loss path with a negative offset.
-    conf.set_starting_position(EventPosition.from_offset("-5", is_inclusive=True))
-    ranges = plan_ranges(client, conf, fail_on_data_loss=False)
-    for r in ranges:
-        assert r.from_seq_no == 0  # clamped
-    with pytest.raises(RuntimeError):
-        plan_ranges(client, conf, fail_on_data_loss=True)
+def test_data_loss_guard_clamps_to_earliest(spark, sf_dir, tmp_path, caplog):
+    """A start below a partition's earliest seqNo (events expired by
+    retention) clamps to earliest with a warning naming the partition,
+    the requested seqNo and the earliest (EventHubsSource.scala:246-260)."""
+    hub = materialize_hub(spark, sf_dir, str(tmp_path / "events"))
+    truncate_hub_log(spark, hub, {0: 50})
+    bounds = hub_bounds(hub)
+    assert bounds[0][0] == 50
+    with caplog.at_level(logging.WARNING, logger="spark_eventhubs_spark.sources.datasource"):
+        parts = _plan_range_partitions(hub, {p: 0 for p in bounds},
+                                       {p: b[1] for p, b in bounds.items()}, bounds)
+    froms = {r.partition_id: r.from_seq_no for p in parts for r in p.ranges}
+    assert froms == {0: 50, 1: 0, 2: 0, 3: 0}
+    warnings = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "partition 0" in warnings[0] and "seqNo 0" in warnings[0] and "seqNo 50" in warnings[0]
 
 
-def test_take_ordered(spark, hub, sf_dir):
+def test_take_ordered(spark, hub_root):
     # take(num) fills from partitions in order (EventHubsRDD.scala:63-89)
-    df = hub.dataframe().orderBy("partition", "sequenceNumber").limit(7)
+    df = read_eventhubs(spark, conf_for(hub_root)).orderBy("partition", "sequenceNumber").limit(7)
     rows = df.collect()
     assert len(rows) == 7
     assert [int(r["sequenceNumber"]) for r in rows] == [0, 1, 2, 3, 4, 5, 6]
 
 
-def test_receive_contract(hub):
-    evs = hub.receive(partition_id=1, seq_no=5, count=10)
-    assert len(evs) == 10
-    assert [e["sequenceNumber"] for e in evs] == list(range(5, 15))
-    with pytest.raises(RuntimeError):
-        hub.receive(partition_id=1, seq_no=10 ** 9, count=5)
+def test_receive_contract(hub, bounds):
+    # exactly the requested events, seqNo-sorted (CachedEventHubsReceiver.scala:227-287)
+    reader = EventHubsBatchReader({"path": hub})
+    (part,) = _plan_range_partitions(hub, {1: 5}, {1: 15}, bounds)
+    seqs = [s for b in reader.read(part) for s in b.column("sequenceNumber").to_pylist()]
+    assert seqs == list(range(5, 15))
+    # a range the log does not hold breaks the contract
+    (past,) = _plan_range_partitions(hub, {1: 10 ** 9}, {1: 10 ** 9 + 5}, bounds)
+    with pytest.raises(RuntimeError, match="receive contract violated"):
+        list(reader.read(past))
 
 
 def test_kafka_key_extraction(spark):

@@ -1,20 +1,28 @@
 """Streaming tier tests — modeled on EventHubsSourceSuite (SURVEY §5
 tier 3): proportional rate limiting with the reference's exact
-rounding, slow-partition tracker math, micro-batch progression,
-checkpoint stop/restart recovery, and planned-but-uncommitted replay."""
+rounding and slow-partition tracker math as pure functions; then
+micro-batch progression, restart, crash-window replay, hub growth and
+both admission controls through ``spark.readStream.format("eventhubs")``."""
 
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as papq
 import pytest
 from pyspark.sql import functions as F
 
 from spark_eventhubs_spark.conf import EventHubsConf
 from spark_eventhubs_spark.connstr import file_hub_connection_string
 from spark_eventhubs_spark.offsets import NameAndPartition, OffsetRange
-from spark_eventhubs_spark.sources.hub import SimulatedEventHubs
-from spark_eventhubs_spark.sources.writer import write_eventhubs
+from spark_eventhubs_spark.sources.datasource import (
+    _ReceiveLog,
+    commit_staged_paths,
+    read_eventhubs,
+    register_eventhubs,
+    write_eventhubs,
+)
 from spark_eventhubs_spark.streaming.ratelimit import rate_limit
-from spark_eventhubs_spark.streaming.source import EventHubsSource, MicroBatchRunner
 from spark_eventhubs_spark.streaming.tracker import PartitionsStatusTracker
 
 
@@ -31,7 +39,8 @@ def test_rate_limit_proportional_skewed():
 
 def test_ratelimit_import_leaves_runner_and_pandas_unloaded():
     """The native reader imports the rate limiter in Spark's source runner,
-    a fresh process per streaming query; the package's names stay lazy."""
+    a fresh process per streaming query; that import stays free of pandas,
+    and the package re-exports the same function."""
     import subprocess
     import sys
 
@@ -39,15 +48,13 @@ def test_ratelimit_import_leaves_runner_and_pandas_unloaded():
     out = subprocess.run(
         [sys.executable, "-c",
          "import sys; import spark_eventhubs_spark.streaming.ratelimit; "
-         "print(sorted(m for m in ('pandas', 'spark_eventhubs_spark.streaming.source') "
-         "if m in sys.modules))"],
+         "print('pandas' in sys.modules)"],
         cwd=root, capture_output=True, text=True, check=True,
     )
-    assert out.stdout.strip() == "[]"
-    from spark_eventhubs_spark.streaming import MicroBatchRunner as lazy_runner
-    from spark_eventhubs_spark.streaming import rate_limit as lazy_rate_limit
+    assert out.stdout.strip() == "False"
+    from spark_eventhubs_spark.streaming import rate_limit as exported
 
-    assert lazy_runner is MicroBatchRunner and lazy_rate_limit is rate_limit
+    assert exported is rate_limit
 
 
 def test_rate_limit_passthrough_when_no_backlog():
@@ -137,95 +144,145 @@ def test_tracker_duplicate_batch_logged_not_fatal():
     assert tr.batch_ids_in_tracker == {0}
 
 
-# ---- micro-batch source over a writable hub ----
+# ---- format("eventhubs") stream over a writable hub ----
+
+def _send(hub, bodies, pid, partition_count=None):
+    """Append events pinned to partition ``pid`` through the sink's
+    commit, which numbers them on from the partition's latest seqNo."""
+    staging = os.path.join(hub, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    tag = uuid.uuid4().hex
+    path = os.path.join(staging, f"send-{tag}.parquet")
+    papq.write_table(pa.table({
+        "body": pa.array(bodies, pa.binary()),
+        "partition": pa.array([str(pid)] * len(bodies), pa.string()),
+        "partitionKey": pa.nulls(len(bodies), pa.string()),
+        "properties": pa.array([[]] * len(bodies), pa.map_(pa.string(), pa.string())),
+    }), path)
+    commit_staged_paths(hub, [path], tag, partition_count)
+
 
 @pytest.fixture()
 def stream_hub(spark, tmp_path):
-    hub = SimulatedEventHubs(spark, hub_dir=str(tmp_path / "hub"), partition_count=4)
+    register_eventhubs(spark)
+    hub = str(tmp_path / "hub")
     for pid in range(4):
-        hub.send([str(pid * 100 + i).encode() for i in range(20)], partition_id=pid)
+        _send(hub, [str(pid * 100 + i).encode() for i in range(20)], pid)
     return hub
 
 
-def _conf(max_events=None):
-    conf = EventHubsConf(file_hub_connection_string("/unused", "eh"))
-    if max_events is not None:
-        conf.set_max_events_per_trigger(max_events)
-    return conf
+def _stream(spark, hub, opts=None):
+    r = spark.readStream.format("eventhubs").option("path", hub)
+    for k, v in (opts or {}).items():
+        r = r.option(k, str(v))
+    return r.load()
+
+
+def _run(query, available_now=False):
+    """Drain a started query: an availableNow query to its single
+    snapshot, any other until nothing new is available."""
+    try:
+        if available_now:
+            query.awaitTermination(300)
+        else:
+            query.processAllAvailable()
+    finally:
+        query.stop()
+
+
+def _drain(spark, hub, ckpt, process, opts=None, available_now=False):
+    """Run ``process`` as the foreachBatch function of a query over
+    ``hub`` with checkpoint ``ckpt``."""
+    w = (_stream(spark, hub, opts).writeStream.foreachBatch(process)
+         .option("checkpointLocation", ckpt))
+    if available_now:
+        w = w.trigger(availableNow=True)
+    _run(w.start(), available_now)
+
+
+def _per_partition(df):
+    return {r["partition"]: r["n"]
+            for r in df.groupBy("partition").agg(F.count("*").alias("n")).collect()}
 
 
 def test_microbatch_progression_rate_limited(spark, stream_hub, tmp_path):
     # 80 events, 40 per trigger -> 2 batches of 40 (10 per partition)
-    source = EventHubsSource(spark, _conf(40), stream_hub,
-                             metadata_path=str(tmp_path / "meta"))
     seen = []
-    runner = MicroBatchRunner(
-        source, str(tmp_path / "ckpt"),
-        lambda df, bid: seen.append((bid, df.count())),
-    )
-    n = runner.run()
-    assert n == 2
+    _drain(spark, stream_hub, str(tmp_path / "ckpt"),
+           lambda df, bid: seen.append((bid, df.count())),
+           {"maxEventsPerTrigger": 40})
     assert seen == [(0, 40), (1, 40)]
+    # slowPartitionAdjustment is off: no receive log is written
+    assert not os.path.exists(os.path.join(stream_hub, "_receive"))
 
 
 def test_microbatch_no_limit_single_batch(spark, stream_hub, tmp_path):
-    source = EventHubsSource(spark, _conf(None), stream_hub,
-                             metadata_path=str(tmp_path / "meta"))
     seen = []
-    runner = MicroBatchRunner(source, str(tmp_path / "ckpt"),
-                              lambda df, bid: seen.append(df.count()))
-    assert runner.run() == 1
+    _drain(spark, stream_hub, str(tmp_path / "ckpt"),
+           lambda df, bid: seen.append(df.count()))
     assert seen == [80]
 
 
 def test_checkpoint_recovery_no_duplicates(spark, stream_hub, tmp_path):
-    """Stop after 1 batch, restart with a fresh source+runner on the
-    same checkpoint: every event is processed exactly once
-    (ref EventHubsSourceSuite recovery-after-restart behaviors)."""
+    """Stop after 1 batch, restart a new query on the same checkpoint:
+    every event is processed exactly once (ref EventHubsSourceSuite
+    recovery-after-restart behaviors)."""
     ckpt = str(tmp_path / "ckpt")
-    meta = str(tmp_path / "meta")
     got = []
 
     def collect(df, bid):
-        got.extend((r["partition"], r["sequenceNumber"]) for r in df.collect())
+        got.extend((r["partition"], r["sequenceNumber"])
+                   for r in df.select("partition", "sequenceNumber").collect())
 
-    r1 = MicroBatchRunner(EventHubsSource(spark, _conf(24), stream_hub, metadata_path=meta),
-                          ckpt, collect)
-    assert r1.run(max_batches=1) == 1
-    # restart: new source instance, same checkpoint
-    r2 = MicroBatchRunner(EventHubsSource(spark, _conf(24), stream_hub, metadata_path=meta),
-                          ckpt, collect)
-    r2.run()
+    opts = {"maxEventsPerTrigger": 24}
+    _drain(spark, stream_hub, ckpt, collect, opts, available_now=True)
+    assert len(got) == 24
+    _drain(spark, stream_hub, ckpt, collect, opts)
     assert sorted(got) == sorted((str(p), s) for p in range(4) for s in range(20))
 
 
 def test_uncommitted_batch_replayed(spark, stream_hub, tmp_path):
+    """Crash window between the offset log and the commit log: a relay
+    query (format("eventhubs") -> format("eventhubs")) loses its last
+    ``commits/<id>`` and restarts. The engine re-runs that batch from
+    its offsets file and the sink's epoch marker drops the re-delivered
+    rows, so every source event lands in the output hub exactly once."""
+    out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    meta = str(tmp_path / "meta")
-    counts = []
-    r1 = MicroBatchRunner(EventHubsSource(spark, _conf(40), stream_hub, metadata_path=meta),
-                          ckpt, lambda df, bid: counts.append((bid, df.count())))
-    r1.run()
-    assert counts == [(0, 40), (1, 40)]
-    # simulate crash after planning: drop the last commit marker
-    os.remove(os.path.join(ckpt, "commits", "1"))
-    r2 = MicroBatchRunner(EventHubsSource(spark, _conf(40), stream_hub, metadata_path=meta),
-                          ckpt, lambda df, bid: counts.append((bid, df.count())))
-    r2.run()
-    # batch 1 re-executed with identical contents, nothing else ran
-    assert counts == [(0, 40), (1, 40), (1, 40)]
+
+    def relay():
+        q = (_stream(spark, stream_hub, {"maxEventsPerTrigger": 40})
+             .select("body", "partition")
+             .writeStream.format("eventhubs")
+             .option("path", out)
+             .option("checkpointLocation", ckpt)
+             .start())
+        _run(q)
+
+    relay()
+    last = os.path.join(ckpt, "commits", "1")
+    assert os.path.exists(last) and not os.path.exists(os.path.join(ckpt, "offsets", "2"))
+    os.remove(last)
+    os.remove(os.path.join(ckpt, "commits", ".1.crc"))  # Hadoop's checksum
+    relay()
+    assert os.path.exists(last)  # batch 1 ran again and committed
+    rows = [(r["partition"], r["body"].decode())
+            for r in spark.read.format("eventhubs").option("path", out).load().collect()]
+    assert sorted(rows) == sorted((str(p), str(p * 100 + i)) for p in range(4) for i in range(20))
 
 
 def test_stream_growing_hub_picks_up_new_events(spark, stream_hub, tmp_path):
-    source = EventHubsSource(spark, _conf(None), stream_hub,
-                             metadata_path=str(tmp_path / "meta"))
     counts = []
-    runner = MicroBatchRunner(source, str(tmp_path / "ckpt"),
-                              lambda df, bid: counts.append(df.count()))
-    runner.run()
-    assert counts == [80]
-    stream_hub.send([b"new-1", b"new-2"], partition_id=0)
-    runner.run()
+    q = (_stream(spark, stream_hub).writeStream
+         .foreachBatch(lambda df, bid: counts.append(df.count()))
+         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
+    try:
+        q.processAllAvailable()
+        assert counts == [80]
+        _send(stream_hub, [b"new-1", b"new-2"], 0)
+        q.processAllAvailable()
+    finally:
+        q.stop()
     assert counts == [80, 2]
 
 
@@ -233,99 +290,128 @@ def test_stream_to_hub_roundtrip_with_batchid_dedup(spark, stream_hub, tmp_path)
     """stream-in -> transform -> stream-out (ref EventHubsSinkSuite
     round-trip): micro-batches append to an output hub; re-running a
     batch with the same batchId is a no-op."""
-    out_hub = SimulatedEventHubs(spark, hub_dir=str(tmp_path / "out"), partition_count=4)
-    source = EventHubsSource(spark, _conf(40), stream_hub,
-                             metadata_path=str(tmp_path / "meta"))
+    out = EventHubsConf(file_hub_connection_string(str(tmp_path), "out"))
+    written = []
 
     def process(df, bid):
         body_str = df.select(F.col("body").cast("string").alias("body"))
-        write_eventhubs(body_str, out_hub, batch_id=bid)
-        write_eventhubs(body_str, out_hub, batch_id=bid)  # redelivery -> skipped
+        written.append(write_eventhubs(body_str, out, batch_id=bid))
+        written.append(write_eventhubs(body_str, out, batch_id=bid))  # redelivery
 
-    MicroBatchRunner(source, str(tmp_path / "ckpt"), process).run()
-    back = out_hub.dataframe()
+    _drain(spark, stream_hub, str(tmp_path / "ckpt"), process, {"maxEventsPerTrigger": 40})
+    assert written == [40, 0, 40, 0]
+    back = read_eventhubs(spark, out)
     assert back.count() == 80
     vals = sorted(int(r["body"].decode()) for r in back.select("body").collect())
     assert vals == sorted(p * 100 + i for p in range(4) for i in range(20))
 
 
 def test_slow_partition_adjustment_moduates_next_batch(spark, stream_hub, tmp_path):
-    """Scripted perf metrics throttle a slow partition's next quota
-    (ref EventHubsSourceSuite.scala:780-1051 uses scripted updates via
-    SimulatedPartitionStatusTracker the same way)."""
-    conf = _conf(40)
-    conf.set_slow_partition_adjustment(True)
-    conf.set_max_acceptable_batch_receive_time_ms(100)
-    source = EventHubsSource(spark, conf, stream_hub, metadata_path=str(tmp_path / "meta"))
+    """Scripted receive times throttle a slow partition's next quota
+    (ref EventHubsSourceSuite.scala:780-1051 scripts the tracker the
+    same way): batch 0 runs, its receive records are replaced by
+    scripted ones, and the next latestOffset weights the split by the
+    tracker built from them."""
+    ckpt = str(tmp_path / "ckpt")
+    opts = {"maxEventsPerTrigger": 40,
+            "eventhubs.consumerGroup": "slow",
+            "eventhubs.slowPartitionAdjustment": "true",
+            "eventhubs.maxAcceptableBatchReceiveTime": 100}
     counts = {}
 
     def process(df, bid):
-        counts[bid] = {
-            r["partition"]: r["cnt"]
-            for r in df.groupBy("partition").agg(F.count("*").alias("cnt")).collect()
-        }
+        counts[bid] = _per_partition(df)
 
-    runner = MicroBatchRunner(source, str(tmp_path / "ckpt"), process)
-    runner.run(max_batches=1)
+    _drain(spark, stream_hub, ckpt, process, opts, available_now=True)
     assert counts[0] == {"0": 10, "1": 10, "2": 10, "3": 10}
     # script: partition 0 was pathologically slow in batch 0
-    tr = source.tracker
-    tr.update_partition_performance(0, 0, 10, 10_000)   # 1000 ms/event
-    tr.update_partition_performance(1, 0, 10, 100)      # 10 ms/event
-    tr.update_partition_performance(2, 0, 10, 100)
-    tr.update_partition_performance(3, 0, 10, 100)
+    log = _ReceiveLog(stream_hub, "slow")
+    log.record_receive(0, 0, 10, 10_000)   # 1000 ms/event
+    for pid in (1, 2, 3):
+        log.record_receive(pid, 0, 10, 100)  # 10 ms/event
     # avg=257.5, std=sqrt((742.5^2+3*157.5^2)/4)=sqrt(156431.25)=395.5
     # p0: 1000 > 653 -> factor 0.2575; quota 10*0.2575=2.575 -> floor 2
-    runner.run(max_batches=1)
-    assert counts[1]["0"] == 2
-    assert counts[1]["1"] == 10 and counts[1]["2"] == 10 and counts[1]["3"] == 10
+    _drain(spark, stream_hub, ckpt, process, opts, available_now=True)
+    assert counts[1] == {"0": 2, "1": 10, "2": 10, "3": 10}
+
+
+def test_receive_log_keeps_the_tracker_window(tmp_path):
+    """The receive log holds the tracker's last 3 batches and only the
+    receive records those batches can still match."""
+    log = _ReceiveLog(str(tmp_path), "g")
+    for b in range(5):
+        log.record_batch([[0, 10 * b, 10 * b + 10], [1, 10 * b, 10 * b + 10]])
+        log.record_receive(0, 10 * b, 10, 5)
+        log.record_receive(1, 10 * b, 10, 5)
+    names = sorted(os.listdir(log.dir))
+    assert [n for n in names if n.startswith("batch-")] == [
+        f"batch-{k:020d}.json" for k in (40, 60, 80)]
+    # batch 4's records were written after its batch file, so they stay
+    assert [n for n in names if n.startswith("recv-")] == sorted(
+        f"recv-{p}-{f}.json" for p in (0, 1) for f in (20, 30, 40))
+    assert log.performance_percentages(2, 100) == {0: 1.0, 1: 1.0}
+    log.reset()
+    assert os.listdir(log.dir) == []
+
+
+def test_receive_log_concurrent_writers_lose_nothing(tmp_path):
+    """Read tasks write receive records from many processes and threads,
+    a retried task rewriting its first attempt's record, while the
+    planner prunes: no write fails and every record stays readable."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    log = _ReceiveLog(str(tmp_path), "g")
+    log.record_batch([[pid, 0, 10] for pid in range(16)])
+
+    def work(i):
+        for _ in range(50):
+            log.record_receive(i % 16, 0, 10, i)
+        log.record_batch([[pid, 0, 10] for pid in range(16)])
+
+    with ThreadPoolExecutor(max_workers=32) as pool:
+        for f in [pool.submit(work, i) for i in range(32)]:
+            f.result(timeout=60)
+    names = sorted(os.listdir(log.dir))
+    assert names == sorted(["batch-00000000000000000000.json"]
+                           + [f"recv-{pid}-0.json" for pid in range(16)])
+    assert log.performance_percentages(16, 100) == {pid: 1.0 for pid in range(16)}
 
 
 def test_dynamic_partition_growth_mid_stream(spark, stream_hub, tmp_path):
     """A partition that appears between micro-batches is picked up from
     its default start position (ref EventHubsSourceSuite.scala:257-329;
     EventHubsSource.scala:183-192, 350-366)."""
-    source = EventHubsSource(spark, _conf(), stream_hub,
-                             metadata_path=str(tmp_path / "meta_grow"))
-    off1 = source.get_offset()
-    df1, _ = source.get_batch(None, off1)
-    assert df1.count() == 80  # the 4 original partitions
-
-    # partition 4 appears with 7 events
-    stream_hub.send([f"new-{i}".encode() for i in range(7)], partition_id=4)
-    off2 = source.get_offset()
-    df2, ranges = source.get_batch(off1, off2)
-    got = df2.select("partition", "sequenceNumber").collect()
-    assert {(r["partition"], r["sequenceNumber"]) for r in got} == {
-        ("4", i) for i in range(7)
-    }
-    # and the new partition's range started at the default position 0
-    new_range = [r for r in ranges if r.partition_id == 4][0]
-    assert new_range.from_seq_no == 0 and new_range.until_seq_no == 7
+    batches = []
+    q = (_stream(spark, stream_hub).writeStream
+         .foreachBatch(lambda df, bid: batches.append(
+             {(r["partition"], r["sequenceNumber"])
+              for r in df.select("partition", "sequenceNumber").collect()}))
+         .option("checkpointLocation", str(tmp_path / "ckpt")).start())
+    try:
+        q.processAllAvailable()
+        assert len(batches) == 1 and len(batches[0]) == 80  # the 4 original partitions
+        # partition 4 appears with 7 events
+        _send(stream_hub, [f"new-{i}".encode() for i in range(7)], 4, partition_count=5)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert batches[1:] == [{("4", i) for i in range(7)}]
 
 
 def test_max_rate_per_partition_clamp(spark, stream_hub, tmp_path):
-    """The DStream-era maxRatePerPartition clamp survives into the
-    Structured Streaming source: each micro-batch admits at most
+    """The DStream-era maxRatePerPartition clamp on the Structured
+    Streaming source: each micro-batch admits at most
     min(from + maxRate_p, latest) per partition
     (EventHubsDirectDStream.scala:97-105), per-partition overrides
     beating the global scalar (EventHubsConf.scala:344-346)."""
-    conf = _conf(None).set_max_rate_per_partition(6)
+    conf = EventHubsConf().set_max_rate_per_partition(6)
     conf.set_max_rates_per_partition({0: 3})  # partition 0 tighter
-    source = EventHubsSource(spark, conf, stream_hub,
-                             metadata_path=str(tmp_path / "meta"))
     seen = []
-    runner = MicroBatchRunner(
-        source, str(tmp_path / "ckpt"),
-        lambda df, bid: seen.append(
-            {r["partition"]: r["n"] for r in
-             df.groupBy("partition").agg(F.count("*").alias("n")).collect()}
-        ),
-    )
-    n = runner.run()
+    _drain(spark, stream_hub, str(tmp_path / "ckpt"),
+           lambda df, bid: seen.append(_per_partition(df)), conf.to_map())
     # 20 events/partition: p0 at 3/batch -> 7 batches drain it; others
     # at 6/batch finish in 4
-    assert n == 7
+    assert len(seen) == 7
     for batch in seen:
         assert batch.get("0", 0) <= 3
         assert all(v <= 6 for v in batch.values())
@@ -339,8 +425,6 @@ def test_max_rate_per_partition_clamp(spark, stream_hub, tmp_path):
 def test_max_rate_unset_means_no_clamp(spark, stream_hub, tmp_path):
     """Without the explicit knob, the source keeps SQL-source
     semantics: no per-partition cap, one batch drains everything."""
-    source = EventHubsSource(spark, _conf(None), stream_hub,
-                             metadata_path=str(tmp_path / "meta"))
-    runner = MicroBatchRunner(source, str(tmp_path / "ckpt"),
-                              lambda df, bid: None)
-    assert runner.run() == 1
+    seen = []
+    _drain(spark, stream_hub, str(tmp_path / "ckpt"), lambda df, bid: seen.append(bid))
+    assert seen == [0]
