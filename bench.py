@@ -35,16 +35,6 @@ def _replica_layout(sf_dir: str):
         return None
 
 
-def _host_driver_mem() -> str:
-    """A quarter of the host's MemTotal, at least 1g."""
-    try:
-        with open("/proc/meminfo") as fh:
-            kb = int(fh.readline().split()[1])
-    except (OSError, ValueError, IndexError):
-        return "1g"
-    return f"{max(1, kb // (4 << 20))}g"
-
-
 def main() -> None:
     # Measurement hygiene: flush pending filesystem writeback BEFORE
     # timing anything. A bench started minutes after a multi-GB write
@@ -150,6 +140,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from spark_eventhubs_spark.session import host_driver_mem
 
     def _make_session():
         s = (
@@ -162,7 +153,7 @@ def main() -> None:
             .config("spark.ui.showConsoleProgress", "false")
             .config(
                 "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _host_driver_mem(),
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_mem(),
             )
             .getOrCreate()
         )

@@ -23,8 +23,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
 
 def main() -> None:

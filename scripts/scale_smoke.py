@@ -20,10 +20,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-# 32 concurrent window/sort tasks over multi-M-row partitions need more
-# than the 1g local-mode default heap
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
 
 def main() -> None:

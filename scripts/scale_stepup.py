@@ -36,8 +36,6 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # measured cell value = median of N_RUNS fresh-plan runs (GC point +

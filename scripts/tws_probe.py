@@ -23,7 +23,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
 import pandas as pd
 from pyspark.sql import functions as F

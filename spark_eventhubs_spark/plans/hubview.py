@@ -86,9 +86,21 @@ EVENT_HUBS_SCHEMA = StructType(
 
 def configure_session(spark: SparkSession) -> SparkSession:
     """Runtime confs required to read the driver testdata and keep
-    results engine-deterministic. Safe to call on any session."""
+    results engine-deterministic. Safe to call on any session.
+
+    Streaming checkpoints (offset log, commit log, state-store deltas)
+    go through Spark's own manager for file systems without FileContext.
+    The default FileContext manager's rename on the local file system,
+    without the Hadoop native library, launches ``readlink`` 8 times
+    per checkpoint file; this one keeps write-then-rename and ``.crc``
+    checksums without those launches. A session checkpointing to an
+    object store can set the conf back after this call."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set(
+        "spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+    )
     return spark
 
 

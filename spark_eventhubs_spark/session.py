@@ -12,6 +12,9 @@ do not rediscover them one stack trace at a time:
   folding) for the catalog's join/agg topologies.
 - shuffle partitions ~ cores — right-sized for local runs; on a real
   cluster leave Spark's default or size to 2-3x total cores.
+- cores and driver memory from the host it runs on (the CPUs this
+  process may use, a quarter of MemTotal) unless ``SPARK_GRAFT_CPUS`` /
+  ``SPARK_GRAFT_DRIVER_MEM`` say otherwise.
 """
 
 from __future__ import annotations
@@ -23,17 +26,27 @@ from pyspark.sql import SparkSession
 from spark_eventhubs_spark.plans.hubview import configure_session
 
 
+def host_driver_mem() -> str:
+    """A quarter of the host's MemTotal, at least 1g."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = int(fh.readline().split()[1])
+    except (OSError, ValueError, IndexError):
+        return "1g"
+    return f"{max(1, kb // (4 << 20))}g"
+
+
 def build_session(
     app_name: str = "spark-eventhubs",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Tuned local/session builder. ``master`` defaults to
-    ``local[$SPARK_GRAFT_CPUS]`` (env) or ``local[*]``; shuffle
-    partitions default to the core count."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    ``local[$SPARK_GRAFT_CPUS]``, else to the CPUs this process may run
+    on; shuffle partitions default to the core count."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None:
-        master = f"local[{cpus}]" if cpus else "local[*]"
+        master = f"local[{cpus}]"
     b = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -46,12 +59,9 @@ def build_session(
     # 1g default heap caps wide-operator scale far below the host's
     # RAM; honored only at JVM launch (getOrCreate on a live JVM keeps
     # the existing size).
-    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
-    if mem:
-        b = b.config("spark.driver.memory", mem)
-    if shuffle_partitions is not None:
-        b = b.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    elif cpus:
-        b = b.config("spark.sql.shuffle.partitions", cpus)
+    b = b.config("spark.driver.memory",
+                 os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_mem())
+    b = b.config("spark.sql.shuffle.partitions",
+                 str(shuffle_partitions) if shuffle_partitions is not None else cpus)
     spark = b.getOrCreate()
     return configure_session(spark)

@@ -714,13 +714,19 @@ class EventHubsStreamReader(DataSourceStreamReader):
         return None if cur is None else {int(k): int(v) for k, v in cur.items()}
 
     def _cursor_write(self, seq_nos: Dict[int, int], merge: bool = True) -> Dict[int, int]:
-        os.makedirs(os.path.dirname(self._cursor_path), exist_ok=True)
+        """Max-merge ``seq_nos`` into the cursor (``merge=False``: reset
+        it) and return the result. A merge that advances no partition
+        writes nothing: idle polls would otherwise rewrite the file."""
         if merge:
-            cur = self._cursor_read() or {}
+            read = self._cursor_read()
+            cur = dict(read or {})
             for pid, s in seq_nos.items():
                 cur[pid] = max(cur.get(pid, 0), s)
+            if cur == read:
+                return cur
         else:
             cur = dict(seq_nos)
+        os.makedirs(os.path.dirname(self._cursor_path), exist_ok=True)
         _write_json(self._cursor_path, {str(p): s for p, s in cur.items()})
         return cur
 

@@ -730,6 +730,49 @@ def test_planning_reads_no_data_pages(tmp_path, monkeypatch):
     assert len(_read_all(stream, stream_parts)) == 290 + 150
 
 
+def test_cursor_written_only_when_it_advances(tmp_path, monkeypatch):
+    """Idle polls leave the consumer-group cursor file alone: only an
+    answer that moves some partition forward rewrites it."""
+    from spark_eventhubs_spark.sources import datasource as ds
+
+    hub = _write_log(str(tmp_path / "events"), {0: 100, 1: 100})
+    writes = []
+    real_write = ds._write_json
+
+    def counting(path, obj):
+        writes.append(path)
+        real_write(path, obj)
+
+    monkeypatch.setattr(ds, "_write_json", counting)
+    reader = ds.EventHubsStreamReader({"path": hub})
+    first = reader.latestOffset()
+    assert first == {"events": {"0": 100, "1": 100, "2": 0, "3": 0}}
+    assert len(writes) == 1
+    writes.clear()
+    for _ in range(20):
+        assert reader.latestOffset() == first
+    assert writes == []
+
+    # one appended file (seqNos 100..109 of partition 0)
+    extra = _write_log(str(tmp_path / "extra"), {0: 110}, files_per_partition=11)
+    shutil.copy(os.path.join(extra, "partition=0", "part-00010.parquet"),
+                os.path.join(hub, "partition=0", "part-00010.parquet"))
+    latest = reader.latestOffset()
+    assert latest == {"events": {"0": 110, "1": 100, "2": 0, "3": 0}}
+    assert len(writes) == 1
+    writes.clear()
+
+    reader.commit(first)
+    reader.commit(latest)
+    assert writes == []
+    with open(os.path.join(hub, "_cursors", "_Default.json")) as fh:
+        assert json.load(fh) == {"0": 110, "1": 100, "2": 0, "3": 0}
+
+    # initialOffset resets the cursor: it always writes
+    assert reader.initialOffset() == {"events": {"0": 0, "1": 0, "2": 0, "3": 0}}
+    assert len(writes) == 1
+
+
 def test_module_import_leaves_pyarrow_dataset_unloaded():
     """The read path is pyarrow.parquet only; importing the DataSource
     module (once per streaming query in Spark's source runner) must not

@@ -57,8 +57,55 @@ def test_build_session_confs(spark):
     s = build_session()
     assert s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     assert s.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert s.conf.get("spark.sql.streaming.checkpointFileManagerClass").endswith(
+        ".FileSystemBasedCheckpointFileManager")
     # and it can read the nanos-timestamped events table
     assert s.read.parquet(f"{SF_DIR}/events.parquet").count() > 0
+
+
+def test_build_session_sizes_from_host(monkeypatch):
+    """Without SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM the session
+    takes the CPUs this process may use and a quarter of MemTotal."""
+    import os
+    import types
+
+    from spark_eventhubs_spark import session as S
+
+    seen = {}
+
+    class Builder:
+        def master(self, m):
+            seen["master"] = m
+            return self
+
+        def appName(self, name):
+            return self
+
+        def config(self, key, value):
+            seen[key] = value
+            return self
+
+        def getOrCreate(self):
+            return "session"
+
+    monkeypatch.setattr(S, "SparkSession", types.SimpleNamespace(builder=Builder()))
+    monkeypatch.setattr(S, "configure_session", lambda s: s)
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert S.build_session() == "session"
+    cpus = str(len(os.sched_getaffinity(0)))
+    with open("/proc/meminfo") as fh:
+        quarter_gib = int(fh.readline().split()[1]) // (4 << 20)
+    assert seen["master"] == f"local[{cpus}]"
+    assert seen["spark.sql.shuffle.partitions"] == cpus
+    assert seen["spark.driver.memory"] == f"{max(1, quarter_gib)}g"
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "2g")
+    S.build_session(shuffle_partitions=5)
+    assert seen["master"] == "local[3]"
+    assert seen["spark.sql.shuffle.partitions"] == "5"
+    assert seen["spark.driver.memory"] == "2g"
 
 
 def test_driver_entry_contract(spark):

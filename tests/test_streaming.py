@@ -4,6 +4,7 @@ rounding and slow-partition tracker math as pure functions; then
 micro-batch progression, restart, crash-window replay, hub growth and
 both admission controls through ``spark.readStream.format("eventhubs")``."""
 
+import json
 import os
 import uuid
 
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from spark_eventhubs_spark.conf import EventHubsConf
 from spark_eventhubs_spark.connstr import file_hub_connection_string
 from spark_eventhubs_spark.offsets import NameAndPartition, OffsetRange
+from spark_eventhubs_spark.plans.hubview import configure_session
 from spark_eventhubs_spark.sources.datasource import (
     _ReceiveLog,
     commit_staged_paths,
@@ -269,6 +271,76 @@ def test_uncommitted_batch_replayed(spark, stream_hub, tmp_path):
     rows = [(r["partition"], r["body"].decode())
             for r in spark.read.format("eventhubs").option("path", out).load().collect()]
     assert sorted(rows) == sorted((str(p), str(p * 100 + i)) for p in range(4) for i in range(20))
+
+
+_CHECKPOINT_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager_class(spark, path):
+    """The class of the manager the engine builds for a checkpoint at
+    ``path`` under the session's current confs."""
+    jvm = spark._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path), spark._jsparkSession.sessionState().newHadoopConf())
+    return mgr.getClass().getName()
+
+
+def test_checkpoint_file_manager_takes_effect(spark, tmp_path):
+    """configure_session makes the engine write checkpoints through
+    Spark's FileSystem-based manager, not the FileContext default."""
+    pkg = "org.apache.spark.sql.execution.streaming.checkpointing."
+    assert (_checkpoint_manager_class(spark, str(tmp_path))
+            == pkg + "FileSystemBasedCheckpointFileManager")
+    spark.conf.unset(_CHECKPOINT_CONF)
+    try:
+        assert (_checkpoint_manager_class(spark, str(tmp_path))
+                == pkg + "FileContextBasedCheckpointFileManager")
+    finally:
+        configure_session(spark)
+
+
+def test_filecontext_checkpoint_resumes_under_filesystem_manager(spark, stream_hub, tmp_path):
+    """A relay checkpoint written by the FileContext manager (the
+    engine's default) resumes under the manager configure_session sets:
+    the next batch starts at the committed offset and every source
+    event lands in the output hub exactly once."""
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def relay(available_now):
+        w = (_stream(spark, stream_hub, {"maxEventsPerTrigger": 40})
+             .select("body", "partition")
+             .writeStream.format("eventhubs")
+             .option("path", out)
+             .option("checkpointLocation", ckpt))
+        if available_now:
+            w = w.trigger(availableNow=True)
+        _run(w.start(), available_now)
+
+    def relayed():
+        return [(int(r["partition"]), int(r["body"].decode()) % 100)
+                for r in spark.read.format("eventhubs").option("path", out).load().collect()]
+
+    spark.conf.unset(_CHECKPOINT_CONF)
+    try:
+        relay(available_now=True)  # one throttled batch
+    finally:
+        configure_session(spark)
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert not os.path.exists(os.path.join(ckpt, "offsets", "1"))
+    with open(os.path.join(ckpt, "offsets", "0")) as fh:
+        committed = {int(p): s for p, s in json.loads(fh.read().splitlines()[-1])["hub"].items()}
+    assert sum(committed.values()) == 40
+    first = relayed()
+    assert sorted(first) == sorted((p, s) for p, end in committed.items() for s in range(end))
+
+    relay(available_now=False)
+    got = relayed()
+    assert sorted(got) == sorted((p, s) for p in range(4) for s in range(20))
+    new = sorted(set(got) - set(first))
+    assert new == sorted((p, s) for p, end in committed.items() for s in range(end, 20))
+    for log in ("offsets", "commits"):  # written by the new manager, checksums kept
+        assert os.path.exists(os.path.join(ckpt, log, ".1.crc"))
 
 
 def test_stream_growing_hub_picks_up_new_events(spark, stream_hub, tmp_path):
