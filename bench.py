@@ -137,26 +137,11 @@ def main() -> None:
     # record alone instead of via a hand re-run.
     segment_np_canary: list[float] = [np_canary_s]
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
-    from spark_eventhubs_spark.session import host_driver_mem
+    from spark_eventhubs_spark.session import build_session
 
     def _make_session():
-        s = (
-            SparkSession.builder.master(f"local[{cpus}]")
-            .appName("spark-eventhubs-bench")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.ui.enabled", "false")
-            .config("spark.ui.showConsoleProgress", "false")
-            .config(
-                "spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or host_driver_mem(),
-            )
-            .getOrCreate()
-        )
+        s = build_session("spark-eventhubs-bench")
         s.sparkContext.setLogLevel("ERROR")
         return s
 

@@ -60,6 +60,31 @@ def frame_hash(pdf) -> str:
     return hashlib.md5("\x1e".join(rows).encode()).hexdigest()
 
 
+def compare(sdf, odf) -> list:
+    """Problems found comparing an entry's Spark output with its oracle's
+    (both pandas): row count, column names, then the value hash, with a
+    few differing rows as a sample. Empty when they match."""
+    problems = []
+    if len(sdf) != len(odf):
+        problems.append(f"rowcount {len(sdf)} != {len(odf)}")
+    if sorted(sdf.columns) != sorted(odf.columns):
+        problems.append(f"columns {sorted(sdf.columns)} != {sorted(odf.columns)}")
+    if problems:
+        return problems
+    hs, ho = frame_hash(sdf), frame_hash(odf)
+    if hs != ho:
+        problems.append(f"value hash {hs[:12]} != {ho[:12]}")
+        cols = sorted(sdf.columns)
+        a, b = (
+            sorted(df[cols].astype(str).apply(lambda r: "|".join(r), axis=1))
+            for df in (sdf, odf)
+        )
+        for x, y in [(x, y) for x, y in zip(a, b) if x != y][:3]:
+            problems.append(f"  spark: {x[:160]}")
+            problems.append(f"  duck : {y[:160]}")
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -106,27 +131,7 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb error: {e}")
             failures += 1
             continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rowcount {len(sdf)} != {len(odf)}")
-        if sorted(sdf.columns) != sorted(odf.columns):
-            problems.append(f"columns {sorted(sdf.columns)} != {sorted(odf.columns)}")
-        if not problems:
-            hs, ho = frame_hash(sdf), frame_hash(odf)
-            if hs != ho:
-                problems.append(f"value hash {hs[:12]} != {ho[:12]}")
-                # show a sample diff
-                cols = sorted(sdf.columns)
-                a = sdf[cols].astype(str).apply(lambda r: "|".join(r), axis=1).sort_values().reset_index(drop=True)
-                b = odf[cols].astype(str).apply(lambda r: "|".join(r), axis=1).sort_values().reset_index(drop=True)
-                import itertools
-
-                shown = 0
-                for i in range(min(len(a), len(b))):
-                    if a[i] != b[i] and shown < 3:
-                        problems.append(f"  spark: {a[i][:160]}")
-                        problems.append(f"  duck : {b[i][:160]}")
-                        shown += 1
+        problems = compare(sdf, odf)
         status = "OK  " if not problems else "FAIL"
         if problems:
             failures += 1

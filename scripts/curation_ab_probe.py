@@ -21,30 +21,17 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from spark_eventhubs_spark.operators import clustering as CL
     from spark_eventhubs_spark.operators import dedup as D
     from spark_eventhubs_spark.operators import text as T
-    from spark_eventhubs_spark.plans.hubview import (
-        clear_cached_plans,
-        configure_session,
-    )
+    from spark_eventhubs_spark.plans.hubview import clear_cached_plans
+    from spark_eventhubs_spark.session import build_session
     import spark_eventhubs_spark.queries as Q
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = build_session("curation-ab-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    configure_session(spark)
 
     def old_form():
         """The r13 three-leg form, verbatim from commit d0eb435's tree."""

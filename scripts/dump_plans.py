@@ -10,9 +10,9 @@ batch entries when none are named). Streaming twins are skipped: their
 callables DRAIN real micro-batch sequences; their per-trigger plans are
 pinned by the stateful-streaming tests instead.
 
-The session mirrors bench.py (local[$SPARK_GRAFT_CPUS], shuffle
-partitions = cpus, AQE on) so the dumped plans are the shapes the bench
-actually runs, at $SPARK_GRAFT_SF_DIR (default sf0.1).
+The session is bench.py's (``session.build_session``: local[cpus],
+shuffle partitions = cpus, AQE on) so the dumped plans are the shapes
+the bench actually runs, at $SPARK_GRAFT_SF_DIR (default sf0.1).
 """
 
 from __future__ import annotations
@@ -31,28 +31,13 @@ def main() -> int:
     only = set(sys.argv[3:])
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
-    from spark_eventhubs_spark.plans.hubview import (
-        clear_cached_plans,
-        configure_session,
-    )
+    from spark_eventhubs_spark.plans.hubview import clear_cached_plans
+    from spark_eventhubs_spark.session import build_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dump-plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = build_session("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    configure_session(spark)
 
     qs = entrymod.queries()
     names = [n for n in qs if (not only or n in only)

@@ -33,33 +33,17 @@ def main() -> int:
         raise SystemExit("name at least one entry")
     reps = int(os.environ.get("SEH_PROBE_REPS", "5"))
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
-    from spark_eventhubs_spark.plans.hubview import (
-        clear_cached_plans,
-        configure_session,
-    )
+    from spark_eventhubs_spark.plans.hubview import clear_cached_plans
+    from spark_eventhubs_spark.session import build_session
 
     qs = entry.queries()
     unknown = [n for n in args if n not in qs]
     if unknown:
         raise SystemExit(f"unknown entry name(s): {unknown}")
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
+    spark = build_session("probe-entries")
     spark.sparkContext.setLogLevel("ERROR")
-    configure_session(spark)
 
     for name in args:
         fn = qs[name]

@@ -21,29 +21,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from spark_eventhubs_spark import workdirs as _wd
-    from spark_eventhubs_spark.plans.hubview import configure_session
+    from spark_eventhubs_spark.session import build_session
     from spark_eventhubs_spark.streaming.stateful import streaming_sessionize
     import spark_eventhubs_spark.queries as Q
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-sessionize")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
-        )
-        .getOrCreate()
-    )
+    spark = build_session("profile-sessionize")
     spark.sparkContext.setLogLevel("ERROR")
-    configure_session(spark)
 
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1
     for rep in range(reps):

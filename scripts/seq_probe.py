@@ -25,7 +25,6 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -74,22 +73,14 @@ def main() -> int:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     out_json = sys.argv[2] if len(sys.argv) > 2 else None
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    from spark_eventhubs_spark.plans.hubview import configure_session
+    from spark_eventhubs_spark.session import build_session
     from spark_eventhubs_spark.sources import datasource as ds
 
     work = tempfile.mkdtemp(prefix="seqprobe_")
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
-        )
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = build_session("seq-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    configure_session(spark)
     try:
         ev = spark.read.parquet(os.path.join(SRC, "events.parquet"))
         shift = ev.agg(F.max("event_id")).first()[0] + 1

@@ -1353,7 +1353,8 @@ def exact_substring_spans_incremental(
     distinct-h set and the covered frame) and the store-delta write,
     instead of re-running the tokenize+explode+hash production three
     times per micro-batch (plans are per-action; AQE never dedups
-    across actions)."""
+    across actions). Its columns are checked, not its contents: a frame
+    whose columns are not exactly (doc_id, i, h) raises ValueError."""
     from pyspark.sql import Window
 
     L = min_len
@@ -1361,6 +1362,8 @@ def exact_substring_spans_incremental(
     n_g = F.size(toks) - F.lit(L) + 1
     if grams is None:
         grams = substring_grams(batch_df, L, text_col)
+    elif not isinstance(grams, DataFrame) or sorted(grams.columns) != ["doc_id", "h", "i"]:
+        raise ValueError("grams must be the (doc_id, i, h) frame substring_grams builds")
     stored = (
         store_df.join(grams.select("h").distinct(), "h", "left_semi")
         .groupBy("h")

@@ -348,6 +348,13 @@ def _seq_dot_np(X, w):
     return np.cumsum(X * w[None, :], axis=1)[:, -1]
 
 
+def _zero_norm(id_col: str, vec_id) -> ValueError:
+    """A zero-norm vector has no cosine: 0/0 is NaN, which the floor to
+    a long would rank as the score INT64_MIN. The kernels refuse it, as
+    the JVM legs do (ANSI division by zero)."""
+    return ValueError(f"zero-norm embedding at {id_col}={vec_id}: cosine undefined")
+
+
 def _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col):
     """mapInPandas kernel: assign each vector to its nearest centroid
     (argmax cosine, ties to the smallest cid — ``cents`` is cid-sorted
@@ -361,6 +368,8 @@ def _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col):
     cids = np.array([cid for cid, _ in cents], dtype=np.int64)
     qv = np.asarray(qvec, dtype=np.float64)
     qn = _norm_py(qvec)
+    if qn == 0:
+        raise _zero_norm(id_col, query_vec_id)
     probe = np.array(sorted(probe_cids), dtype=np.int64)
 
     def fn(batches):
@@ -371,6 +380,8 @@ def _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col):
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
+            if not rn.all():
+                raise _zero_norm(id_col, pdf[id_col].to_numpy()[rn == 0][0])
             S = np.empty((X.shape[0], len(C)), dtype=np.float64)
             for j, c in enumerate(C):
                 S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
@@ -405,18 +416,26 @@ def _recall_scan_fn(
     cids = np.array([cid for cid, _ in cents], dtype=np.int64)
     qv = np.asarray(qvec, dtype=np.float64)
     qn = _norm_py(qvec)
+    if qn == 0:
+        raise _zero_norm(id_col, query_vec_id)
     probe = np.array(sorted(probe_cids), dtype=np.int64)
+    none = np.empty(0, dtype=np.int64)
 
     def fn(batches):
         import pandas as pd
 
-        acc: dict = {m: ([], []) for m in ("brute", "lsh", "ivf")}
+        # running (ids, scores) top-k per method: each batch's
+        # candidates are merged into it and truncated, so a task holds
+        # O(k + batch) rows whatever its partition size
+        top = {m: (none, none) for m in ("brute", "lsh", "ivf")}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ids = pdf[id_col].to_numpy()
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
+            if not rn.all():
+                raise _zero_norm(id_col, ids[rn == 0][0])
             nq = ids != query_vec_id
             # brute score for every row (same float sequence as
             # _ivf_scan_fn: cosine double, * 1e6, floor)
@@ -437,23 +456,16 @@ def _recall_scan_fn(
                 ("ivf", nq & np.isin(cell, probe)),
             ):
                 if mask.any():
-                    acc[m][0].append(ids[mask])
-                    acc[m][1].append(score[mask])
-        out_m, out_i, out_s = [], [], []
-        for m, (idl, scl) in acc.items():
-            if not idl:
-                continue
-            aid = np.concatenate(idl)
-            asc = np.concatenate(scl)
-            order = np.lexsort((aid, -asc))[:k]  # (score desc, id asc)
-            out_m += [m] * len(order)
-            out_i.append(aid[order])
-            out_s.append(asc[order])
-        if out_m:
+                    aid = np.concatenate([top[m][0], ids[mask]])
+                    asc = np.concatenate([top[m][1], score[mask]])
+                    order = np.lexsort((aid, -asc))[:k]  # (score desc, id asc)
+                    top[m] = (aid[order], asc[order])
+        top = {m: t for m, t in top.items() if len(t[0])}
+        if top:
             yield pd.DataFrame({
-                "method": out_m,
-                id_col: np.concatenate(out_i),
-                "score_e6": np.concatenate(out_s),
+                "method": [m for m, (aid, _) in top.items() for _ in aid],
+                id_col: np.concatenate([aid for aid, _ in top.values()]),
+                "score_e6": np.concatenate([asc for _, asc in top.values()]),
             })
 
     return fn
@@ -513,6 +525,9 @@ def recall_topk_per_method(
             " not found"
         )
     cents = [(r["cid"], [float(x) for x in r["cvec"]]) for r in cent_rows]
+    for vid, v in [(query_vec_id, qvec), *cents]:
+        if not any(v):  # before the driver-side probe ranking divides by it
+            raise _zero_norm(id_col, vid)
 
     # LSH: query bucket, driver-side (same fold as lsh_ann_topk)
     W = np.array(
@@ -649,6 +664,10 @@ def ivf_ann_topk(
         raise ValueError(
             f"ivf_ann_topk: query vector {id_col}={query_vec_id} not found"
         )
+    cents = [(r["cid"], [float(x) for x in r["cvec"]]) for r in cent_rows]
+    for vid, v in [(query_vec_id, qvec), *cents]:
+        if not any(v):  # before the driver-side probe ranking divides by it
+            raise _zero_norm(id_col, vid)
 
     def _dot_py(a, b):
         # sequential left-to-right fold, same op order as the oracle's
@@ -662,11 +681,10 @@ def ivf_ann_topk(
         return _dot_py(a, b) / (math.sqrt(_dot_py(a, a)) * math.sqrt(_dot_py(b, b)))
 
     ranked = sorted(
-        ((_cos_py([float(x) for x in r["cvec"]], qvec), r["cid"]) for r in cent_rows),
+        ((_cos_py(v, qvec), cid) for cid, v in cents),
         key=lambda t: (-t[0], t[1]),
     )
     probe_cids = [cid for _, cid in ranked[:n_probe]]
-    cents = [(r["cid"], [float(x) for x in r["cvec"]]) for r in cent_rows]
 
     scored = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col),

@@ -73,32 +73,12 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-# Driver-window rotation is MECHANIZED (round-7 verdict item 6): the
-# deferred set lives in the generated module _driver_green.py, written
-# by scripts/rotate_window.py from the union of CORRECTNESS_r*.json —
-# the pending set (entries NOT deferred; the driver verifies them
-# first, in dict order, within its ~50-entry window) is exactly the 50
-# stalest entries by last-green ledger round, ties in catalog order,
-# never-checked entries first. tests/test_window_rotation.py pins that
-# the checked-in file matches the ledger and pending fits the window.
-try:
-    from spark_eventhubs_spark._driver_green import _DRIVER_GREEN
-except ImportError:  # pre-first-generation bootstrap: everything pending
-    _DRIVER_GREEN = frozenset()
-
-
-def _pending_first(d: Dict) -> Dict:
-    out = {k: v for k, v in d.items() if k not in _DRIVER_GREEN}
-    out.update({k: v for k, v in d.items() if k in _DRIVER_GREEN})
-    return out
-
-
 def queries() -> Dict[str, QueryFn]:
-    return _pending_first(_QUERIES)
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> Dict[str, str]:
-    return _pending_first(_ORACLES)
+    return dict(_ORACLES)
 
 
 def _table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2646,6 +2626,11 @@ def multimodal_bmp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 import itertools as _it
 
 _STREAM_RUNS = _it.count()
+# Trigger cadence of the processing-time twin drains. Batch sizing comes
+# from maxEventsPerTrigger, not the interval, so a short tick only
+# removes inter-batch idle (profiled: ~1.3 s of pure cadence slack per
+# sessionize drain at 50 ms, with the same 4-batch carry-over shape).
+_STREAM_TICK = "5 milliseconds"
 
 
 def _validated_scratch_memo(spark: SparkSession, key: tuple, build) -> str:
@@ -2905,13 +2890,7 @@ def _run_stream_to_memory(df, name: str, available_now: bool = True,
             finally:
                 q.stop()
         else:
-            # 5 ms cadence: batch sizing comes from maxEventsPerTrigger,
-            # not the interval — a shorter tick only removes inter-batch
-            # idle (profiled round 11: ~1.3 s of pure cadence slack per
-            # sessionize drain at 50 ms; same 4-batch carry-over shape).
-            # SEH_STREAM_TICK_MS overrides for cadence A/B profiling.
-            _tick = int(os.environ.get("SEH_STREAM_TICK_MS", "5"))
-            q = writer.trigger(processingTime=f"{_tick} milliseconds").start()
+            q = writer.trigger(processingTime=_STREAM_TICK).start()
             try:
                 # processAllAvailable has no timeout parameter: run it
                 # in a watchdog thread so a stalled source fails loudly
@@ -3639,9 +3618,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             .queryName(name)
             .outputMode("append")
             .option("checkpointLocation", ck)
-            .trigger(processingTime=(
-                f'{int(os.environ.get("SEH_STREAM_TICK_MS", "5"))} milliseconds'
-            ))
+            .trigger(processingTime=_STREAM_TICK)
             .start()
         )
         import time as _time

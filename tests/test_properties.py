@@ -294,48 +294,8 @@ def test_avi_roundtrip(w, h, nf, rate, seed):
 
 
 # ---------------------------------------------------------------------
-# round-7: window rotation ranking, RIFF/video magic dispatch,
-# footer-stat memo invalidation
+# round-7: RIFF/video magic dispatch, footer-stat memo invalidation
 # ---------------------------------------------------------------------
-
-@given(
-    last=st.dictionaries(
-        st.text(st.characters(min_codepoint=97, max_codepoint=122),
-                min_size=1, max_size=8),
-        st.integers(-1, 9), max_size=40,
-    ),
-    extra=st.lists(
-        st.text(st.characters(min_codepoint=97, max_codepoint=122),
-                min_size=1, max_size=8),
-        max_size=10, unique=True,
-    ),
-    window=st.integers(1, 20),
-)
-def test_rotation_pending_is_always_the_stalest_slice(last, extra, window):
-    """For ANY ledger state: pending ∪ green partitions the registered
-    set, |pending| <= window, and no green entry is staler than any
-    pending entry (never-checked entries always rank first)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "rw", os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts", "rotate_window.py",
-        )
-    )
-    rw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(rw)
-
-    registered = sorted(set(last) | set(extra))
-    pending, green = rw.compute_sets(registered, last, window=window)
-    assert sorted(pending + green) == registered
-    assert len(pending) == min(window, len(registered))
-    if pending and green:
-        newest_pending = max(last.get(n, -1) for n in pending)
-        oldest_green = min(last.get(n, -1) for n in green)
-        assert oldest_green >= newest_pending
-
 
 @given(payload=st.binary(min_size=0, max_size=64))
 def test_image_and_video_magic_dispatch_is_disjoint_and_total(payload):

@@ -6,6 +6,7 @@ optimization (one Python eval node / shared production).
 """
 
 import pyspark.sql.functions as F
+import pytest
 
 
 def _rows(df):
@@ -78,6 +79,93 @@ def test_recall_topk_missing_query_raises(spark):
         S.recall_topk_per_method(emb, query_vec_id=10_000, k=5, dim=8)
 
 
+def test_recall_kernel_running_topk_equals_single_sort():
+    """The kernel keeps a running per-method top-k across Arrow
+    batches; fed the same rows in many batches it must emit exactly
+    what one batch (one sort over every candidate) emits."""
+    import numpy as np
+    import pandas as pd
+
+    from spark_eventhubs_spark.operators import similarity as S
+
+    rng = np.random.default_rng(7)
+    dim, k = 8, 5
+    X = rng.integers(-9, 10, size=(300, dim)).astype(np.float64) / 7.0
+    X[~X.any(axis=1), 0] = 1.0  # keep every row's norm non-zero
+    pdf = pd.DataFrame({"vec_id": np.arange(300), "embedding": list(X)})
+    cents = [(i, X[i].tolist()) for i in range(4)]
+    W = np.array([[float(S._plane_weight(p, i)) for i in range(dim)]
+                  for p in range(3)])
+    qbucket = sum(int(S._seq_dot_np(X[:1], W[p])[0] > 0) << p for p in range(3))
+    fn = S._recall_scan_fn(cents, [0, 2], X[0].tolist(), qbucket, W, 0, k,
+                           "vec_id", "embedding")
+    one = pd.concat(list(fn(iter([pdf]))), ignore_index=True)
+    many = pd.concat(
+        list(fn(iter([pdf[i:i + 7] for i in range(0, len(pdf), 7)]))),
+        ignore_index=True,
+    )
+    assert len(one) == 3 * k
+    pd.testing.assert_frame_equal(one, many)
+
+
+def test_recall_topk_many_arrow_batches_per_task(spark):
+    """Same fused output whether each task's rows arrive as one Arrow
+    batch or as ten."""
+    from spark_eventhubs_spark.operators import similarity as S
+
+    emb = _emb(spark, n=200).repartition(2)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+
+    def run(batch_rows):
+        spark.conf.set(conf, str(batch_rows))
+        return _rows(S.recall_topk_per_method(
+            emb, query_vec_id=0, k=5, dim=8, n_cells=4, n_probe=2
+        ))
+
+    try:
+        assert run(10) == run(10_000)
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def _with_zero_row(spark, vec_id):
+    rows = [(r["vec_id"], list(r["embedding"])) for r in _emb(spark).collect()]
+    rows = [(i, [0.0] * 8 if i == vec_id else v) for i, v in rows]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+@pytest.mark.parametrize("vec_id", [17, 2])  # 2 is also a seed centroid
+def test_zero_norm_row_is_refused_by_every_leg(spark, vec_id):
+    """A zero-norm corpus row has no cosine: the fused kernel, the IVF
+    kernel and the JVM brute-force leg (ANSI division) all fail rather
+    than rank a NaN as a score."""
+    from spark_eventhubs_spark.operators import similarity as S
+
+    emb = _with_zero_row(spark, vec_id)
+    with pytest.raises(Exception, match=f"zero-norm embedding at vec_id={vec_id}"):
+        S.recall_topk_per_method(
+            emb, query_vec_id=0, k=5, dim=8, n_cells=4, n_probe=2
+        ).collect()
+    with pytest.raises(Exception, match=f"zero-norm embedding at vec_id={vec_id}"):
+        S.ivf_ann_topk(emb, 0, 5, n_cells=4, n_probe=4).collect()
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        S.brute_force_topk(emb, 0, 5).collect()
+
+
+def test_zero_norm_query_is_refused(spark):
+    from spark_eventhubs_spark.operators import similarity as S
+
+    emb = _with_zero_row(spark, 0)
+    with pytest.raises(ValueError, match="zero-norm embedding at vec_id=0"):
+        S.recall_topk_per_method(emb, query_vec_id=0, k=5, dim=8, n_cells=4)
+    with pytest.raises(ValueError, match="zero-norm embedding at vec_id=0"):
+        S.ivf_ann_topk(emb, 0, 5, n_cells=4)
+    # the kernel itself refuses it too (ivf_ann_topk_refined's path)
+    with pytest.raises(ValueError, match="zero-norm embedding at vec_id=3"):
+        S._ivf_scan_fn([(0, [1.0] * 8)], [0], [0.0] * 8, 3, "vec_id", "embedding")
+
+
 # ---- shared batch gram frame (exact_substring_spans_incremental) ----
 
 def test_substring_incremental_accepts_precomputed_grams(spark):
@@ -100,3 +188,23 @@ def test_substring_incremental_accepts_precomputed_grams(spark):
         batch, store, grams=D.substring_grams(batch)
     )
     assert _rows(base) == _rows(shared)
+
+
+def test_substring_incremental_rejects_foreign_grams(spark):
+    """``grams`` must be substring_grams's (doc_id, i, h) frame; any
+    other shape is refused instead of silently profiling wrong spans."""
+    from spark_eventhubs_spark.operators import dedup as D
+
+    batch = spark.createDataFrame(
+        [(10, "a b c d e f g h i j k l m n o p q r s t u v w x y z")],
+        "doc_id long, text string",
+    )
+    store = spark.createDataFrame([], "h bigint, n_occ bigint")
+    grams = D.substring_grams(batch)
+    for bad in (
+        grams.select("doc_id", "i"),
+        grams.withColumn("gram", F.lit("x")),
+        grams.toPandas(),
+    ):
+        with pytest.raises(ValueError, match="grams must be"):
+            D.exact_substring_spans_incremental(batch, store, grams=bad)
