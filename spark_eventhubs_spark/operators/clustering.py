@@ -11,9 +11,12 @@ North-star LLM-pipeline operators (curation layer):
 Exactness across engines (the trick that makes an iterative float
 algorithm hash-checkable against DuckDB):
 
-- every cosine uses the SAME sequential left-to-right double fold as
-  the rest of the similarity layer (`similarity._seq_dot_np` /
-  `oracle_cosine`), so assignments are bit-identical;
+- every assignment runs the similarity layer's one centroid kernel
+  (`similarity._nearest_cells` over a `similarity._codebook`): the
+  SAME sequential left-to-right double fold as `oracle_cosine`, ties
+  to the smallest cid, so assignments are bit-identical. It refuses a
+  zero-norm row or centroid with a ValueError naming its id (a NaN
+  cosine would otherwise win the argmax);
 - the Lloyd *mean* update is the order-dependent part — a float sum
   over arbitrarily-ordered members drifts in the last ulp between
   engines. Instead each member vector is quantized once
@@ -24,6 +27,10 @@ algorithm hash-checkable against DuckDB):
   and cosine is scale-invariant so the un-normalized sum vector is a
   valid centroid direction. No division ever happens, so there is
   nothing to drift.
+
+This module holds the one k-means trainer (`kmeans_centroids`): the
+k-means, SemDeDup, curation and refined-IVF operators all train
+through it, memoized per session by `plans.hubview.cached_model`.
 
 Design for 100 TB:
 - per iteration ONE Arrow-batched ``mapInPandas`` pass emits <= k
@@ -50,8 +57,8 @@ from pyspark.sql import functions as F
 
 from spark_eventhubs_spark.operators.similarity import (
     DIM,
-    _norm_py,
-    _seq_dot_np,
+    _codebook,
+    _nearest_cells,
     oracle_cosine,
 )
 
@@ -61,18 +68,15 @@ KMEANS_Q = 10_000  # member quantization scale for integer-sum centroids
 SEMDEDUP_TAU_E6 = 350_000  # see queries.py: synthetic max pairwise cos ~0.51
 
 
-def _assign_partials_fn(cents, vec_col, q_scale):
+def _assign_partials_fn(cents, id_col, vec_col, q_scale):
     """mapInPandas kernel for one Lloyd step: assign each row to its
-    nearest centroid (argmax cosine, ties to the smallest cid — cents
-    is cid-sorted and np.argmax takes the first max) and emit one
+    nearest centroid (``similarity._nearest_cells``) and emit one
     ``(cid, n, int_sum)`` partial per non-empty cell, where int_sum is
     the element-wise sum of ``floor(x * q_scale)`` member vectors.
     Output is <= k rows per Arrow batch regardless of batch size."""
     import numpy as np
 
-    C = [np.asarray(v, dtype=np.float64) for _, v in cents]
-    cnorms = [_norm_py(v) for _, v in cents]
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    book = _codebook(cents)
 
     def fn(batches):
         import pandas as pd
@@ -81,16 +85,12 @@ def _assign_partials_fn(cents, vec_col, q_scale):
             if len(pdf) == 0:
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-            S = np.empty((X.shape[0], len(C)), dtype=np.float64)
-            for j, c in enumerate(C):
-                S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
-            a = np.argmax(S, axis=1)
+            _, a, _ = _nearest_cells(X, pdf[id_col].to_numpy(), book, id_col)
             Qm = np.floor(X * float(q_scale)).astype(np.int64)
             out_cid, out_n, out_sum = [], [], []
             for j in np.unique(a):
                 mask = a == j
-                out_cid.append(int(cids[j]))
+                out_cid.append(int(book[0][j]))
                 out_n.append(int(mask.sum()))
                 out_sum.append(Qm[mask].sum(axis=0))
             yield pd.DataFrame({"cid": out_cid, "n": out_n, "s": out_sum})
@@ -100,13 +100,11 @@ def _assign_partials_fn(cents, vec_col, q_scale):
 
 def _final_assign_fn(cents, id_col, vec_col, with_vec=False):
     """mapInPandas kernel: final assignment against the converged
-    centroids, emitting (id, cluster_id, score_e6[, vec passthrough]).
-    Same argmax/tie semantics as :func:`_assign_partials_fn`."""
+    centroids (``similarity._nearest_cells``), emitting
+    (id, cluster_id, score_e6[, vec passthrough])."""
     import numpy as np
 
-    C = [np.asarray(v, dtype=np.float64) for _, v in cents]
-    cnorms = [_norm_py(v) for _, v in cents]
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    book = _codebook(cents)
 
     def fn(batches):
         import pandas as pd
@@ -114,15 +112,12 @@ def _final_assign_fn(cents, id_col, vec_col, with_vec=False):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            ids = pdf[id_col].to_numpy()
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-            S = np.empty((X.shape[0], len(C)), dtype=np.float64)
-            for j, c in enumerate(C):
-                S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
-            a = np.argmax(S, axis=1)
+            S, a, _ = _nearest_cells(X, ids, book, id_col)
             out = {
-                id_col: pdf[id_col].to_numpy(),
-                "cluster_id": cids[a],
+                id_col: ids,
+                "cluster_id": book[0][a],
                 "score_e6": np.floor(
                     S[np.arange(len(a)), a] * 1e6
                 ).astype(np.int64),
@@ -137,6 +132,7 @@ def _final_assign_fn(cents, id_col, vec_col, with_vec=False):
 def kmeans_partials(
     df: DataFrame,
     cents: list,
+    id_col: str = "vec_id",
     vec_col: str = "embedding",
     q_scale: int = KMEANS_Q,
 ) -> DataFrame:
@@ -146,8 +142,8 @@ def kmeans_partials(
     micro-batch: integer sums commute, so merging per-batch partials
     over ANY split of the data equals the one-shot batch result
     bit-for-bit (see :func:`merge_partial_rows`)."""
-    return df.select(F.col(vec_col)).mapInPandas(
-        _assign_partials_fn(cents, vec_col, q_scale),
+    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+        _assign_partials_fn(cents, id_col, vec_col, q_scale),
         schema="cid long, n long, s array<long>",
     )
 
@@ -233,43 +229,34 @@ def kmeans_centroids(
     The trained codebook is a session-scoped INGEST ARTIFACT (r13):
     a pure deterministic function of (corpus, k, iters, quantization)
     — the same contract as the memoized MinHash banded frame and the
-    PQ codebooks — so it is memoized via ``cache_dataframe`` under a
-    non-"query" prefix (bench counts the build). Three catalog
+    PQ codebooks — so it is memoized by ``plans.hubview.cached_model``
+    under a non-"query" prefix (bench counts the build). Three catalog
     entries train identical codebooks (``embed_kmeans_assign``'s
     k=8 model; ``embed_semdedup`` and ``corpus_curation_decisions``
     share the auto-k model), each previously re-running seeds +
-    ``iters`` full Lloyd passes per invocation. Keyed like
-    ``dedup._count_cached``: analyzed-plan fingerprint + input-file
+    ``iters`` full Lloyd passes per invocation; the refined IVF
+    (``similarity.ivf_ann_topk_refined``, ``ivf_build_index``) trains
+    here too. The key is the analyzed-plan fingerprint + input-file
     fingerprint + every training parameter, so a different corpus,
     file set, or knob retrains."""
-    import hashlib as _hl
-
-    from spark_eventhubs_spark.plans.hubview import cache_dataframe
-
-    plan_fp = _hl.md5(
-        df._jdf.queryExecution().analyzed().toString().encode()
-    ).hexdigest()
-    files_fp = _hl.md5("\x00".join(sorted(df.inputFiles())).encode()).hexdigest()
+    from spark_eventhubs_spark.plans.hubview import cached_model
 
     def _train() -> list:
         cents = kmeans_seeds(df, k, id_col, vec_col)
-        base = df.select(F.col(vec_col))
+        base = df.select(F.col(id_col), F.col(vec_col))
         if iters > 1:
             base = base.persist()
         try:
             for _ in range(iters):
-                rows = kmeans_partials(base, cents, vec_col, q_scale).collect()
-                cents_i = centroids_from_acc(cents, merge_partial_rows({}, rows))
-                cents = cents_i
+                rows = kmeans_partials(base, cents, id_col, vec_col, q_scale).collect()
+                cents = centroids_from_acc(cents, merge_partial_rows({}, rows))
         finally:
             if iters > 1:
                 base.unpersist()
         return cents
 
-    return cache_dataframe(
-        df.sparkSession,
-        ("kmeans_cents", plan_fp, files_fp, k, iters, id_col, vec_col, q_scale),
-        _train,
+    return cached_model(
+        df, ("kmeans_cents", k, iters, id_col, vec_col, q_scale), _train
     )
 
 

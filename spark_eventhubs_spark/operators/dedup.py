@@ -84,40 +84,16 @@ def _checkpoint_cached(
     )
 
 
-_COUNT_MEMO: dict = {}
-
-
 def _count_cached(df: DataFrame) -> int:
-    """Memoized ``df.count()`` keyed by (applicationId, analyzed-plan
-    fingerprint, input-file fingerprint) — the :func:`_checkpoint_cached`
-    pattern applied to a scalar. Auto-sizing operators
-    (``auto_n_planes``, semdedup's auto-k) need one corpus count per
-    corpus, not one full scan per invocation: catalog sources are plain
-    parquet scans, so ``count()`` launches a real job every call
-    without this. The analyzed-plan string alone does NOT capture the
-    underlying file set (ADVICE r9): re-reading a path after files are
-    appended/overwritten in the same session would return a stale
-    count, so the key also hashes ``df.inputFiles()`` (a metadata-only
-    listing; empty for non-file plans, where the plan string suffices).
-    Keyed by applicationId so a restarted session (tests spin several)
-    never reads a stale entry; since one process holds one live
-    SparkContext, entries from other applicationIds are unreachable
-    and are pruned on every miss, bounding the module-level memo."""
-    import hashlib as _hl
+    """Memoized ``df.count()``: one corpus count per session and corpus
+    (``plans.hubview.cached_model``, keyed on the analyzed plan and the
+    input files), not one full scan per invocation. Auto-sizing
+    operators (``auto_n_planes``, semdedup's auto-k) need it: catalog
+    sources are plain parquet scans, so ``count()`` launches a real job
+    every call without this."""
+    from spark_eventhubs_spark.plans.hubview import cached_model
 
-    app_id = df.sparkSession.sparkContext.applicationId
-    key = (
-        app_id,
-        _hl.md5(
-            df._jdf.queryExecution().analyzed().toString().encode()
-        ).hexdigest(),
-        _hl.md5("\x00".join(sorted(df.inputFiles())).encode()).hexdigest(),
-    )
-    if key not in _COUNT_MEMO:
-        for dead in [k for k in _COUNT_MEMO if k[0] != app_id]:
-            del _COUNT_MEMO[dead]
-        _COUNT_MEMO[key] = df.count()
-    return _COUNT_MEMO[key]
+    return cached_model(df, ("count",), df.count)
 
 
 def _spread(df: DataFrame) -> DataFrame:

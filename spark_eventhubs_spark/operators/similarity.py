@@ -20,6 +20,24 @@ identically. Vector math takes two routes, picked by dots-per-row:
   ~5.4s for IVF at sf0.1; the kernel is ~3x faster and scale-safe
   (zero shuffle, codebook in the task closure).
 
+Each vector-search primitive exists once, shared by the IVF, recall,
+PQ and k-means operators (``operators/clustering.py``):
+
+- :func:`_codebook_and_query`: the one driver collect of the seed
+  codebook and the query vector;
+- :func:`_nearest_cells`: the one centroid-assignment kernel over a
+  :func:`_codebook` (argmax cosine, ties to the smallest cid);
+- :func:`_probe_cells`: the one driver-side probe-cell ranking;
+- :func:`_plane_matrix` / :func:`_plane_buckets`: the LSH plane
+  weights and sign-bit bucket fold;
+- ``clustering.kmeans_centroids``: the one (integer-sum) k-means
+  trainer, and ``plans.hubview.cached_model`` the one model memo.
+
+Zero norms: a zero-norm corpus row, query or codebook centroid has no
+cosine (0/0 is NaN, and a NaN would win ``np.argmax``), so every one
+of these refuses it with a ValueError naming the id
+(:func:`_zero_norm`), as the JVM legs fail under ANSI division.
+
 Scale design: top-k against a query set is a broadcast join (query
 vectors are small) + per-partition partial top-k via groupBy agg of
 max_by arrays; no global sort of N rows. The LSH variant buckets on
@@ -172,6 +190,29 @@ def _plane_weight(p: int, i: int) -> int:
     return (md5_hash64_py(f"{p}:{i}") % 2001) - 1000
 
 
+def _plane_matrix(dim: int, n_planes: int):
+    """The LSH plane weights as an (n_planes, dim) float64 matrix:
+    row p is hyperplane p's :func:`_plane_weight` vector."""
+    import numpy as np
+
+    return np.array(
+        [[float(_plane_weight(p, i)) for i in range(dim)] for p in range(n_planes)],
+        dtype=np.float64,
+    )
+
+
+def _plane_buckets(X, W):
+    """Sign-bit bucket of every row of ``X``: bit p is set when the
+    :func:`_seq_dot_np` projection on plane ``W[p]`` is positive —
+    bit-identical to :func:`hyperplane_bucket` and the SQL oracle."""
+    import numpy as np
+
+    bucket = np.zeros(len(X), dtype=np.int64)
+    for p in range(W.shape[0]):
+        bucket += (_seq_dot_np(X, W[p]) > 0).astype(np.int64) << p
+    return bucket
+
+
 def _bucket_frame(
     df: DataFrame,
     id_col: str,
@@ -182,15 +223,12 @@ def _bucket_frame(
 ) -> DataFrame:
     """(id, vec, bucket[, nrm]) via one Arrow-batched kernel: all
     n_planes hyperplane projections as whole-array sequential folds
-    (:func:`_seq_dot_np`), replacing n_planes interpreted HOF
+    (:func:`_plane_buckets`), replacing n_planes interpreted HOF
     evaluations per row. Bit-identical signs to the
     :func:`hyperplane_bucket` expression form and the SQL oracle."""
     import numpy as np
 
-    W = np.array(
-        [[float(_plane_weight(p, i)) for i in range(dim)] for p in range(n_planes)],
-        dtype=np.float64,
-    )
+    W = _plane_matrix(dim, n_planes)
     schema = f"{id_col} long, {vec_col} array<float>, bucket long" + (
         ", nrm double" if with_norm else ""
     )
@@ -200,12 +238,8 @@ def _bucket_frame(
             if not len(pdf):
                 continue
             X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            bucket = np.zeros(len(X), dtype=np.int64)
-            for p in range(n_planes):
-                proj = _seq_dot_np(X, W[p])
-                bucket += (proj > 0).astype(np.int64) << p
             out = pdf[[id_col, vec_col]].copy()
-            out["bucket"] = bucket
+            out["bucket"] = _plane_buckets(X, W)
             if with_norm:
                 out["nrm"] = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
             yield out
@@ -233,29 +267,18 @@ def lsh_ann_topk(
     deterministic plane weights).
 
     The query's vector is fetched with a pushed-down id filter and its
-    bucket computed DRIVER-side with the same :func:`_seq_dot_np`
+    bucket computed DRIVER-side with the same :func:`_plane_buckets`
     fold — the previous form filtered the bucketed frame, which ran
     the corpus-wide bucket kernel a second time just to produce the
     one query row.
     """
     import numpy as np
 
-    qrow = df.where(F.col(id_col) == query_vec_id).select(vec_col).first()
-    if qrow is None:
-        raise ValueError(
-            f"lsh_ann_topk: query vector {id_col}={query_vec_id} not found"
-        )
-    x = np.asarray(qrow[0], dtype=np.float64)
-    qbucket = 0
-    for p in range(n_planes):
-        w = np.array(
-            [float(_plane_weight(p, i)) for i in range(dim)], dtype=np.float64
-        )
-        if _seq_dot_np(x[None, :], w)[0] > 0:
-            qbucket |= 1 << p
-    qdf = df.sparkSession.createDataFrame(
-        [(list(qrow[0]),)], f"qvec array<float>"
-    )
+    _, qvec = _codebook_and_query(df, 0, query_vec_id, id_col, vec_col)
+    qbucket = int(_plane_buckets(
+        np.asarray([qvec], dtype=np.float64), _plane_matrix(dim, n_planes)
+    )[0])
+    qdf = df.sparkSession.createDataFrame([(qvec,)], "qvec array<float>")
     with_bucket = _bucket_frame(df, id_col, vec_col, dim, n_planes)
     return (
         with_bucket.where(F.col("bucket") == qbucket)
@@ -350,26 +373,117 @@ def _seq_dot_np(X, w):
 
 def _zero_norm(id_col: str, vec_id) -> ValueError:
     """A zero-norm vector has no cosine: 0/0 is NaN, which the floor to
-    a long would rank as the score INT64_MIN. The kernels refuse it, as
-    the JVM legs do (ANSI division by zero)."""
+    a long would rank as the score INT64_MIN, and which ``np.argmax``
+    would pick as a row's nearest cell. Every consumer refuses it —
+    corpus row, query or codebook centroid — as the JVM legs do (ANSI
+    division by zero)."""
     return ValueError(f"zero-norm embedding at {id_col}={vec_id}: cosine undefined")
+
+
+def _checked_norm(vals: list, id_col: str, vec_id) -> float:
+    """:func:`_norm_py` of one driver-side vector, refusing zero."""
+    n = _norm_py(vals)
+    if n == 0:
+        raise _zero_norm(id_col, vec_id)
+    return n
+
+
+def _codebook(cents: list, id_col: str = "cid"):
+    """``(cids, C, cnorms)`` of a ``[(cid, vec)]`` codebook, sorted by
+    cid so that ``np.argmax``'s first-max rule sends ties to the
+    smallest cid. A zero-norm centroid is refused by ``id_col`` (its
+    cid, or its vec_id when the codebook is seeded from corpus
+    rows)."""
+    import numpy as np
+
+    cents = sorted(cents, key=lambda t: t[0])
+    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    C = np.array([v for _, v in cents], dtype=np.float64)
+    cnorms = np.array([_checked_norm(v, id_col, cid) for cid, v in cents])
+    return cids, C, cnorms
+
+
+def _row_norms(X, ids, id_col: str):
+    """Row norms of a batch matrix (the sequential fold), refusing a
+    zero-norm row by its id."""
+    import numpy as np
+
+    rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
+    if not rn.all():
+        raise _zero_norm(id_col, ids[rn == 0][0])
+    return rn
+
+
+def _nearest_cells(X, ids, book, id_col: str):
+    """The one centroid-assignment kernel, shared by the IVF scan, the
+    recall scan, the IVF index writer and the k-means passes. Returns
+    the rows x cells cosine matrix of batch ``X`` against a
+    :func:`_codebook`, each row's nearest cell as a column index into
+    the codebook (ties to the smallest cid) and the row norms. One
+    :func:`_seq_dot_np` fold per centroid, not ``X @ C.T``: pairwise
+    summation would break bit parity with the SQL oracle."""
+    import numpy as np
+
+    rn = _row_norms(X, ids, id_col)
+    _, C, cnorms = book
+    S = np.empty((X.shape[0], len(C)), dtype=np.float64)
+    for j, c in enumerate(C):
+        S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
+    return S, np.argmax(S, axis=1), rn
+
+
+def _probe_cells(
+    cents: list, qvec: list, n_probe: int, query_vec_id, id_col: str,
+    cent_col: str = "cid",
+) -> list:
+    """The ``n_probe`` cids nearest the query, ranked driver-side by
+    (-cosine, cid) with the same sequential fold as the kernels and
+    the oracle's ``ORDER BY`` (numpy float64 and Python floats are
+    both IEEE doubles). Refuses a zero-norm query by ``id_col`` and a
+    zero-norm centroid by ``cent_col``."""
+    import numpy as np
+
+    cids, C, cnorms = _codebook(cents, cent_col)
+    qn = _checked_norm(qvec, id_col, query_vec_id)
+    cos = _seq_dot_np(C, np.asarray(qvec, dtype=np.float64)) / (cnorms * qn)
+    return [int(cid) for cid in cids[np.lexsort((cids, -cos))[:n_probe]]]
+
+
+def _codebook_and_query(
+    df: DataFrame, n_cells: int, query_vec_id: int, id_col: str, vec_col: str
+) -> tuple:
+    """ONE driver collect of the seed codebook — the first ``n_cells``
+    vectors by id, as cid-sorted ``[(cid, vec)]`` — and the query
+    vector; both are pushed-down filters on the id column, and
+    ``n_cells=0`` fetches the query alone. A missing query is refused
+    here: otherwise it surfaces later as an opaque numpy shape error
+    inside the executor kernel."""
+    rows = df.where(
+        (F.col(id_col) < n_cells) | (F.col(id_col) == query_vec_id)
+    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")).collect()
+    cents = sorted(
+        ((r["cid"], [float(x) for x in r["cvec"]]) for r in rows if r["cid"] < n_cells),
+        key=lambda t: t[0],
+    )
+    qvec = next(
+        ([float(x) for x in r["cvec"]] for r in rows if r["cid"] == query_vec_id),
+        None,
+    )
+    if qvec is None:
+        raise ValueError(f"query vector {id_col}={query_vec_id} not found")
+    return cents, qvec
 
 
 def _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col):
     """mapInPandas kernel: assign each vector to its nearest centroid
-    (argmax cosine, ties to the smallest cid — ``cents`` is cid-sorted
-    and np.argmax takes the first max), drop rows outside the probe
-    cells, and score survivors against the query vector. All arithmetic
-    via :func:`_seq_dot_np` so results bit-match the SQL oracle."""
+    (:func:`_nearest_cells`), drop rows outside the probe cells, and
+    score survivors against the query vector. All arithmetic via
+    :func:`_seq_dot_np` so results bit-match the SQL oracle."""
     import numpy as np
 
-    C = [np.asarray(v, dtype=np.float64) for _, v in cents]
-    cnorms = [_norm_py(v) for _, v in cents]
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    book = _codebook(cents)
     qv = np.asarray(qvec, dtype=np.float64)
-    qn = _norm_py(qvec)
-    if qn == 0:
-        raise _zero_norm(id_col, query_vec_id)
+    qn = _checked_norm(qvec, id_col, query_vec_id)
     probe = np.array(sorted(probe_cids), dtype=np.int64)
 
     def fn(batches):
@@ -378,20 +492,15 @@ def _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
+            ids = pdf[id_col].to_numpy()
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-            if not rn.all():
-                raise _zero_norm(id_col, pdf[id_col].to_numpy()[rn == 0][0])
-            S = np.empty((X.shape[0], len(C)), dtype=np.float64)
-            for j, c in enumerate(C):
-                S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
-            cell = cids[np.argmax(S, axis=1)]
-            keep = np.isin(cell, probe) & (pdf[id_col].to_numpy() != query_vec_id)
+            _, a, rn = _nearest_cells(X, ids, book, id_col)
+            keep = np.isin(book[0][a], probe) & (ids != query_vec_id)
             if not keep.any():
                 continue
             sq = _seq_dot_np(X[keep], qv) / (rn[keep] * qn)
             yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy()[keep],
+                id_col: ids[keep],
                 "score_e6": np.floor(sq * 1e6).astype(np.int64),
             })
 
@@ -411,13 +520,9 @@ def _recall_scan_fn(
     IVF/LSH legs it fuses)."""
     import numpy as np
 
-    C = [np.asarray(v, dtype=np.float64) for _, v in cents]
-    cnorms = [_norm_py(v) for _, v in cents]
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    book = _codebook(cents)
     qv = np.asarray(qvec, dtype=np.float64)
-    qn = _norm_py(qvec)
-    if qn == 0:
-        raise _zero_norm(id_col, query_vec_id)
+    qn = _checked_norm(qvec, id_col, query_vec_id)
     probe = np.array(sorted(probe_cids), dtype=np.int64)
     none = np.empty(0, dtype=np.int64)
 
@@ -433,27 +538,17 @@ def _recall_scan_fn(
                 continue
             ids = pdf[id_col].to_numpy()
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-            if not rn.all():
-                raise _zero_norm(id_col, ids[rn == 0][0])
+            # IVF cell (same kernel as _ivf_scan_fn)
+            _, a, rn = _nearest_cells(X, ids, book, id_col)
             nq = ids != query_vec_id
             # brute score for every row (same float sequence as
             # _ivf_scan_fn: cosine double, * 1e6, floor)
             sq = _seq_dot_np(X, qv) / (rn * qn)
             score = np.floor(sq * 1e6).astype(np.int64)
-            # LSH bucket (same fold as _bucket_frame)
-            bucket = np.zeros(len(X), dtype=np.int64)
-            for p in range(W.shape[0]):
-                bucket += (_seq_dot_np(X, W[p]) > 0).astype(np.int64) << p
-            # IVF cell (same argmax/tie semantics as _ivf_scan_fn)
-            S = np.empty((X.shape[0], len(C)), dtype=np.float64)
-            for j, c in enumerate(C):
-                S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
-            cell = cids[np.argmax(S, axis=1)]
             for m, mask in (
                 ("brute", nq),
-                ("lsh", nq & (bucket == qbucket)),
-                ("ivf", nq & np.isin(cell, probe)),
+                ("lsh", nq & (_plane_buckets(X, W) == qbucket)),
+                ("ivf", nq & np.isin(book[0][a], probe)),
             ):
                 if mask.any():
                     aid = np.concatenate([top[m][0], ids[mask]])
@@ -509,57 +604,10 @@ def recall_topk_per_method(
     anyway)."""
     import numpy as np
 
-    # ONE driver job: centroid codebook + query vector (the codebook
-    # always fits — C rows; the LSH leg's separate .first() job and
-    # the IVF leg's .collect() job are folded into this single pass)
-    need = df.where(
-        (F.col(id_col) < n_cells) | (F.col(id_col) == query_vec_id)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")).collect()
-    cent_rows = sorted(
-        (r for r in need if r["cid"] < n_cells), key=lambda r: r["cid"]
-    )
-    qvec = [float(x) for r in need if r["cid"] == query_vec_id for x in r["cvec"]]
-    if not qvec:
-        raise ValueError(
-            f"recall_topk_per_method: query vector {id_col}={query_vec_id}"
-            " not found"
-        )
-    cents = [(r["cid"], [float(x) for x in r["cvec"]]) for r in cent_rows]
-    for vid, v in [(query_vec_id, qvec), *cents]:
-        if not any(v):  # before the driver-side probe ranking divides by it
-            raise _zero_norm(id_col, vid)
-
-    # LSH: query bucket, driver-side (same fold as lsh_ann_topk)
-    W = np.array(
-        [[float(_plane_weight(p, i)) for i in range(dim)] for p in range(n_planes)],
-        dtype=np.float64,
-    )
-    x = np.asarray(qvec, dtype=np.float64)
-    qbucket = 0
-    for p in range(n_planes):
-        if _seq_dot_np(x[None, :], W[p])[0] > 0:
-            qbucket |= 1 << p
-
-    # IVF: probe-cell ranking, driver-side (same _cos_py sequence as
-    # ivf_ann_topk — Python floats are IEEE doubles)
-    import math
-
-    def _dot_py(a, b):
-        acc = 0.0
-        for i in range(len(a)):
-            acc = acc + a[i] * b[i]
-        return acc
-
-    def _cos_py(a, b):
-        return _dot_py(a, b) / (
-            math.sqrt(_dot_py(a, a)) * math.sqrt(_dot_py(b, b))
-        )
-
-    ranked = sorted(
-        ((_cos_py(v, qvec), cid) for cid, v in cents),
-        key=lambda t: (-t[0], t[1]),
-    )
-    probe_cids = [cid for _, cid in ranked[:n_probe]]
+    cents, qvec = _codebook_and_query(df, n_cells, query_vec_id, id_col, vec_col)
+    probe_cids = _probe_cells(cents, qvec, n_probe, query_vec_id, id_col, id_col)
+    W = _plane_matrix(dim, n_planes)
+    qbucket = int(_plane_buckets(np.asarray([qvec], dtype=np.float64), W)[0])
 
     local = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         _recall_scan_fn(
@@ -580,42 +628,15 @@ def recall_topk_per_method(
     )
 
 
-def _cell_partials_fn(cents, vec_col):
-    """mapInPandas kernel for the Lloyd update step: per Arrow batch,
-    assign rows to their nearest centroid (same argmax/tie semantics as
-    :func:`_ivf_scan_fn`) and emit one ``(cid, n, vec_sum)`` partial per
-    non-empty cell — the map-side combine of the mean aggregation done
-    inside the kernel. Output is <= n_cells rows per batch regardless of
-    batch size, so collecting the partials and finishing the average on
-    the driver is O(cells * dim) — the treeAggregate shape of
-    distributed k-means, with no wide shuffle and no 64-column codegen."""
-    import numpy as np
-
-    C = [np.asarray(v, dtype=np.float64) for _, v in cents]
-    cnorms = [_norm_py(v) for _, v in cents]
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-
-    def fn(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-            S = np.empty((X.shape[0], len(C)), dtype=np.float64)
-            for j, c in enumerate(C):
-                S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
-            a = np.argmax(S, axis=1)
-            out_cid, out_n, out_sum = [], [], []
-            for j in np.unique(a):
-                mask = a == j
-                out_cid.append(int(cids[j]))
-                out_n.append(int(mask.sum()))
-                out_sum.append(X[mask].sum(axis=0))
-            yield pd.DataFrame({"cid": out_cid, "n": out_n, "s": out_sum})
-
-    return fn
+def _ivf_topk(df, cents, qvec, query_vec_id, k, n_probe, id_col, vec_col, cent_col):
+    """Probe-rank ``cents`` against the query, then ONE
+    :func:`_ivf_scan_fn` pass and a TakeOrdered top-k."""
+    probe_cids = _probe_cells(cents, qvec, n_probe, query_vec_id, id_col, cent_col)
+    scored = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
+        _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col),
+        schema=f"{id_col} long, score_e6 long",
+    )
+    return scored.orderBy(F.col("score_e6").desc(), F.col(id_col).asc()).limit(k)
 
 
 def ivf_ann_topk(
@@ -633,13 +654,13 @@ def ivf_ann_topk(
 
     Centroid seeding is training-free and deterministic (the first
     ``n_cells`` vectors by id) so the whole pipeline — assignment,
-    probing, scoring — is oracle-checkable; swap the seeding for a
-    sampled k-means job at scale (assignment plan is unchanged).
+    probing, scoring — is oracle-checkable; :func:`ivf_ann_topk_refined`
+    swaps in a trained codebook (the assignment plan is unchanged).
 
     Scale: the centroid codebook + query vector are collected in ONE
     driver job (C+1 rows, tiny — the IVF codebook always fits);
     probe-cell ranking happens driver-side with the SAME sequential
-    double arithmetic as the engines (Python floats are IEEE doubles).
+    double arithmetic as the engines (:func:`_probe_cells`).
     Cell assignment + probe filter + scoring run in ONE Arrow-batched
     ``mapInPandas`` pass — zero shuffle, no N*C row expansion, the
     codebook rides in the task closure (C*dim doubles). A C-wide
@@ -649,48 +670,10 @@ def ivf_ann_topk(
     cell id is materialized at ingest and used as a partition column
     so a query reads n_probe/n_cells of the data.
     """
-    import math
-
-    need = df.where(
-        (F.col(id_col) < n_cells) | (F.col(id_col) == query_vec_id)
-    ).select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")).collect()
-    cent_rows = sorted(
-        (r for r in need if r["cid"] < n_cells), key=lambda r: r["cid"]
+    cents, qvec = _codebook_and_query(df, n_cells, query_vec_id, id_col, vec_col)
+    return _ivf_topk(
+        df, cents, qvec, query_vec_id, k, n_probe, id_col, vec_col, id_col
     )
-    qvec = [float(x) for r in need if r["cid"] == query_vec_id for x in r["cvec"]]
-    if not qvec:
-        # without this the empty query surfaces later as an opaque
-        # numpy shape error inside the executor kernel
-        raise ValueError(
-            f"ivf_ann_topk: query vector {id_col}={query_vec_id} not found"
-        )
-    cents = [(r["cid"], [float(x) for x in r["cvec"]]) for r in cent_rows]
-    for vid, v in [(query_vec_id, qvec), *cents]:
-        if not any(v):  # before the driver-side probe ranking divides by it
-            raise _zero_norm(id_col, vid)
-
-    def _dot_py(a, b):
-        # sequential left-to-right fold, same op order as the oracle's
-        # list_sum(list_transform(...)) — bit-identical
-        acc = 0.0
-        for i in range(len(a)):
-            acc = acc + a[i] * b[i]
-        return acc
-
-    def _cos_py(a, b):
-        return _dot_py(a, b) / (math.sqrt(_dot_py(a, a)) * math.sqrt(_dot_py(b, b)))
-
-    ranked = sorted(
-        ((_cos_py(v, qvec), cid) for cid, v in cents),
-        key=lambda t: (-t[0], t[1]),
-    )
-    probe_cids = [cid for _, cid in ranked[:n_probe]]
-
-    scored = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col),
-        schema=f"{id_col} long, score_e6 long",
-    )
-    return scored.orderBy(F.col("score_e6").desc(), F.col(id_col).asc()).limit(k)
 
 
 def oracle_ivf_ann_topk(
@@ -939,118 +922,6 @@ def knn_join(
     )
 
 
-def kmeans_refine_centroids(
-    df: DataFrame,
-    n_cells: int = 16,
-    iters: int = 1,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed_cents: list | None = None,
-) -> list:
-    """Distributed Lloyd iterations refining the IVF codebook.
-
-    Seeds from the first ``n_cells`` vectors (deterministic, as
-    ivf_ann_topk), then per iteration runs ONE job: an Arrow-batched
-    kernel that assigns each row to its nearest centroid and emits
-    per-cell ``(n, vec_sum)`` partials (<= n_cells rows per Arrow
-    batch), which the driver merges and divides — the treeAggregate
-    shape of large-scale k-means. No shuffle of vectors, no wide
-    aggregation; the only cross-machine traffic is cells x dim partial
-    sums. Multi-iteration runs persist the narrow vector projection so
-    each Lloyd step re-reads cached columns, not parquet. Returns
-    [(cid, [centroid floats])] sorted by cid.
-
-    The refined codebook is a session-scoped INGEST ARTIFACT (r13,
-    same contract as ``clustering.kmeans_centroids``): a pure
-    deterministic function of (corpus, seeds, n_cells, iters), so it
-    is memoized via ``cache_dataframe`` under a non-"query" prefix
-    (the bench's artifact-build counter records every build). Keyed
-    on analyzed-plan + input-file fingerprints + every training
-    parameter + a seed fingerprint — a different corpus, file set,
-    knob, or seed set retrains."""
-    return _cached_model(
-        df,
-        ("ivf_refined_cents", n_cells, iters, dim, id_col, vec_col,
-         _seed_fp(seed_cents)),
-        lambda: _refine_centroids_uncached(
-            df, n_cells, iters, id_col, vec_col, seed_cents
-        ),
-    )
-
-
-def _seed_fp(seeds) -> str:
-    """Stable fingerprint of an explicit seed list (or 'default')."""
-    import hashlib as _hl
-
-    if seeds is None:
-        return "default"
-    return _hl.md5(repr(seeds).encode()).hexdigest()
-
-
-def _cached_model(df: DataFrame, key_tail: tuple, build):
-    """Session-scoped memo for trained model artifacts (IVF/PQ
-    codebooks): key = analyzed-plan fingerprint + input-file
-    fingerprint + the caller's parameter tail."""
-    import hashlib as _hl
-
-    from spark_eventhubs_spark.plans.hubview import cache_dataframe
-
-    plan_fp = _hl.md5(
-        df._jdf.queryExecution().analyzed().toString().encode()
-    ).hexdigest()
-    files_fp = _hl.md5("\x00".join(sorted(df.inputFiles())).encode()).hexdigest()
-    return cache_dataframe(
-        df.sparkSession, key_tail[:1] + (plan_fp, files_fp) + key_tail[1:], build
-    )
-
-
-def _refine_centroids_uncached(
-    df: DataFrame,
-    n_cells: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    seed_cents: list | None,
-) -> list:
-    import numpy as np
-
-    if seed_cents is not None:
-        cents = list(seed_cents)
-    else:
-        rows = sorted(
-            df.where(F.col(id_col) < n_cells)
-            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-            .collect(),
-            key=lambda r: r["cid"],
-        )
-        cents = [(r["cid"], [float(x) for x in r["cvec"]]) for r in rows]
-    base = df.select(F.col(vec_col))
-    if iters > 1:
-        base = base.persist()
-    try:
-        for _ in range(iters):
-            partials = base.mapInPandas(
-                _cell_partials_fn(cents, vec_col),
-                schema="cid long, n long, s array<double>",
-            ).collect()
-            acc: dict = {}
-            for r in partials:
-                n, s = acc.get(r["cid"], (0, None))
-                v = np.asarray(r["s"], dtype=np.float64)
-                acc[r["cid"]] = (n + r["n"], v if s is None else s + v)
-            # empty cells keep their previous centroid
-            cents = [
-                (cid, [float(x) for x in acc[cid][1] / acc[cid][0]])
-                if cid in acc else (cid, cvec)
-                for cid, cvec in cents
-            ]
-    finally:
-        if iters > 1:
-            base.unpersist()
-    return cents
-
-
 def ivf_ann_topk_refined(
     df: DataFrame,
     query_vec_id: int = 0,
@@ -1058,62 +929,30 @@ def ivf_ann_topk_refined(
     n_cells: int = 16,
     n_probe: int = 4,
     iters: int = 1,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN over a k-means-refined codebook: same probe/scan shape
-    as :func:`ivf_ann_topk`, but cells come from
-    :func:`kmeans_refine_centroids` — tighter cells, better recall at
-    the same n_probe. Refined means are data-dependent floats, so no
-    SQL oracle (rows-only check); recall is asserted in tests.
+    as :func:`ivf_ann_topk`, but the cells come from ``iters`` Lloyd
+    updates of ``operators.clustering.kmeans_centroids`` — the
+    integer-sum trainer that :func:`ivf_build_index` also uses, so the
+    codebook is the same whatever the input partitioning, and it is a
+    memoized session artifact. Tighter cells, better recall at the
+    same n_probe. The trained centroids are data-dependent, so no SQL
+    oracle (rows-only check); recall is asserted in tests.
 
-    The seed codebook and the query vector are fetched in ONE bounded
-    collect (both are pushed-down point/range filters on the id
-    column), so the whole operator runs iters + 2 jobs total."""
-    import math
+    The query vector is fetched first, so a missing query fails before
+    any training job runs."""
+    # function-level import: clustering imports this module
+    from spark_eventhubs_spark.operators.clustering import kmeans_centroids
 
-    rows = (
-        df.where((F.col(id_col) < n_cells) | (F.col(id_col) == query_vec_id))
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .collect()
+    _, qvec = _codebook_and_query(df, 0, query_vec_id, id_col, vec_col)
+    cents = kmeans_centroids(
+        df, k=n_cells, iters=iters, id_col=id_col, vec_col=vec_col
     )
-    seeds = sorted(
-        ((r["cid"], [float(x) for x in r["cvec"]]) for r in rows if r["cid"] < n_cells),
-        key=lambda t: t[0],
+    return _ivf_topk(
+        df, cents, qvec, query_vec_id, k, n_probe, id_col, vec_col, "cid"
     )
-    qvec = next(
-        ([float(x) for x in r["cvec"]] for r in rows if r["cid"] == query_vec_id),
-        None,
-    )
-    if qvec is None:
-        raise ValueError(
-            f"ivf_ann_topk_refined: query vector {id_col}={query_vec_id} not found"
-        )
-    cents = kmeans_refine_centroids(
-        df, n_cells, iters, dim, id_col, vec_col, seed_cents=seeds
-    )
-
-    def _dot_py(a, b):
-        acc = 0.0
-        for i in range(len(a)):
-            acc = acc + a[i] * b[i]
-        return acc
-
-    def _cos_py(a, b):
-        na, nb = math.sqrt(_dot_py(a, a)), math.sqrt(_dot_py(b, b))
-        return _dot_py(a, b) / (na * nb) if na and nb else -2.0
-
-    ranked = sorted(
-        ((_cos_py(cvec, qvec), cid) for cid, cvec in cents),
-        key=lambda t: (-t[0], t[1]),
-    )
-    probe_cids = [cid for _, cid in ranked[:n_probe]]
-    scored = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        _ivf_scan_fn(cents, probe_cids, qvec, query_vec_id, id_col, vec_col),
-        schema=f"{id_col} long, score_e6 long",
-    )
-    return scored.orderBy(F.col("score_e6").desc(), F.col(id_col).asc()).limit(k)
 
 
 def oracle_lsh_ann_topk(
@@ -1145,18 +984,53 @@ LIMIT {k}"""
 # ---------------------------------------------------------------------
 
 
-def _cell_write_partitioned(assigned: DataFrame, id_col: str) -> DataFrame:
-    """Partitioning for the index write: shuffle on (cell_id, salt)
-    instead of cell_id alone. A bare repartition(cell_id) funnels the
-    ENTIRE corpus through |cells| writer tasks — at 100 TB, 16 tasks
-    writing 100 TB. The deterministic id-derived salt spreads each
-    cell across ~parallelism/|cells|+ writers; partitionBy still lays
-    rows out under their cell_id dir (several files per cell, which
-    parquet readers handle natively)."""
-    spark = assigned.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    salt = F.pmod(F.col(id_col), F.lit(max(n, 1)))
-    return assigned.repartition(n, F.col("cell_id"), salt)
+def _write_cells(
+    df: DataFrame, cents: list, index_dir: str, mode: str, id_col: str, vec_col: str
+) -> None:
+    """Assign every vector to its nearest ``cents`` cell
+    (:func:`_nearest_cells`) and write it under
+    ``{index_dir}/vectors/cell_id=<cid>/`` with save ``mode`` — the
+    build (overwrite) and append paths share it.
+
+    The write shuffles on (cell_id, salt) instead of cell_id alone. A
+    bare repartition(cell_id) funnels the ENTIRE corpus through |cells|
+    writer tasks — at 100 TB, 16 tasks writing 100 TB. The
+    deterministic id-derived salt spreads each cell across
+    ~parallelism/|cells|+ writers; partitionBy still lays rows out
+    under their cell_id dir (several files per cell, which parquet
+    readers handle natively)."""
+    import numpy as np
+
+    book = _codebook(cents)
+
+    def _assign(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            _, a, _ = _nearest_cells(X, pdf[id_col].to_numpy(), book, id_col)
+            out = pdf[[id_col, vec_col]].copy()
+            out["cell_id"] = book[0][a]
+            yield out
+
+    assigned = df.select(id_col, vec_col).mapInPandas(
+        _assign, f"{id_col} long, {vec_col} array<float>, cell_id long"
+    )
+    n = max(df.sparkSession.sparkContext.defaultParallelism, 1)
+    (
+        assigned.repartition(n, F.col("cell_id"), F.pmod(F.col(id_col), F.lit(n)))
+        .write.mode(mode)
+        .partitionBy("cell_id")
+        .parquet(f"{index_dir}/vectors")
+    )
+
+
+def _read_codebook(spark, index_dir: str) -> list:
+    """An :func:`ivf_build_index` layout's saved codebook."""
+    return [
+        (int(r["cid"]), [float(x) for x in r["cvec"]])
+        for r in spark.read.parquet(f"{index_dir}/codebook").collect()
+    ]
 
 
 def ivf_build_index(
@@ -1176,79 +1050,34 @@ def ivf_build_index(
     instead of scanning everything and discarding.
 
     Centroids use the same deterministic seeding as
-    :func:`ivf_ann_topk` (first ``n_cells`` vectors by id);
-    ``refine_iters > 0`` runs that many Lloyd updates through
-    ``operators.clustering.kmeans_centroids`` first — the
-    INTEGER-SUM variant, so a rebuild on the same corpus produces the
-    bit-identical codebook and cell layout regardless of input
-    partitioning (a float-mean refine drifts in the last ulp and can
-    flip boundary assignments between rebuilds). Assignment runs in
-    the shared exact-arithmetic Arrow kernel, so an indexed query
-    returns bit-identical scores to the scan-time operator. Returns
-    the codebook as [(cid, centroid)].
+    :func:`ivf_ann_topk` (``clustering.kmeans_seeds``: the first
+    ``n_cells`` vectors by id); ``refine_iters > 0`` runs that many
+    Lloyd updates through ``operators.clustering.kmeans_centroids``
+    first — the INTEGER-SUM trainer, so a rebuild on the same corpus
+    produces the bit-identical codebook and cell layout regardless of
+    input partitioning. Assignment runs in the shared exact-arithmetic
+    kernel, so an indexed query returns bit-identical scores to the
+    scan-time operator. Returns the codebook as [(cid, centroid)].
 
-    Scale: the write shuffles on (cell_id, salt) — NOT cell_id alone —
-    via :func:`_cell_write_partitioned`: a bare repartition(cell_id)
-    would funnel the whole corpus through |cells| writer tasks (16
-    writers for 100 TB); the deterministic salt spreads each cell
-    across ~parallelism/|cells| writers while partitionBy still lays
-    rows out under their cell_id dir (several files per cell). The
-    codebook is C rows. Rebuild = rerun; incremental append = assign +
-    append into the same partitioned layout.
+    Scale: the write shuffles on (cell_id, salt), see
+    :func:`_write_cells`. The codebook is C rows. Rebuild = rerun;
+    incremental append = :func:`ivf_append_index`.
     """
-    if refine_iters > 0:
-        # function-level import: clustering imports this module.
-        # kmeans_centroids collects its own seeds, so the unrefined
-        # seed collect below would be a wasted driver job here.
-        from spark_eventhubs_spark.operators.clustering import kmeans_centroids
+    # function-level import: clustering imports this module
+    from spark_eventhubs_spark.operators.clustering import (
+        kmeans_centroids,
+        kmeans_seeds,
+    )
 
+    if refine_iters > 0:
         cents = kmeans_centroids(
             df, k=n_cells, iters=refine_iters, id_col=id_col, vec_col=vec_col
         )
     else:
-        cent_rows = sorted(
-            df.where(F.col(id_col) < n_cells)
-            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-            .collect(),
-            key=lambda r: r["cid"],
-        )
-        cents = [(int(r["cid"]), [float(x) for x in r["cvec"]]) for r in cent_rows]
-
-    import numpy as np
-
-    C = [np.asarray(v, dtype=np.float64) for _, v in cents]
-    cnorms = [_norm_py(v) for _, v in cents]
-    cids_arr = [cid for cid, _ in cents]
-
-    def _assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-            S = np.empty((X.shape[0], len(C)), dtype=np.float64)
-            for j, c in enumerate(C):
-                S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell_id"] = np.asarray(cids_arr, dtype=np.int64)[
-                np.argmax(S, axis=1)
-            ]
-            yield out
-
-    assigned = df.select(id_col, vec_col).mapInPandas(
-        _assign, f"{id_col} long, {vec_col} array<float>, cell_id long"
-    )
-    (
-        _cell_write_partitioned(assigned, id_col)
-        .write.mode("overwrite")
-        .partitionBy("cell_id")
-        .parquet(f"{index_dir}/vectors")
-    )
-    spark = df.sparkSession
-    spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents], f"cid long, cvec array<double>"
+        cents = kmeans_seeds(df, n_cells, id_col, vec_col)
+    _write_cells(df, cents, index_dir, "overwrite", id_col, vec_col)
+    df.sparkSession.createDataFrame(
+        cents, "cid long, cvec array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/codebook")
     return cents
 
@@ -1270,35 +1099,17 @@ def ivf_query_indexed(
     plan; at 100 TB this is the difference between reading 25% and
     100% of the corpus). Scoring reuses the exact sequential-fold
     kernel, so results are bit-identical to :func:`ivf_ann_topk` over
-    the same data."""
-    import math
-
+    the same data. A zero-norm query is named by ``exclude_id`` (or
+    as ``query``)."""
     import numpy as np
 
-    cents = [
-        (int(r["cid"]), [float(x) for x in r["cvec"]])
-        for r in spark.read.parquet(f"{index_dir}/codebook").collect()
-    ]
     qv = [float(x) for x in qvec]
-
-    def _dot_py(a, b):
-        acc = 0.0
-        for i in range(len(a)):
-            acc = acc + a[i] * b[i]
-        return acc
-
-    def _cos_py(a, b):
-        na, nb = math.sqrt(_dot_py(a, a)), math.sqrt(_dot_py(b, b))
-        return _dot_py(a, b) / (na * nb) if na and nb else -2.0
-
-    ranked = sorted(
-        ((_cos_py(cvec, qv), cid) for cid, cvec in cents),
-        key=lambda t: (-t[0], t[1]),
+    probe_cids = _probe_cells(
+        _read_codebook(spark, index_dir), qv, n_probe,
+        "query" if exclude_id is None else exclude_id, id_col,
     )
-    probe_cids = [cid for _, cid in ranked[:n_probe]]
-
     qarr = np.asarray(qv, dtype=np.float64)
-    qn = _norm_py(qv)
+    qn = _norm_py(qv)  # non-zero: _probe_cells refuses a zero-norm query
 
     def _score(batches):
         import pandas as pd
@@ -1307,9 +1118,8 @@ def ivf_query_indexed(
             if not len(pdf):
                 continue
             ids = pdf[id_col].to_numpy()
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-            s = _seq_dot_np(X, qarr) / (rn * qn)
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            s = _seq_dot_np(X, qarr) / (_row_norms(X, ids, id_col) * qn)
             yield pd.DataFrame(
                 {id_col: ids, "score_e6": np.floor(s * 1e6).astype(np.int64)}
             )
@@ -1338,42 +1148,8 @@ def ivf_append_index(
     path: each micro-batch/backfill appends its assignments; queries
     see the union immediately; rebuild with :func:`ivf_build_index`
     only when the codebook itself should move."""
-    import numpy as np
-
-    spark = df.sparkSession
-    cents = [
-        (int(r["cid"]), [float(x) for x in r["cvec"]])
-        for r in spark.read.parquet(f"{index_dir}/codebook").collect()
-    ]
-    cents.sort(key=lambda t: t[0])
-    C = [np.asarray(v, dtype=np.float64) for _, v in cents]
-    cnorms = [_norm_py(v) for _, v in cents]
-    cids_arr = [cid for cid, _ in cents]
-
-    def _assign(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            rn = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
-            S = np.empty((X.shape[0], len(C)), dtype=np.float64)
-            for j, c in enumerate(C):
-                S[:, j] = _seq_dot_np(X, c) / (rn * cnorms[j])
-            out = pdf[[id_col, vec_col]].copy()
-            out["cell_id"] = np.asarray(cids_arr, dtype=np.int64)[
-                np.argmax(S, axis=1)
-            ]
-            yield out
-
-    assigned = df.select(id_col, vec_col).mapInPandas(
-        _assign, f"{id_col} long, {vec_col} array<float>, cell_id long"
-    )
-    (
-        _cell_write_partitioned(assigned, id_col)
-        .write.mode("append")
-        .partitionBy("cell_id")
-        .parquet(f"{index_dir}/vectors")
-    )
+    cents = _read_codebook(df.sparkSession, index_dir)
+    _write_cells(df, cents, index_dir, "append", id_col, vec_col)
 
 
 # ---- product quantization (PQ) ----
@@ -1387,8 +1163,9 @@ def _pq_partials_fn(codebooks, vec_col):
     """mapInPandas kernel for PQ training: per Arrow batch, assign every
     row's m subvectors to their nearest (L2) subspace centroid and emit
     per-(subspace, centroid) ``(n, sum_vec)`` partials — the same
-    driver-merge treeAggregate shape as :func:`_cell_partials_fn`, so
-    one job trains all m codebooks simultaneously. Output is bounded by
+    driver-merge treeAggregate shape as the k-means partials
+    (``clustering.kmeans_partials``), so one job trains all m
+    codebooks simultaneously. Output is bounded by
     m * n_centroids rows per batch."""
     import numpy as np
 
@@ -1427,79 +1204,60 @@ def pq_train(
     dim: int = DIM,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed_rows: list | None = None,
 ) -> list:
     """Train PQ codebooks: split each vector into ``m`` subvectors and
     run per-subspace k-means, all subspaces in ONE distributed pass per
     Lloyd iteration (the :func:`_pq_partials_fn` kernel + driver
     merge). Seeds are the first ``n_centroids`` vectors' subvectors
-    (deterministic). Returns ``codebooks[m][n_centroids][dim//m]``.
+    (``clustering.kmeans_seeds``, deterministic). Returns
+    ``codebooks[m][n_centroids][dim//m]``.
 
-    Scale: identical properties to :func:`kmeans_refine_centroids` —
-    no vector shuffle, per-iteration traffic is m * n_centroids *
-    (dim/m) partial sums = dim * n_centroids doubles total.
+    Scale: the shape of ``clustering.kmeans_centroids`` — no vector
+    shuffle, per-iteration traffic is m * n_centroids * (dim/m)
+    partial sums = dim * n_centroids doubles total.
 
     The trained codebooks are a session-scoped INGEST ARTIFACT (r13,
-    same contract as ``clustering.kmeans_centroids``), memoized via
-    ``cache_dataframe`` keyed on analyzed-plan + input-file
-    fingerprints + every training parameter + a seed fingerprint;
-    the bench's artifact-build counter records every build."""
-    seed_key = _seed_fp(
-        None if seed_rows is None
-        else [(r["cid"], tuple(float(x) for x in r["cvec"])) for r in seed_rows]
-    )
-    return _cached_model(
-        df,
-        ("pq_codebooks", m, n_centroids, iters, dim, id_col, vec_col, seed_key),
-        lambda: _pq_train_uncached(
-            df, m, n_centroids, iters, dim, id_col, vec_col, seed_rows
-        ),
-    )
-
-
-def _pq_train_uncached(
-    df: DataFrame,
-    m: int,
-    n_centroids: int,
-    iters: int,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-    seed_rows: list | None,
-) -> list:
+    same contract as ``clustering.kmeans_centroids``), memoized by
+    ``plans.hubview.cached_model`` on analyzed-plan + input-file
+    fingerprints + every training parameter; the bench's
+    artifact-build counter records every build."""
     import numpy as np
 
-    if seed_rows is None:
-        seed_rows = sorted(
-            df.where(F.col(id_col) < n_centroids)
-            .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-            .collect(),
-            key=lambda r: r["cid"],
+    from spark_eventhubs_spark.operators.clustering import kmeans_seeds
+    from spark_eventhubs_spark.plans.hubview import cached_model
+
+    def _train() -> list:
+        d_sub = dim // m
+        seeds = np.array(
+            [v for _, v in kmeans_seeds(df, n_centroids, id_col, vec_col)],
+            dtype=np.float64,
         )
-    d_sub = dim // m
-    seeds = np.stack([np.asarray(r["cvec"], dtype=np.float64) for r in seed_rows])
-    codebooks = [seeds[:, s * d_sub:(s + 1) * d_sub].copy() for s in range(m)]
-    base = df.select(F.col(vec_col))
-    if iters > 1:
-        base = base.persist()
-    try:
-        for _ in range(iters):
-            partials = base.mapInPandas(
-                _pq_partials_fn(codebooks, vec_col),
-                schema="s long, c long, n long, v array<double>",
-            ).collect()
-            acc: dict = {}
-            for r in partials:
-                key = (r["s"], r["c"])
-                n, v = acc.get(key, (0, None))
-                vv = np.asarray(r["v"], dtype=np.float64)
-                acc[key] = (n + r["n"], vv if v is None else v + vv)
-            for (s, c), (n, v) in acc.items():
-                codebooks[s][c] = v / n  # empty cells keep their seed
-    finally:
+        codebooks = [seeds[:, s * d_sub:(s + 1) * d_sub].copy() for s in range(m)]
+        base = df.select(F.col(vec_col))
         if iters > 1:
-            base.unpersist()
-    return [cb.tolist() for cb in codebooks]
+            base = base.persist()
+        try:
+            for _ in range(iters):
+                partials = base.mapInPandas(
+                    _pq_partials_fn(codebooks, vec_col),
+                    schema="s long, c long, n long, v array<double>",
+                ).collect()
+                acc: dict = {}
+                for r in partials:
+                    key = (r["s"], r["c"])
+                    n, v = acc.get(key, (0, None))
+                    vv = np.asarray(r["v"], dtype=np.float64)
+                    acc[key] = (n + r["n"], vv if v is None else v + vv)
+                for (s, c), (n, v) in acc.items():
+                    codebooks[s][c] = v / n  # empty cells keep their seed
+        finally:
+            if iters > 1:
+                base.unpersist()
+        return [cb.tolist() for cb in codebooks]
+
+    return cached_model(
+        df, ("pq_codebooks", m, n_centroids, iters, dim, id_col, vec_col), _train
+    )
 
 
 def _pq_adc_fn(codebooks, qvec, query_vec_id, id_col, vec_col):
@@ -1570,23 +1328,8 @@ def pq_topk_rerank(
     returned score_e6 values are directly comparable to brute force.
     Scale: codebook + query in task closures (no join), shortlist is a
     TakeOrdered of integer scores, re-rank touches ``shortlist`` rows."""
-    rows = (
-        df.where((F.col(id_col) < n_centroids) | (F.col(id_col) == query_vec_id))
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .collect()
-    )
-    seeds = sorted((r for r in rows if r["cid"] < n_centroids), key=lambda r: r["cid"])
-    qvec = next(
-        ([float(x) for x in r["cvec"]] for r in rows if r["cid"] == query_vec_id),
-        None,
-    )
-    if qvec is None:
-        raise ValueError(
-            f"pq_topk_rerank: query vector {id_col}={query_vec_id} not found"
-        )
-    codebooks = pq_train(
-        df, m, n_centroids, iters, dim, id_col, vec_col, seed_rows=seeds
-    )
+    _, qvec = _codebook_and_query(df, 0, query_vec_id, id_col, vec_col)
+    codebooks = pq_train(df, m, n_centroids, iters, dim, id_col, vec_col)
     adc = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         _pq_adc_fn(codebooks, qvec, query_vec_id, id_col, vec_col),
         schema=f"{id_col} long, adc_e6 long",

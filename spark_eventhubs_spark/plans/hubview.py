@@ -216,6 +216,25 @@ def cache_dataframe(spark: SparkSession, key: tuple, build) -> DataFrame:
     return df
 
 
+def cached_model(df: DataFrame, key_tail: tuple, build):
+    """Session-scoped memo of a value derived from ``df``'s input — a
+    trained codebook, a corpus count. The key is ``key_tail[0]``, then
+    the analyzed-plan fingerprint and the input-file fingerprint, then
+    the rest of ``key_tail``. The plan string alone misses files
+    appended to or overwritten under the same path, so the key also
+    hashes ``df.inputFiles()`` (a metadata-only listing; empty for
+    non-file plans, where the plan string suffices)."""
+    import hashlib
+
+    plan_fp = hashlib.md5(
+        df._jdf.queryExecution().analyzed().toString().encode()
+    ).hexdigest()
+    files_fp = hashlib.md5("\x00".join(sorted(df.inputFiles())).encode()).hexdigest()
+    return cache_dataframe(
+        df.sparkSession, key_tail[:1] + (plan_fp, files_fp) + key_tail[1:], build
+    )
+
+
 def clear_cached_plans(spark: SparkSession, prefix: str | None = None) -> None:
     """Drop memoized DataFrame plans for a session (all, or only keys
     whose first element equals ``prefix``). This is also the eviction

@@ -2187,19 +2187,20 @@ def embed_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# refined means are data-dependent floats — no SQL oracle (rows-only);
+# refined centroids are data-dependent — no SQL oracle (rows-only);
 # recall vs brute force asserted in tests
 @register(
     "embed_ivf_refined",
     "SELECT CAST(10 AS BIGINT) AS k, TRUE AS recall_ok",
 )
 def embed_ivf_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN over a one-iteration k-means-refined codebook: the
-    distributed Lloyd step is an Arrow-batched argmax assignment + one
-    16-group avg aggregation per iteration (shuffle carries 16 x dim
-    partial sums, never vectors).
+    """IVF ANN over a one-iteration k-means-refined codebook, trained by
+    the integer-sum Lloyd trainer (``clustering.kmeans_centroids``):
+    each step is one Arrow-batched argmax assignment pass emitting
+    <= 16 ``(cid, n, int_sum)`` partials per batch, merged exactly on
+    the driver (16 x dim integers travel, never vectors).
 
-    The refined means are data-dependent floats, so the top-k rows have
+    The refined centroids are data-dependent, so the top-k rows have
     no SQL twin — instead the query emits its VERIFIABLE CONTRACT:
     recall@10 of the refined-IVF result against the exact brute-force
     top-10, required >= 0.6 (measured 0.9-1.0 at sf0.001-0.1; 0.6
@@ -3844,7 +3845,7 @@ def corpus_curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 (verdict item 4): the prescribed carry_cols fusion — gopher
     keep riding chunk_dedup's production as a carried group key — was
     implemented and A/B-measured at BOTH sf0.1 (1.21 -> 1.37 s median)
-    and sf10 (20.0 -> 24.1 s median, scripts/curation_ab_probe.py):
+    and sf10 (20.0 -> 24.1 s median, interleaved A/B):
     SLOWER at both scales, because the gate leg is a narrow parallel
     scan that overlaps the chunk leg's shuffles, while the carried key
     serializes the legs and adds bytes to the chunk-key exchange. The

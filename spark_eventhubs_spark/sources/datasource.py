@@ -1086,8 +1086,21 @@ class EventHubsDataSource(DataSource):
 
 
 def register_eventhubs(spark) -> None:
-    """Register format("eventhubs") on this session."""
-    spark.dataSource.register(EventHubsDataSource)
+    """Register format("eventhubs") on this session. Spark checks the
+    name through the JVM-active session and refuses it as already
+    existing when that other session registered it, so the
+    registration runs with this session active, and the previous
+    active session is restored afterwards."""
+    jsession = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = jsession.getActiveSession()
+    jsession.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(EventHubsDataSource)
+    finally:
+        if prev.isDefined():
+            jsession.setActiveSession(prev.get())
+        else:
+            jsession.clearActiveSession()
 
 
 def read_eventhubs(spark, conf):

@@ -18,7 +18,6 @@ import pytest
 
 from spark_eventhubs_spark.plans.hubview import clear_cached_plans, configure_session
 from spark_eventhubs_spark.queries import oracle_sql, queries
-from spark_eventhubs_spark.sources.datasource import register_eventhubs
 
 _spec = importlib.util.spec_from_file_location(
     "check_oracle",
@@ -31,16 +30,6 @@ _spec.loader.exec_module(check_oracle)
 @pytest.fixture(scope="module")
 def catalog_spark(spark):
     s = configure_session(spark.newSession())
-    # Spark refuses to register a Python data source on a session while
-    # the active session already has one of that name (the lookup reads
-    # it as built in), so format("eventhubs") is registered with the new
-    # session active; later registrations on it then pass.
-    jsession = spark._jvm.org.apache.spark.sql.SparkSession
-    jsession.setActiveSession(s._jsparkSession)
-    try:
-        register_eventhubs(s)
-    finally:
-        jsession.setActiveSession(spark._jsparkSession)
     yield s
     clear_cached_plans(s)
 

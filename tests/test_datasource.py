@@ -61,6 +61,33 @@ def test_full_scan_matches_hub_view(spark, hub_dir):
     assert got == expect
 
 
+def test_read_on_a_session_created_after_registration(spark, hub_dir):
+    """The hub_dir fixture registered format("eventhubs") on ``spark``;
+    a newer session registers and reads it too. Spark checks the name
+    through the JVM-active session, which ``register_eventhubs`` sets
+    to the target for the call and then restores."""
+    from spark_eventhubs_spark import EventHubsConf
+    from spark_eventhubs_spark.connstr import file_hub_connection_string
+    from spark_eventhubs_spark.sources import read_eventhubs
+
+    jsession = spark._jvm.org.apache.spark.sql.SparkSession
+    active = jsession.getActiveSession().get()
+    conf = EventHubsConf(file_hub_connection_string(
+        os.path.dirname(hub_dir), os.path.basename(hub_dir)
+    ))
+
+    def rows(df):
+        return sorted(
+            (r["partition"], r["sequenceNumber"], bytes(r["body"]))
+            for r in df.collect()
+        )
+
+    got = rows(read_eventhubs(spark.newSession(), conf))
+    assert len(got) == 1000
+    assert got == rows(_read(spark, hub_dir))
+    assert jsession.getActiveSession().get().equals(active)
+
+
 def test_bounded_scan_and_seq_contiguity(spark, hub_dir):
     df = _read(
         spark, hub_dir,

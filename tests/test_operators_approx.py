@@ -231,8 +231,7 @@ def test_count_cached_sees_appended_files(spark, tmp_path):
     not just the analyzed-plan string — appending to a parquet path
     and re-reading it in the same session must return the fresh count
     (auto_n_planes / auto-k would otherwise silently diverge from the
-    oracle's fresh COUNT(*)). Entries from dead applications are
-    pruned so the module-level memo cannot grow across sessions."""
+    oracle's fresh COUNT(*))."""
     from spark_eventhubs_spark.operators import dedup as D
 
     p = str(tmp_path / "grow")
@@ -242,7 +241,3 @@ def test_count_cached_sees_appended_files(spark, tmp_path):
     assert D._count_cached(spark.read.parquet(p)) == 17
     spark.range(3).write.mode("overwrite").parquet(p)
     assert D._count_cached(spark.read.parquet(p)) == 3
-    app = spark.sparkContext.applicationId
-    D._COUNT_MEMO[("dead-app", "x", "y")] = 999
-    D._count_cached(spark.range(5))  # any miss prunes dead apps
-    assert all(k[0] == app for k in D._COUNT_MEMO)

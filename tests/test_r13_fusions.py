@@ -185,33 +185,3 @@ def test_pq_codebooks_memoized_per_session(spark):
     # a different subspace count is a different model: must rebuild
     pq_train(vecs, m=4, n_centroids=4, iters=1, dim=8)
     assert artifact_build_count() == n2 + 1
-
-
-def test_refined_centroids_memoized_and_seed_keyed(spark):
-    from spark_eventhubs_spark.operators.similarity import (
-        kmeans_refine_centroids,
-    )
-    from spark_eventhubs_spark.plans.hubview import (
-        artifact_build_count,
-        clear_cached_plans,
-    )
-
-    vecs = spark.createDataFrame(
-        [(i, [float((i * 5 + j) % 6) for j in range(4)]) for i in range(24)],
-        "vec_id long, embedding array<float>",
-    )
-    clear_cached_plans(spark)
-    n0 = artifact_build_count()
-    c1 = kmeans_refine_centroids(vecs, n_cells=4, iters=1, dim=4)
-    n1 = artifact_build_count()
-    c2 = kmeans_refine_centroids(vecs, n_cells=4, iters=1, dim=4)
-    assert c1 == c2
-    assert n1 - n0 == 1
-    assert artifact_build_count() == n1, "repeat call must be a memo hit"
-    # explicit seeds that differ from the defaults are a different model
-    seeds = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0]),
-             (2, [0.0, 0.0, 1.0, 0.0]), (3, [0.0, 0.0, 0.0, 1.0])]
-    c3 = kmeans_refine_centroids(vecs, n_cells=4, iters=1, dim=4,
-                                 seed_cents=seeds)
-    assert artifact_build_count() == n1 + 1
-    assert c3 != c1
