@@ -90,18 +90,11 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entrymod
+    from spark_eventhubs_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-oracle")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = build_session("check-oracle", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

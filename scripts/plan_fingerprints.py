@@ -180,20 +180,12 @@ def compute_all(spark, sf_dir: str = SF_DIR) -> dict[str, list[str]]:
 def main() -> int:
     write = "--write" in sys.argv
 
-    from pyspark.sql import SparkSession
+    from spark_eventhubs_spark.session import build_session
 
-    from spark_eventhubs_spark.plans.hubview import configure_session
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("plan-fingerprints")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    # the test fixture's session: the fingerprints depend on its 8 cores
+    # and 8 shuffle partitions
+    spark = build_session("plan-fingerprints", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    configure_session(spark)
     got = compute_all(spark)
     if write:
         with open(GOLDEN, "w") as fh:

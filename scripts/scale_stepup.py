@@ -289,7 +289,7 @@ def main() -> None:
                 # shuffle registrations — at 30x that pressure showed up
                 # as a phantom superlinear tail on search_hybrid_rrf
                 # (7.67 s in the r6 sweep vs 3.12 s isolated, same data,
-                # same code; scripts/rrf_leg_probe.py is the evidence).
+                # same code; NOTES_r07.md has the per-leg evidence).
                 # A GC point before each family keeps the measurement
                 # about the family, not its predecessors' garbage.
                 # Median-of-N runs (r7 verdict item 5): single-shot

@@ -27,8 +27,9 @@ DEFAULT_BUCKETS = 8
 # Auto-sizing for the PageRank edge artifact (round-9: the fixed
 # 8-bucket layout capped every steady-state iteration at 8 scan+join
 # tasks — measured 15.4 s median at 30x data vs 9.5 s with 64 buckets
-# on the same corpus, scripts/pagerank_iterate_probe.py — the same
-# fixed-parameter-breaks-linearity class as semdedup's fixed k).
+# on the same corpus, NOTES_r09.md item 3; re-measure with
+# ``scripts/probe.py graph_copurchase_pagerank`` on a replica — the
+# same fixed-parameter-breaks-linearity class as semdedup's fixed k).
 # Bucket SIZE is the constant, bucket COUNT scales: the target holds
 # per-bucket edge rows ~1.5M. Edge cardinality is estimated from the
 # lineitem row count (distinct co-purchase pairs per row are bounded

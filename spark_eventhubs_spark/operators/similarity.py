@@ -845,7 +845,8 @@ def knn_join(
     corpus batch scores against all queries with the exact-arithmetic
     :func:`_seq_dot_np` fold — replacing |queries| interpreted
     higher-order cosine evaluations per row while keeping
-    floor(cos*1e6) bit-equal to the SQL oracle.
+    floor(cos*1e6) bit-equal to the SQL oracle. A zero-norm query or
+    corpus row is refused by id (:func:`_zero_norm`).
     """
     import numpy as np
 
@@ -855,7 +856,7 @@ def knn_join(
         .select(id_col, vec_col)
         .collect()
     ]
-    qnorms = {qid: _norm_py(list(qv)) for qid, qv in qs}
+    qnorms = {qid: _checked_norm(list(qv), id_col, qid) for qid, qv in qs}
 
     def _score_fn(batches):
         import pandas as pd
@@ -865,7 +866,7 @@ def knn_join(
                 continue
             ids = pdf[id_col].to_numpy()
             X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            xnorm = np.sqrt(np.cumsum(X * X, axis=1)[:, -1])
+            xnorm = _row_norms(X, ids, id_col)
             frames = []
             for qid, qv in qs:
                 s = _seq_dot_np(X, qv) / (xnorm * qnorms[qid])
@@ -1327,8 +1328,10 @@ def pq_topk_rerank(
     sequential-fold arithmetic as :func:`brute_force_topk`, so the
     returned score_e6 values are directly comparable to brute force.
     Scale: codebook + query in task closures (no join), shortlist is a
-    TakeOrdered of integer scores, re-rank touches ``shortlist`` rows."""
+    TakeOrdered of integer scores, re-rank touches ``shortlist`` rows.
+    A zero-norm query is refused by id on the driver, before training."""
     _, qvec = _codebook_and_query(df, 0, query_vec_id, id_col, vec_col)
+    _checked_norm(qvec, id_col, query_vec_id)
     codebooks = pq_train(df, m, n_centroids, iters, dim, id_col, vec_col)
     adc = df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         _pq_adc_fn(codebooks, qvec, query_vec_id, id_col, vec_col),

@@ -2875,11 +2875,10 @@ def _run_stream_to_memory(df, name: str, available_now: bool = True,
             .option("checkpointLocation", ck)
         )
         # q.stop() must run on EVERY exit path — including
-        # awaitTermination raising StreamingQueryException or the debug
-        # loop throwing — before the outer finally releases (rmtrees)
-        # the checkpoint out from under a still-registered query; stop
-        # on an already-terminated query is a no-op, so the inner
-        # finally is unconditional.
+        # awaitTermination raising StreamingQueryException — before the
+        # outer finally releases (rmtrees) the checkpoint out from under
+        # a still-registered query; stop on an already-terminated query
+        # is a no-op, so the inner finally is unconditional.
         if available_now:
             q = writer.trigger(availableNow=True).start()
             try:
@@ -2900,23 +2899,6 @@ def _run_stream_to_memory(df, name: str, available_now: bool = True,
                 # drain itself hits (a failed query must surface as an
                 # error, never as a partial sink aggregated silently).
                 _threaded_drain(q.processAllAvailable, 300, name)
-                if os.environ.get("SEH_STREAM_DEBUG"):
-                    # drain forensics (bench-context variance hunts):
-                    # one line per micro-batch with the engine's own
-                    # phase timings. Off unless explicitly requested.
-                    import json as _json
-                    import sys as _sys
-
-                    for p in q.recentProgress:
-                        print(
-                            f"SEH_STREAM_DEBUG {name} "
-                            + _json.dumps({
-                                "batchId": p["batchId"],
-                                "rows": p["numInputRows"],
-                                "durationMs": p["durationMs"],
-                            }),
-                            file=_sys.stderr, flush=True,
-                        )
             finally:
                 q.stop()
     finally:
@@ -3583,8 +3565,8 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry-over shape and oracle-exactness pin the first term; RocksDB
     (worse: full-state rewrites favor the in-memory store), 16/4
     state partitions, and trigger cadence (50 ms -> 5 ms, kept:
-    -1.3 s pure idle) were all measured
-    (scripts/profile_sessionize.py)."""
+    -1.3 s pure idle) were all measured (OPTIMIZATION_r13.md;
+    ``scripts/probe.py stream_sessionize`` gives the phase sums)."""
     from spark_eventhubs_spark.streaming.stateful import streaming_sessionize
 
     path = _sessionize_hub_dir(spark, sf_dir)

@@ -57,6 +57,7 @@ PYTHONPATH; tests/bench set PYTHONPATH before session start).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import logging
 import os
@@ -1031,16 +1032,26 @@ class EventHubsBatchWriter(EventHubsWriterBase, DataSourceWriter):
 class EventHubsStreamWriter(EventHubsWriterBase, DataSourceStreamWriter):
     """At-least-once sink with batchId idempotence
     (ref EventHubsSink.addBatch skips batchId <= latestBatchId,
-    EventHubsSink.scala:35-42)."""
+    EventHubsSink.scala:35-42).
+
+    Batch ids count per query, so the ``_commits/epoch-*`` ledger is
+    keyed by the query's checkpoint, which Spark passes as the
+    ``checkpointLocation`` option when it is set with ``.option``: two
+    queries writing one hub each keep their own batches. Without that
+    option the marker is hub-wide."""
 
     def commit(self, messages, batchId: int) -> None:
         cdir = os.path.join(self.hub_dir, "_commits")
         os.makedirs(cdir, exist_ok=True)
-        marker = os.path.join(cdir, f"epoch-{batchId:010d}")
+        epoch = f"{batchId:010d}"
+        ck = self.options.get("checkpointlocation")
+        if ck:
+            epoch = f"{hashlib.sha1(ck.encode()).hexdigest()[:16]}-{epoch}"
+        marker = os.path.join(cdir, f"epoch-{epoch}")
         if os.path.exists(marker):  # re-delivered batch: drop staged rows
             self.abort(messages)
             return
-        self._commit_staged(messages, f"e{batchId:010d}")
+        self._commit_staged(messages, f"e{epoch}")
         open(marker, "w").close()
 
     def abort(self, messages, batchId: Optional[int] = None) -> None:
@@ -1048,8 +1059,6 @@ class EventHubsStreamWriter(EventHubsWriterBase, DataSourceStreamWriter):
 
 
 def _hash_partition_key(key: str, partition_count: int) -> int:
-    import hashlib
-
     h = int.from_bytes(hashlib.md5(key.encode()).digest()[:8], "big")
     return h % partition_count
 
@@ -1175,20 +1184,13 @@ def materialize_hub(spark, sf_dir_or_events: str, hub_dir: str,
 _META_DIRS = ("_commits", "_batch_commits", "_cursors", "_receive")
 
 
-def compact_hub_log(spark, hub_dir: str, partition_count: int = 4) -> dict:
-    """Compact the hub log: fold each partition's accumulated
-    ``commit-*.parquet`` files (one per streaming micro-batch commit —
-    the classic small-files problem of any streaming sink) back into
-    one sorted file per partition.
-
-    Rewrites via a staging dir then swaps, preserving the metadata
-    side-dirs (``_META_DIRS``) and the two invariants planning depends on: per-partition
-    seqNo density and footer-stat min/max (files stay sorted by
-    sequenceNumber). Readers planned BEFORE the swap may fail and must
-    replan — same contract as any file-compaction job; at scale this
-    runs partition-aligned with no shuffle wider than the repartition.
-    Returns {partition_id: n_files_before}.
-    """
+def _rewrite_hub_log(spark, hub_dir: str, partition_count: int, tag: str,
+                     keep=None) -> None:
+    """Rewrite the hub log as one file per partition, sorted by
+    sequenceNumber, keeping the rows where the Column ``keep`` holds
+    (all rows when None). Writes to ``<hub>.<tag>-tmp``, carries the
+    metadata side-dirs (``_META_DIRS``) over, swaps the directories and
+    evicts the old paths' footer-stat memo slots."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -1197,26 +1199,19 @@ def compact_hub_log(spark, hub_dir: str, partition_count: int = 4) -> dict:
 
     configure_session(spark)
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    before = {}
-    for name in os.listdir(hub_dir):
-        if name.startswith("partition="):
-            pid = int(name.split("=", 1)[1])
-            before[pid] = len([
-                f for f in os.listdir(os.path.join(hub_dir, name))
-                if f.endswith(".parquet")
-            ])
-    tmp = hub_dir.rstrip("/") + ".compact-tmp"
-    old = hub_dir.rstrip("/") + ".pre-compact"
+    df = spark.read.parquet(hub_dir)
+    if keep is not None:
+        df = df.where(keep)
+    tmp = hub_dir.rstrip("/") + f".{tag}-tmp"
+    old = hub_dir.rstrip("/") + f".pre-{tag}"
     shutil.rmtree(tmp, ignore_errors=True)
     (
-        spark.read.parquet(hub_dir)
-        .repartition(partition_count, F.col("partition"))
+        df.repartition(partition_count, F.col("partition"))
         .sortWithinPartitions("partition", "sequenceNumber")
         .write.mode("overwrite")
         .partitionBy("partition")
         .parquet(tmp)
     )
-    # carry metadata side-dirs over before the swap
     for meta in _META_DIRS:
         src = os.path.join(hub_dir, meta)
         if os.path.isdir(src):
@@ -1226,6 +1221,28 @@ def compact_hub_log(spark, hub_dir: str, partition_count: int = 4) -> dict:
     os.rename(tmp, hub_dir)
     shutil.rmtree(old, ignore_errors=True)
     _evict_rg_stats(hub_dir)
+
+
+def compact_hub_log(spark, hub_dir: str, partition_count: int = 4) -> dict:
+    """Compact the hub log: fold each partition's accumulated
+    ``commit-*.parquet`` files (one per streaming micro-batch commit —
+    the classic small-files problem of any streaming sink) back into
+    one sorted file per partition.
+
+    Rewrites via a staging dir then swaps (:func:`_rewrite_hub_log`),
+    preserving the metadata side-dirs and the two invariants planning
+    depends on: per-partition seqNo density and footer-stat min/max
+    (files stay sorted by sequenceNumber). Readers planned BEFORE the
+    swap may fail and must replan — same contract as any
+    file-compaction job; at scale this runs partition-aligned with no
+    shuffle wider than the repartition. Returns {partition_id:
+    n_files_before}.
+    """
+    before = {
+        pid: len([f for f in os.listdir(d) if f.endswith(".parquet")])
+        for pid, d in _partition_dirs(hub_dir).items()
+    }
+    _rewrite_hub_log(spark, hub_dir, partition_count, "compact")
     return before
 
 
@@ -1246,11 +1263,7 @@ def truncate_hub_log(
     footer stats cannot represent without rows). Returns the rows
     dropped per partition.
     """
-    import shutil
-
     from pyspark.sql import functions as F
-
-    from spark_eventhubs_spark.plans.hubview import configure_session
 
     bounds = hub_bounds(hub_dir, partition_count)
     for pid, k in keep_from.items():
@@ -1260,41 +1273,17 @@ def truncate_hub_log(
                 f"truncating partition {pid} to {k} would empty it "
                 f"(latest {hi}); full truncation is unsupported"
             )
-    configure_session(spark)
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     keep_map = F.create_map(
         *[x for pid, k in sorted(keep_from.items())
           for x in (F.lit(str(pid)), F.lit(k))]
     )
-    df = spark.read.parquet(hub_dir)
-    kept = df.where(
-        F.col("sequenceNumber")
-        >= F.coalesce(F.element_at(keep_map, F.col("partition").cast("string")), F.lit(0))
+    keep = F.col("sequenceNumber") >= F.coalesce(
+        F.element_at(keep_map, F.col("partition").cast("string")), F.lit(0)
     )
     dropped_rows = {
         int(r["partition"]): r["n"]
-        for r in df.where(
-            F.col("sequenceNumber")
-            < F.coalesce(F.element_at(keep_map, F.col("partition").cast("string")), F.lit(0))
-        ).groupBy("partition").agg(F.count("*").alias("n")).collect()
+        for r in spark.read.parquet(hub_dir).where(~keep)
+        .groupBy("partition").agg(F.count("*").alias("n")).collect()
     }
-    tmp = hub_dir.rstrip("/") + ".truncate-tmp"
-    old = hub_dir.rstrip("/") + ".pre-truncate"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        kept.repartition(partition_count, F.col("partition"))
-        .sortWithinPartitions("partition", "sequenceNumber")
-        .write.mode("overwrite")
-        .partitionBy("partition")
-        .parquet(tmp)
-    )
-    for meta in _META_DIRS:
-        src = os.path.join(hub_dir, meta)
-        if os.path.isdir(src):
-            shutil.copytree(src, os.path.join(tmp, meta), dirs_exist_ok=True)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(hub_dir, old)
-    os.rename(tmp, hub_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    _evict_rg_stats(hub_dir)
+    _rewrite_hub_log(spark, hub_dir, partition_count, "truncate", keep)
     return dropped_rows

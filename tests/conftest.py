@@ -15,20 +15,10 @@ SF_DIR_T2 = os.environ.get("SPARK_GRAFT_T2_SF_DIR", "/root/testdata/sf0.01")
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    from spark_eventhubs_spark.session import build_session
 
-    from spark_eventhubs_spark.plans.hubview import configure_session
-
-    s = (
-        SparkSession.builder.master("local[8]")
-        .appName("spark-eventhubs-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    s = build_session("spark-eventhubs-tests", master="local[8]", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
-    configure_session(s)
     yield s
     s.stop()
 

@@ -76,7 +76,7 @@ def test_auto_edge_buckets_scales_with_corpus():
     """The edge artifact's bucket count derives from corpus size (a
     fixed count caps every PageRank iteration at n_buckets tasks:
     measured 15.4 s -> 9.5 s at 30x data moving 8 -> 64 buckets,
-    scripts/pagerank_iterate_probe.py). Floor 8 keeps every
+    NOTES_r09.md item 3). Floor 8 keeps every
     oracle-checked sf (<= sf0.1, ~600k lineitem rows) on the
     historical layout; growth is power-of-two with per-bucket edge
     rows bounded by EDGE_ROWS_PER_BUCKET; cap 256."""

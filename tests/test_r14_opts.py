@@ -163,10 +163,11 @@ def _index(spark, path, **kw):
 
 @pytest.mark.parametrize("vec_id", [17, 2])  # 2 is also a seed centroid
 def test_zero_norm_row_is_refused_by_every_leg(spark, tmp_path, vec_id):
-    """A zero-norm corpus row has no cosine: every codebook consumer
-    and the JVM brute-force leg (ANSI division) fail rather than rank
-    a NaN as a score or let it win an argmax. Row 2 is also a seed
-    centroid, which the legs seeded by ``kmeans_seeds`` name as cid=2."""
+    """A zero-norm corpus row has no cosine: every codebook consumer,
+    ``knn_join`` and the JVM brute-force leg (ANSI division) fail rather
+    than rank a NaN as a score or let it win an argmax. Row 2 is also a
+    seed centroid, which the legs seeded by ``kmeans_seeds`` name as
+    cid=2, and a ``knn_join`` query."""
     from spark_eventhubs_spark.operators import clustering as CL
     from spark_eventhubs_spark.operators import similarity as S
 
@@ -198,6 +199,9 @@ def test_zero_norm_row_is_refused_by_every_leg(spark, tmp_path, vec_id):
          lambda: S.ivf_build_index(emb, str(tmp_path / "zero"), n_cells=4)),
         ("ivf_append_index", row, lambda: S.ivf_append_index(emb, index)),
         ("ivf_query_indexed", row, query_zero_row_in_index),
+        # row 17 is a corpus row, row 2 one of the queries
+        ("knn_join", row,
+         lambda: S.knn_join(emb, query_max_id=4, k=5).collect()),
     ])
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         S.brute_force_topk(emb, 0, 5).collect()
@@ -231,6 +235,9 @@ def test_zero_norm_query_is_refused(spark, tmp_path):
         ("ivf_query_indexed", query, lambda: S.ivf_query_indexed(
             spark, index, [0.0] * 8, 5, exclude_id=0
         )),
+        ("pq_topk_rerank", query, lambda: S.pq_topk_rerank(
+            emb, 0, 5, m=2, n_centroids=4, dim=8
+        ).collect()),
         ("ivf_query_indexed: saved zero centroid", "zero-norm embedding at cid=1",
          lambda: S.ivf_query_indexed(spark, zero_cent, qvec, 5)),
         ("ivf_append_index: saved zero centroid", "zero-norm embedding at cid=1",

@@ -273,6 +273,29 @@ def test_uncommitted_batch_replayed(spark, stream_hub, tmp_path):
     assert sorted(rows) == sorted((str(p), str(p * 100 + i)) for p in range(4) for i in range(20))
 
 
+def test_second_query_into_one_sink_keeps_its_batches(spark, stream_hub, tmp_path):
+    """Batch ids count per query: a second relay with its own checkpoint
+    writes batch 0 again, and the sink must not take it for a re-delivery
+    of the first query's batch 0. Each relay lands every event once."""
+    out = str(tmp_path / "out")
+
+    for ck in ("ck-a", "ck-b"):
+        q = (_stream(spark, stream_hub, {"eventhubs.consumerGroup": ck})
+             .select("body", "partition")
+             .writeStream.format("eventhubs")
+             .option("path", out)
+             .option("checkpointLocation", str(tmp_path / ck))
+             .trigger(availableNow=True)
+             .start())
+        _run(q, available_now=True)
+    rows = [(r["partition"], r["body"].decode())
+            for r in spark.read.format("eventhubs").option("path", out).load().collect()]
+    want = [(str(p), str(p * 100 + i)) for p in range(4) for i in range(20)]
+    assert sorted(rows) == sorted(want * 2)
+    markers = [f for f in os.listdir(os.path.join(out, "_commits")) if f.startswith("epoch-")]
+    assert len(markers) == 2
+
+
 _CHECKPOINT_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 
 
