@@ -1,17 +1,25 @@
 #!/usr/bin/env python3
-"""Benchmark harness: runs the headline query catalog at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+"""Benchmark harness: times every ``queries()`` entry at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata dir) on one
+``session.build_session`` session and prints ONE JSON line:
 
-  {"metric": "catalog_wall_clock", "value": <total sec>, "unit": "sec",
-   "queries": {"q1": sec, ...}, "sf": 0.1, ...}
+  {"metric": "catalog_wall_clock", "value": <sum of cell medians, sec>,
+   "unit": "sec", "queries": {name: median sec}, "sf": 0.1, ...}
 
-Each query is executed to completion (results materialized via
-collect — all catalog queries return small aggregates/top-k). The
-first query additionally warms the JVM; a separate `hub_scan_meps`
-metric reports events/sec scanned on the windowed-aggregation query as
-a throughput figure comparable to the reference's 0.2 ms/event worked
-example (BASELINE.md).
+Each cell is one ``scripts/probe.py`` ``run``: an untimed warm-up, then
+timed reps, each after a JVM GC and a query-plan-cache clear. A batch
+entry takes 3 reps. A ``stream_*`` twin takes 1, because every rep
+re-drains its whole backlog and the drain, not codegen, dominates its
+cost. ``cells`` keeps each cell's probe figures: samples, quartiles,
+rows, executed-plan counts, ``[warm-up, timed]`` artifact builds and,
+for the twins, the trigger count and summed ``durationMs`` phases. A
+cell that raises is named under ``failures``; the others are still
+timed.
+
+``hub_scan_meps`` is the events/sec scanned by :func:`hub_scan_m40`'s
+best rep. ``host_pre`` and ``host_post`` stamp nproc, load1 and the
+numpy canary before and after the catalog, as perfbench's records do.
+The line is also written to ``BENCH_LAST.json`` beside this file.
 """
 
 from __future__ import annotations
@@ -20,9 +28,51 @@ import json
 import os
 import re
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "scripts"))
+
+import probe  # noqa: E402
+from perfbench.run import host_stamp  # noqa: E402
+
+REPS = 3
+SCAN_MULT = 40
+CELL_KEYS = ("samples", "median", "q1", "q3", "rows", "plan", "artifact_builds", "stream")
+
+
+def hub_scan_m40(spark, sf_dir: str):
+    """The hourly count and value sum through the hub projection over
+    the events table replicated SCAN_MULT times by path: long enough
+    that fixed job cost is a small share and the figure measures the
+    scan."""
+    from pyspark.sql import functions as F
+
+    from spark_eventhubs_spark.plans.hubview import hub_view_flat
+
+    rep = spark.read.parquet(*[f"{sf_dir}/events.parquet"] * SCAN_MULT)
+    return (
+        hub_view_flat(rep)
+        .groupBy(F.expr("enq_us div 3600000000").alias("hour_bucket"))
+        .agg(F.count("*").alias("cnt"), F.sum("value_cents").alias("sum_value_cents"))
+    )
+
+
+def time_cells(spark, names: list, sf_dir: str, reps: int = REPS) -> tuple[dict, dict]:
+    """One probe record per target in ``names`` and the first line of
+    the error of each target that raised."""
+    cells, failures = {}, {}
+    for i, name in enumerate(names):
+        try:
+            (rec,) = probe.run(spark, [name], sf_dir, 1 if name.startswith("stream_") else reps)
+            cells[name] = {k: rec[k] for k in CELL_KEYS}
+        except Exception as e:  # a failed cell must not hide the rest
+            failures[name] = str(e).split("\n")[0][:200]
+        # progress to stderr (stdout carries ONLY the JSON line)
+        print(f"[bench] {i + 1}/{len(names)} {name} "
+              f"{cells[name]['median'] if name in cells else 'FAIL'}s",
+              file=sys.stderr, flush=True)
+    return cells, failures
 
 
 def _replica_layout(sf_dir: str):
@@ -36,465 +86,63 @@ def _replica_layout(sf_dir: str):
 
 
 def main() -> None:
-    # Measurement hygiene: flush pending filesystem writeback BEFORE
-    # timing anything. A bench started minutes after a multi-GB write
-    # (replica builds, step-up sweeps) otherwise competes with the
-    # kernel's dirty-page flusher for the whole run — measured as a
-    # ~16% whole-bench inflation and a 2x tail on the checkpoint-heavy
-    # streaming twins (NOTES_r07: stream_asof_join 7.2 s idle vs
-    # 16.3 s post-write, same code).
-    # The sync wait time and pre-run host state go into the JSON so a
-    # depressed scan/stream figure is attributable from the artifact
-    # alone (round-7 verdict item 3): a large sync_wait_s or dirty_kb
-    # means the bench started on a loaded host and the throughput
-    # figures carry writeback contention no code change explains.
-    # read Dirty: BEFORE the sync — it is the pre-sync writeback debt
-    # this field exists to capture (after os.sync() it is ~0 by
-    # construction and the record would never show the contention)
-    try:
-        with open("/proc/meminfo") as fh:
-            dirty_kb = next(
-                int(line.split()[1])
-                for line in fh
-                if line.startswith("Dirty:")
-            )
-    except (OSError, StopIteration):
-        dirty_kb = -1
-    t_sync = time.time()
-    os.sync()
-    sync_wait_s = round(time.time() - t_sync, 3)
-    try:
-        with open("/proc/loadavg") as fh:
-            host_load_1m = float(fh.read().split()[0])
-    except OSError:
-        host_load_1m = -1.0
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    # "sf10", "sf0.1", and suffixed replica dirs like "sf10_a" all
-    # stamp their numeric scale; anything unparseable stamps -1 (the
-    # bench_ratio --factor override path) instead of crashing
+    # "sf0.1" and replica dirs like "sf1_a" stamp their numeric scale;
+    # anything unparseable stamps -1 (the bench_ratio --factor path)
     m = re.search(r"sf([0-9]+(?:\.[0-9]+)?)", os.path.basename(sf_dir.rstrip("/")))
     sf = float(m.group(1)) if m else -1.0
+    # Spark's Python workers (the hub DataSource, pandas UDFs) import the
+    # package; set before the session starts
+    os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
+    host_pre = host_stamp()
 
-    # Pre-touch the data dir through the page cache BEFORE any timed
-    # cell (round-11 verdict item 6): a freshly built replica reads
-    # cold at ~40 MB/s, inflating the first timed cells up to 9.6x
-    # over their isolated medians (NOTES_r11: q10 41.8 s vs 4.3 s).
-    # Reading every parquet byte once is untimed, stamped real time —
-    # after it, segment-0 cells measure the plan, not the disk.
-    t_touch = time.time()
-    touch_bytes = 0
-    buf = bytearray(1 << 22)
-    for root, _dirs, files in os.walk(sf_dir):
-        for f in files:
-            if not (f.endswith(".parquet") or f.startswith("part-")):
-                continue
-            try:
-                with open(os.path.join(root, f), "rb", buffering=0) as fh:
-                    while True:
-                        n = fh.readinto(buf)
-                        if not n:
-                            break
-                        touch_bytes += n
-            except OSError:
-                pass
-    pretouch_s = round(time.time() - t_touch, 3)
-
-    # Host-speed canary (round 12): a FIXED single-thread workload
-    # timed before Spark starts, so cross-round records carry a
-    # comparable host-throughput axis. Motivation: the r12 idle-host
-    # record read the unchanged pure-parquet m40 scan at ~half the r11
-    # idle figure (and the r9 record, taken at load 16.6, beat both) —
-    # round-over-round absolute comparisons are meaningless without
-    # knowing whether the box itself moved. py_canary_s is a CPython
-    # integer loop (CPU/IPC); np_canary_s is a 1024^2 float64 matmul
-    # x8 (FPU + memory bandwidth). Bigger = slower host.
-    t0 = time.time()
-    acc = 0
-    for i in range(5_000_000):
-        acc += i
-    py_canary_s = round(time.time() - t0, 3)
-
-    def _np_canary() -> float:
-        try:
-            import numpy as _np
-
-            a = _np.ones((1024, 1024))
-            t0 = time.time()
-            for _ in range(8):
-                a = a @ a * 1e-3
-            return round(time.time() - t0, 3)
-        except Exception:
-            return -1.0
-
-    np_canary_s = _np_canary()
-    # r13: the same fixed matmul re-timed at EVERY session-recycle
-    # boundary. Measured motivation: on this host the identical
-    # single-thread workload varies >10x within minutes (hypervisor
-    # time-slicing), which is exactly the "multi-second stalls that
-    # move between cells across runs" the r13 pre-record documents —
-    # a per-segment canary makes a slow segment attributable from the
-    # record alone instead of via a hand re-run.
-    segment_np_canary: list[float] = [np_canary_s]
-
-    import __spark_entry__ as entrymod
+    import __spark_entry__ as entry
     from spark_eventhubs_spark.session import build_session
 
-    def _make_session():
-        s = build_session("spark-eventhubs-bench")
-        s.sparkContext.setLogLevel("ERROR")
-        return s
+    spark = build_session("spark-eventhubs-bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    cells, failures = time_cells(spark, list(entry.queries()), sf_dir)
+    host_post = host_stamp()
 
-    spark = _make_session()
-
-    qs = entrymod.queries()
-
-    # JVM/codegen warmup on a tiny query (not timed)
-    try:
-        qs["hub_offset_discovery"](spark, sf_dir).collect()
-    except Exception:
-        pass
-
-    from spark_eventhubs_spark.plans.hubview import (
-        artifact_build_count,
-        clear_cached_plans,
-        hub_view_flat,
-    )
-
-    # Session recycling (round-9 verdict item 2): forcing GC alone did
-    # not stop late-catalog cells at big sf from inflating up to 5x
-    # over their isolated medians (sf10 r9: text_cms_estimates 61.9 s
-    # in-catalog vs 11.75 s isolated) — accumulated block-manager
-    # registrations, broadcast blocks, and driver heap from 100+
-    # collect()s build pressure a GC can't fully clear while the
-    # SparkContext still references them. So the context itself is
-    # recycled every RECYCLE_N entries: spark.stop() + a fresh
-    # getOrCreate() in the SAME py4j JVM (JIT stays warm; block
-    # manager, broadcasts, and old heap refs drop). The recycle cost
-    # (~2-5 s) is real time but never enters `timings`, and every
-    # entry still pays its own untimed warmup run, so cells stay
-    # comparable across rounds while no cell's position in the catalog
-    # can put >RECYCLE_N entries of accumulated state behind it.
-    recycle_n = int(os.environ.get("SPARK_GRAFT_RECYCLE_N", "16"))
-    n_recycles = 0
-    recycle_first: list[str] = []
-    timings: dict[str, float] = {}
-    spreads: dict[str, list[float]] = {}
-    failures: dict[str, str] = {}
-    # Per-cell warmth attribution (round-12 verdict item 2): the
-    # recycle segment the cell ran in, plus how many session-scoped
-    # ingest artifacts (LSH banded frames, hub materializations, ...)
-    # were cache-miss built during the UNTIMED warmup vs during the
-    # TIMED runs. A non-zero timed count means the cell paid an
-    # artifact rebuild inside its measured window — the mechanism the
-    # r12 embed_neardup_pairs 5x could only be argued about in prose.
-    cell_segment: dict[str, int] = {}
-    cell_artifact_builds: dict[str, list[int]] = {}
-    for qi, (name, fn) in enumerate(qs.items()):
-        if recycle_n > 0 and qi > 0 and qi % recycle_n == 0:
-            try:
-                spark.stop()
-            except Exception:
-                pass
-            spark = _make_session()
-            n_recycles += 1
-            segment_np_canary.append(_np_canary())
-            # The first cells of a fresh context read high even with
-            # the run-0 warmup (r10: ts_ewma_hourly 0.31->0.60 s), so
-            # (a) the segment warmup runs THREE times to push codegen/
-            # JIT past the first compile tier, and (b) the entry names
-            # that open each recycled segment are stamped into the
-            # record (recycle_first_entries) — a reader can attribute a
-            # small-cell move to a recycle boundary without a hand A/B
-            # (round-10 verdict item 6).
-            recycle_first.append(name)
-            try:  # untimed segment warmup, same as the run-0 warmup
-                for _ in range(3):
-                    clear_cached_plans(spark, "query")
-                    qs["hub_offset_discovery"](spark, sf_dir).collect()
-            except Exception:
-                pass
-        # Local-mode sessions accumulate broadcast blocks and shuffle
-        # registrations that Spark's ContextCleaner only reclaims on
-        # JVM GC — which a big mostly-idle heap rarely runs, so
-        # late-catalog queries pay scheduling overhead the early ones
-        # didn't. Forcing a GC every few queries keeps the measurement
-        # uniform across catalog position (per-query cost ~50 ms).
-        if qi % 8 == 0:
-            spark.sparkContext._jvm.System.gc()
-        # Variance control: run 0 is an untimed warmup (codegen/analysis
-        # dominates sub-second queries), then 3 timed runs for fast
-        # queries / 2 for expensive ones (>= 2 s warmup — a third run
-        # would bloat bench wall-clock without changing the story, but
-        # a single sample can't distinguish a GC hiccup from a real
-        # regression).
-        # Reported figure = median of the timed runs; [min, max] spread
-        # goes to "queries_spread" so cross-round deltas are
-        # attributable to code vs noise. The catalog memoizes returned
-        # DataFrame plans, so clear the query-plan cache before each
-        # run: re-collecting the same DataFrame object would skip
-        # already-materialized shuffle stages and under-report cost —
-        # every timed run below builds and executes a genuinely fresh
-        # plan.
-        # Streaming twins re-drain the full micro-batch sequence on
-        # EVERY run once the plan cache is cleared (a fresh consumer
-        # group each time — that is the entry's semantics), and the
-        # drain mechanics (trigger loop, state commits), not codegen,
-        # dominate their cost. Repeats would just multiply a 5-20 s
-        # drain without improving the estimate, so streaming entries
-        # run the untimed warmup (codegen + sink setup) plus ONE timed
-        # drain; batch queries keep warmup + median-of-repeats.
-        one_timed = name.startswith("stream_")
-        samples: list[float] = []
-        warm = None
-        cell_segment[name] = n_recycles
-        ab_warm = ab_timed = 0
-        try:
-            for i in range(4):
-                clear_cached_plans(spark, "query")
-                ab0 = artifact_build_count()
-                t0 = time.time()
-                fn(spark, sf_dir).collect()
-                dt = time.time() - t0
-                if i == 0:
-                    warm = dt
-                    ab_warm = artifact_build_count() - ab0
-                    continue
-                ab_timed += artifact_build_count() - ab0
-                samples.append(dt)
-                if one_timed or (warm >= 2.0 and len(samples) >= 2):
-                    break
-        except Exception as e:  # a failed query must not hide the rest
-            failures[name] = str(e).split("\n")[0][:200]
-        cell_artifact_builds[name] = [ab_warm, ab_timed]
-        if samples:
-            samples.sort()
-            # lower median: n=3 -> true median, n=2 -> min (GC hiccups
-            # inflate, nothing deflates, so the lower sample is truer)
-            timings[name] = round(samples[(len(samples) - 1) // 2], 3)
-            spreads[name] = [round(samples[0], 3), round(samples[-1], 3)]
-        # progress to stderr (stdout carries ONLY the JSON line): a
-        # crashed long run is attributable to its entry post-mortem
-        print(
-            f"[bench] {qi + 1}/{len(qs)} {name} "
-            f"{timings.get(name, 'FAIL')}s",
-            file=sys.stderr,
-            flush=True,
-        )
-
-    # throughput: per-event scan cost through the hub projection on the
-    # flagship windowed agg. The events table is replicated by path so
-    # the fixed job-launch cost amortizes and the figure measures scan
-    # speed (the quantity that matters at 100 TB), not local-mode
-    # scheduling overhead. r8 finding: at 10x replication the job is
-    # sub-second and ~half its wall is fixed scheduling/JIT cost (an
-    # isolated probe reads 1.8-3.3 Meps cold and ~7 Meps hot at 40x on
-    # an idle host), so round-over-round 10x deltas tracked overhead
-    # noise, not code. The headline figure now uses 40x; the 10x
-    # figure is kept as hub_scan_meps_m10 for cross-round continuity,
-    # and both replication factors + best wall go into the record.
-    # Everything below is supplementary throughput metrics. A failure
-    # here (e.g. heap exhaustion at a very large SPARK_GRAFT_SF_DIR)
-    # must not discard the catalog timings already measured — the
-    # record prints with the failed metrics as -1 and the error named
-    # under "metric_errors".
     metric_errors: dict[str, str] = {}
-    events_path = f"{sf_dir}/events.parquet"
-    n_events = -1
-
-    def _scan_query(scan_mult):
-        rep = spark.read.parquet(*([events_path] * scan_mult))
-        from pyspark.sql import functions as F
-
-        return (
-            hub_view_flat(rep)
-            .groupBy(F.expr("enq_us div 3600000000").alias("hour_bucket"))
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum("value_cents").alias("sum_value_cents"),
-            )
-        )
-
-    def _scan_meps(scan_mult, runs=3):
-        _scan_query(scan_mult).collect()  # warm
-        best = None
-        for _ in range(runs):
-            t0 = time.time()
-            _scan_query(scan_mult).collect()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        return (
-            round(scan_mult * n_events / best / 1e6, 3) if best > 0 else -1,
-            round(best, 3),
-        )
-
-    meps = meps_m10 = scan_best_s = -1
+    n_events = meps = scan_best_s = -1
     try:
-        n_events = spark.read.parquet(events_path).count()
-        # m40 FIRST: the m10 cell is a ten-task ~0.3 s job whose
-        # reading swings +-30% with JVM JIT warmth (round-10 A/B: r8
-        # and r10 code read identically, 2.6-3.0 Meps, on a fresh JVM
-        # with shallow warmup; 3.7-3.9 after m40 runs in-session — the
-        # r8-vs-r9 "regression" was warmth, not code). Running the 4x
-        # bigger shape first deep-warms the scan path so the m10
-        # continuity figure measures the scan, not the JIT level; 5
-        # reps tighten the best-of draw.
-        meps, scan_best_s = _scan_meps(40)
-        meps_m10, _ = _scan_meps(10, runs=5)
+        n_events = spark.read.parquet(f"{sf_dir}/events.parquet").count()
+        (scan,) = probe.run(spark, ["bench:hub_scan_m40"], sf_dir, REPS)
+        scan_best_s = min(scan["samples"])
+        meps = round(SCAN_MULT * n_events / scan_best_s / 1e6, 3)
     except Exception as e:
         metric_errors["hub_scan"] = str(e).split("\n")[0][:200]
+    spark.stop()
 
-    # --- streaming metrics vs BASELINE.md's 0.2 ms/event worked example ---
-    # (a) end-to-end readStream.format("eventhubs") drain at the
-    #     reference's default trigger size (partitionCount * 1000) into a
-    #     noop sink: events/sec incl. planning+execution
-    # (b) planner-only cost per trigger on the materialized hub log
-    #     (footer-stat bounds + rate limit + range planning, no data read)
-    import shutil
-    import tempfile
-
-    from spark_eventhubs_spark.sources.datasource import (
-        EventHubsStreamReader,
-        materialize_hub,
-        register_eventhubs,
-    )
-
-    work = tempfile.mkdtemp(prefix="bench_hub_")
-    stream_eps = ms_per_event = n_batches = planner_ms = n_plans = -1
-    try:
-        hub_dir = materialize_hub(spark, sf_dir, f"{work}/hublog")
-        register_eventhubs(spark)
-        t0 = time.time()
-        q = (
-            spark.readStream.format("eventhubs")
-            .option("path", hub_dir)
-            .option("eventhubs.maxEventsPerTrigger", str(4 * 1000))
-            .load()
-            .writeStream.format("noop")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        stream_s = time.time() - t0
-        n_batches = sum(1 for f in os.listdir(f"{work}/ckpt/commits") if f.isdigit())
-        if n_events <= 0:  # the scan section failed before counting
-            n_events = spark.read.parquet(events_path).count()
-        stream_eps = round(n_events / stream_s) if stream_s > 0 else -1
-        ms_per_event = round(1000.0 * stream_s / n_events, 4)
-        opts = {"path": hub_dir, "eventhubs.maxeventspertrigger": "4000"}
-
-        class _O(dict):
-            def get(self, k, d=None):
-                return super().get(k.lower(), d)
-
-        reader = EventHubsStreamReader(_O(opts))
-        t0 = time.time()
-        n_plans = 0
-        prev = reader.initialOffset()
-        while True:
-            end = reader.latestOffset()
-            if end == prev:
-                break
-            reader.partitions(prev, end)
-            reader.commit(end)
-            prev = end
-            n_plans += 1
-        plan_s = time.time() - t0
-        planner_ms = round(1000.0 * plan_s / max(n_plans, 1), 3)
-    except Exception as e:
-        metric_errors["stream_replay"] = str(e).split("\n")[0][:200]
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
-    total = round(sum(timings.values()), 3)
     out = {
         "metric": "catalog_wall_clock",
-        "value": total,
+        "value": round(sum(c["median"] for c in cells.values()), 3),
         "unit": "sec",
-        "queries": timings,
-        "queries_spread": spreads,
+        "queries": {name: c["median"] for name, c in cells.items()},
+        "cells": cells,
         "sf": sf,
-        "n_queries": len(timings),
+        "n_queries": len(cells),
+        "reps": {"batch": REPS, "stream": 1},
         "events_rows": n_events,
         "hub_scan_meps": meps,
-        "hub_scan_mult": 40,
+        "hub_scan_mult": SCAN_MULT,
         "hub_scan_best_s": scan_best_s,
-        "hub_scan_meps_m10": meps_m10,
-        # measurement-protocol stamp: since r10 the m10 probe runs
-        # AFTER the m40 probe in a deliberately JIT-warm JVM (best of
-        # 5 reps), so its values are not comparable to r<=9 records;
-        # BASELINE.md "Scan-throughput bars" retires it as a graded
-        # bar in favor of the 40x probe + sf10 scan
-        "scan_m10_method": "post-m40-warm,best-of-5",
-        "stream_events_per_sec": stream_eps,
-        "stream_ms_per_event": ms_per_event,
-        "stream_batches": n_batches,
-        "planner_ms_per_batch": planner_ms,
-        "planner_batches": n_plans,
-        # measurement-hygiene provenance (round-7 verdict item 3):
-        # sync_wait_s ~0 and small dirty_kb_pre_sync = idle host; a
-        # multi-second sync or GB-scale dirty set explains a depressed
-        # scan figure without re-litigating the code.
-        "sync_wait_s": sync_wait_s,
-        # untimed page-cache pre-read of the whole data dir (r11 item
-        # 6): cells never include first-touch cold-disk reads
-        "pretouch_bytes": touch_bytes,
-        "pretouch_s": pretouch_s,
-        # fixed-work host-speed canaries (bigger = slower box) — the
-        # axis for judging cross-round absolute-throughput deltas
-        "py_canary_s": py_canary_s,
-        "np_canary_s": np_canary_s,
-        # index i = host-speed canary measured when recycle segment i
-        # opened (segment 0 = the pre-Spark stamp above); join against
-        # queries_segment to normalize a cell by ITS segment's host
-        # speed
-        "segment_np_canary_s": segment_np_canary,
-        "host_load_1m_pre": host_load_1m,
-        "dirty_kb_pre_sync": dirty_kb,
-        # context recycled every N entries so per-cell figures can't
-        # inflate with catalog position (round-9 verdict item 2)
-        "session_recycle_n": recycle_n,
-        "session_recycles": n_recycles,
-        # entry names that opened each fresh-context segment: a >1.3x
-        # move on a sub-2s cell listed here is recycle-boundary cold
-        # start until an isolated probe says otherwise
-        "recycle_first_entries": recycle_first,
-        # per-cell warmth attribution (r12 verdict item 2): the
-        # recycle segment each cell ran in, and [warmup, timed]
-        # ingest-artifact cache-miss builds — timed>0 means the cell
-        # paid an artifact rebuild inside its measured window
-        "queries_segment": cell_segment,
-        "queries_artifact_builds": cell_artifact_builds,
-        # replica layout fingerprint (round-9 verdict item 4): builds
-        # stamp _layout.json; two records comparing cells are on the
-        # same physical layout iff the fingerprints match
+        "host_pre": host_pre,
+        "host_post": host_post,
+        # two records compare cells on the same physical layout iff
+        # these fingerprints match
         "replica_layout": _replica_layout(sf_dir),
-        # the reference's worked latency example: 0.2 ms/event
-        # (docs/slow-partition-adjustment-feature.md:35-42, BASELINE.md)
-        "baseline_ms_per_event": 0.2,
     }
     if failures:
         out["failures"] = failures
     if metric_errors:
         out["metric_errors"] = metric_errors
-    try:
-        spark.stop()
-    except Exception:
-        pass
     line = json.dumps(out)
-    # Self-archive the record (r13 verdict item 8): the r12 driver
-    # bench printed its JSON line but only a truncated tail of it was
-    # stored, erasing the round-over-round baseline. A tracked on-disk
-    # copy of the exact stdout line makes the record survive any
-    # stdout-capture truncation. Written AFTER all timing (untimed).
+    # a tracked copy of the exact stdout line survives a truncated
+    # stdout capture; written after all timing
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_LAST.json"), "w"
-        ) as fh:
+        with open(os.path.join(ROOT, "BENCH_LAST.json"), "w") as fh:
             fh.write(line + "\n")
     except OSError:
         pass  # a read-only checkout must not lose the stdout record

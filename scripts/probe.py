@@ -2,15 +2,17 @@
 """Isolated, interleaved timing of catalog entries, with the executed
 plan's shape and the engine's per-trigger phases.
 
-Usage: python scripts/probe.py [--sf DIR] [--reps N] [--count] TARGET...
+Usage: python scripts/probe.py [--sf DIR] [--reps N] [--count]
+                               [--explain DIR] TARGET...
 
 A TARGET is a ``queries()`` entry name or a ``module:function`` with the
 entry signature ``(spark, sf_dir) -> DataFrame``. One session
 (``session.build_session``) runs each target once untimed (ingest
 artifacts, codegen), then N timed reps. Before each rep it runs a JVM GC
 and ``clear_cached_plans(spark, "query")``, so every rep builds and runs
-a fresh plan, as bench.py does. Reps are interleaved across targets:
-naming two targets is an A/B in the same session.
+a fresh plan. Reps are interleaved across targets: naming two targets
+is an A/B in the same session. bench.py times every catalog cell
+through :func:`run`.
 
 Prints one JSON line per target:
 
@@ -18,10 +20,16 @@ Prints one JSON line per target:
 - ``rows``: from ``collect()``, or from ``count()`` with ``--count``;
 - ``plan``: counts in the warm-up's executed plan: shuffle stages,
   reused exchanges, parquet scans and Python eval nodes;
+- ``artifact_builds``: ``[warm-up, timed]`` session ingest artifacts
+  (hub materializations, LSH frames, ...) built on a cache miss; a
+  non-zero timed count means a rep paid an artifact rebuild;
 - ``stream``, for a target that runs streaming queries (the
   ``stream_*`` twins): the trigger count and the summed ``durationMs``
   phases of a rep, each the median over the timed reps. They come from
   a ``StreamingQueryListener`` the probe registers on its session.
+
+With ``--explain DIR`` each target's warm-up ``explain("formatted")``
+is written to ``DIR/<target>.txt``.
 
 For scale, build a replica and point ``--sf`` at it::
 
@@ -121,33 +129,46 @@ def _median_stats(per_rep: list) -> dict:
     }
 
 
-def run(spark, targets: list, sf_dir: str, reps: int = 5, count: bool = False) -> list:
+def _explain(df) -> str:
+    modes = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
+    return df._jdf.queryExecution().explainString(modes.fromString("formatted"))
+
+
+def run(spark, targets: list, sf_dir: str, reps: int = 5, count: bool = False,
+        explain_dir: str | None = None) -> list:
     """Probe ``targets`` on ``spark``; returns one record per target."""
-    from spark_eventhubs_spark.plans.hubview import clear_cached_plans
+    from spark_eventhubs_spark.plans.hubview import artifact_build_count, clear_cached_plans
 
     fns = {t: resolve(t) for t in targets}
     load1 = round(os.getloadavg()[0], 2)
     rows, plans = {}, {}
     samples: dict = {t: [] for t in targets}
     streams: dict = {t: [] for t in targets}
+    builds: dict = {t: [0, 0] for t in targets}
     listener = _Progress()
     spark.streams.addListener(listener)
 
-    def once(t):
+    def once(t, timed):
+        b0 = artifact_build_count()
         df = fns[t](spark, sf_dir)
         rows[t] = df.count() if count else len(df.collect())
+        builds[t][timed] += artifact_build_count() - b0
         return df
 
     try:
         for t in targets:
-            plans[t] = _plan_counts(once(t))
+            df = once(t, 0)
+            plans[t] = _plan_counts(df)
+            if explain_dir:
+                with open(os.path.join(explain_dir, f"{t}.txt"), "w") as fh:
+                    fh.write(_explain(df))
             listener.take()
         for _ in range(reps):
             for t in targets:
                 spark.sparkContext._jvm.System.gc()
                 clear_cached_plans(spark, "query")
                 t0 = time.perf_counter()
-                once(t)
+                once(t, 1)
                 samples[t].append(round(time.perf_counter() - t0, 3))
                 triggers = listener.take()
                 if triggers:
@@ -163,7 +184,7 @@ def run(spark, targets: list, sf_dir: str, reps: int = 5, count: bool = False) -
             "target": t, "sf_dir": sf_dir, "action": "count" if count else "collect",
             "rows": rows[t], "samples": xs,
             "median": round(med, 3), "q1": round(q1, 3), "q3": round(q3, 3),
-            "plan": plans[t],
+            "plan": plans[t], "artifact_builds": builds[t],
             "stream": _median_stats(streams[t]) if streams[t] else None,
             "load1": load1,
         })
@@ -177,6 +198,9 @@ def main(argv=None) -> int:
     ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--count", action="store_true",
                     help="count() instead of collect()")
+    ap.add_argument("--explain", metavar="DIR",
+                    help="write each target's warm-up explain(\"formatted\") "
+                         "to DIR/<target>.txt")
     ap.add_argument("targets", nargs="+", metavar="TARGET")
     args = ap.parse_args(argv)
     if not args.sf or not os.path.isdir(args.sf):
@@ -186,6 +210,8 @@ def main(argv=None) -> int:
             resolve(t)
     except (ValueError, ImportError, AttributeError) as e:
         ap.error(str(e))
+    if args.explain:
+        os.makedirs(args.explain, exist_ok=True)
 
     # Spark's Python workers (the hub DataSource, pandas UDFs) import the
     # package; set before the session starts
@@ -195,7 +221,8 @@ def main(argv=None) -> int:
     spark = build_session("probe")
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        for rec in run(spark, args.targets, args.sf, args.reps, args.count):
+        for rec in run(spark, args.targets, args.sf, args.reps, args.count,
+                       args.explain):
             print(json.dumps(rec), flush=True)
     finally:
         spark.stop()

@@ -160,8 +160,8 @@ def ensure_copurchase_edges(
     side bucketed on the iteration join key, every PageRank iteration
     plans with NO Exchange on the |edges|-row side — only the
     |nodes|-row ranks frame shuffles (pinned in
-    tests/test_graph.py). ``scripts/scale_stepup.py`` times this
-    ingest separately from the steady-state iterations.
+    tests/test_graph.py). STEPUP_r09.json records this ingest's
+    medians separately from the steady-state iterations'.
 
     ``n_buckets=None`` (default) derives the count from the corpus via
     :func:`auto_edge_buckets` — a bucketed scan plans exactly one task

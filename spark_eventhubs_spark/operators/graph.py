@@ -30,8 +30,8 @@ stage ever exceeds |edges| rows. At 100 TB the artifact is
 materialized bucketed by ``src``
 (``bucketing.ensure_copurchase_edges``), which removes the edge-side
 Exchange from every iteration: only the small ranks frame shuffles.
-``scripts/scale_stepup.py`` measures ingest and steady-state
-separately.
+The ingest and steady-state medians per scale are recorded separately
+in STEPUP_r09.json (``graph_pagerank_ingest``/``_iterate``).
 """
 
 from __future__ import annotations
@@ -54,8 +54,7 @@ def copurchase_edges(lineitem: DataFrame) -> DataFrame:
     shuffles ((orderkey, part) dedup + the join exchange on orderkey);
     the only wide stages left in ingest are this one orderkey
     aggregation and the final (src, dst) distinct (the 30x ingest
-    medians live in scripts/scale_stepup.py's pagerank split
-    output, STEPUP_r08.json)."""
+    medians live in STEPUP_r08.json's ``graph_pagerank_ingest``)."""
     per_order = lineitem.groupBy(F.col("l_orderkey").alias("ok")).agg(
         F.collect_set("l_partkey").alias("parts")
     )

@@ -4265,10 +4265,10 @@ def opt_bloom_prune_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def scd2_compact(hub: DataFrame) -> DataFrame:
     """The SCD2 window topology over any (user_id_str, event_type,
-    enq_us, sequenceNumber) frame — shared by the catalog entry and
-    scripts/scale_smoke.py's hot-user skew family so both measure the
-    same code path. ONE hash exchange on user_id_str; all four window
-    computations reuse it."""
+    enq_us, sequenceNumber) frame — shared by the catalog entry and the
+    20M-row hot-user skew runs recorded in NOTES_r06.md, so both measure
+    the same code path. ONE hash exchange on user_id_str; all four
+    window computations reuse it."""
     from pyspark.sql import Window
 
     hub = hub.select("user_id_str", "event_type", "enq_us", "sequenceNumber")

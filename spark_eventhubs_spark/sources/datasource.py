@@ -834,20 +834,72 @@ def _validate_write_schema(schema: StructType) -> Dict[str, Optional[str]]:
         raise ValueError("required attribute 'body' not found")
     if body_t not in ("string", "binary"):
         raise ValueError(f"'body' must be string or binary, got {body_t}")
-    part_col = "partition" if "partition" in names else (
-        "partitionId" if "partitionId" in names else None)
+    cols = write_columns(names)
+    part_col = cols["partition"]
     if part_col and names[part_col] != "string":
         raise ValueError(f"'{part_col}' must be string, got {names[part_col]}")
     if "partitionKey" in names and names["partitionKey"] != "string":
         raise ValueError("'partitionKey' must be string")
     if "properties" in names and not names["properties"].startswith("map<string,string"):
         raise ValueError("'properties' must be map<string,string>")
+    return cols
+
+
+def write_columns(names) -> Dict[str, Optional[str]]:
+    """The column each staged field is read from, among ``names``: the
+    optional partition (``partition``, else ``partitionId``),
+    ``partitionKey`` and ``properties``; None where absent."""
     return {
-        "body": body_t,
-        "partition": part_col,
+        "partition": "partition" if "partition" in names else (
+            "partitionId" if "partitionId" in names else None),
         "partitionKey": "partitionKey" if "partitionKey" in names else None,
         "properties": "properties" if "properties" in names else None,
     }
+
+
+def stage_rows(hub_dir: str, name: str, rows, cols: Dict[str, Optional[str]]) -> Tuple[str, int]:
+    """Write ``rows`` as the staged event file ``<hub>/_staging/<name>``:
+    the (body, partition, partitionKey, properties) table that
+    :func:`commit_staged_paths` routes and appends. ``cols`` is
+    :func:`write_columns`' mapping. A body must be a string or bytes;
+    a row that pins both a partition and a partitionKey is refused (ref
+    EventHubsWriteTask.scala:146-149). Returns the path and row count."""
+    bodies, parts, keys, props = [], [], [], []
+    c = cols
+    for row in rows:
+        body = row["body"]
+        if isinstance(body, str):
+            body = body.encode("utf-8")
+        elif not isinstance(body, (bytes, bytearray)):
+            raise ValueError(
+                "null body" if body is None
+                else f"body must be a string or bytes, got {type(body).__name__}"
+            )
+        bodies.append(body)
+        pid = row[c["partition"]] if c["partition"] else None
+        key = row[c["partitionKey"]] if c["partitionKey"] else None
+        if pid is not None and key is not None:
+            raise ValueError(
+                "both partition and partitionKey are set; they are "
+                "mutually exclusive"
+            )
+        parts.append(pid)
+        keys.append(key)
+        pr = row[c["properties"]] if c["properties"] else None
+        props.append(list(pr.items()) if pr else [])
+    tbl = pa.table(
+        {
+            "body": pa.array(bodies, pa.binary()),
+            "partition": pa.array(parts, pa.string()),
+            "partitionKey": pa.array(keys, pa.string()),
+            "properties": pa.array(props, pa.map_(pa.string(), pa.string())),
+        }
+    )
+    staging = os.path.join(hub_dir, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    path = os.path.join(staging, name)
+    papq.write_table(tbl, path)
+    return path, tbl.num_rows
 
 
 class EventHubsWriterBase:
@@ -866,40 +918,8 @@ class EventHubsWriterBase:
         ctx = TaskContext.get()
         tid = ctx.partitionId() if ctx else 0
         attempt = ctx.taskAttemptId() if ctx else 0
-        bodies, parts, keys, props = [], [], [], []
-        c = self.cols
-        for row in iterator:
-            body = row["body"]
-            if isinstance(body, str):
-                body = body.encode("utf-8")
-            elif body is None:
-                raise ValueError("null body")
-            bodies.append(bytes(body))
-            pid = row[c["partition"]] if c["partition"] else None
-            key = row[c["partitionKey"]] if c["partitionKey"] else None
-            if pid is not None and key is not None:
-                # ref EventHubsWriteTask.scala:146-149
-                raise ValueError(
-                    "both partition and partitionKey are set; they are "
-                    "mutually exclusive"
-                )
-            parts.append(pid)
-            keys.append(key)
-            pr = row[c["properties"]] if c["properties"] else None
-            props.append(list(pr.items()) if pr else [])
-        tbl = pa.table(
-            {
-                "body": pa.array(bodies, pa.binary()),
-                "partition": pa.array(parts, pa.string()),
-                "partitionKey": pa.array(keys, pa.string()),
-                "properties": pa.array(props, pa.map_(pa.string(), pa.string())),
-            }
-        )
-        staging = os.path.join(self.hub_dir, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        path = os.path.join(staging, f"stage-{tid:05d}-{attempt}.parquet")
-        papq.write_table(tbl, path)
-        return StagedFileMessage(path, tbl.num_rows)
+        return StagedFileMessage(*stage_rows(
+            self.hub_dir, f"stage-{tid:05d}-{attempt}.parquet", iterator, self.cols))
 
     # -- driver side: assign seqNos and append to the log --
     def _commit_staged(self, messages, commit_tag: str) -> None:

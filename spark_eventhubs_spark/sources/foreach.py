@@ -24,9 +24,6 @@ import os
 import time
 from typing import List, Optional
 
-import pyarrow as pa
-import pyarrow.parquet as papq
-
 
 class EventHubsForeachWriter:
     """PySpark ForeachWriter protocol (open/process/close).
@@ -38,7 +35,7 @@ class EventHubsForeachWriter:
 
     def __init__(self, hub_dir: str) -> None:
         self.hub_dir = hub_dir
-        self._rows: Optional[List[tuple]] = None
+        self._rows: Optional[List[dict]] = None
         self._pid = 0
         self._epoch = 0
 
@@ -50,48 +47,25 @@ class EventHubsForeachWriter:
         return True
 
     def process(self, row) -> None:
-        if isinstance(row, str):
-            body, part, key, props = row.encode("utf-8"), None, None, None
-        else:
-            d = row.asDict() if hasattr(row, "asDict") else dict(row)
-            body = d["body"]
-            if isinstance(body, str):
-                body = body.encode("utf-8")
-            part = d.get("partition") or d.get("partitionId")
-            key = d.get("partitionKey")
-            if part is not None and key is not None:
-                raise ValueError(
-                    "both partition and partitionKey are set; they are "
-                    "mutually exclusive"
-                )
-            props = d.get("properties")
         assert self._rows is not None, "process() before open()"
-        self._rows.append(
-            (bytes(body), part, key, list(props.items()) if props else [])
-        )
+        if isinstance(row, str):
+            row = {"body": row}
+        self._rows.append(row.asDict() if hasattr(row, "asDict") else dict(row))
 
     def close(self, error) -> None:
+        """Stage the task's rows with the DataSource writer's rules
+        (:func:`~spark_eventhubs_spark.sources.datasource.stage_rows`),
+        which refuse a null or non-string/bytes body with a ValueError."""
+        from spark_eventhubs_spark.sources.datasource import stage_rows, write_columns
+
         rows, self._rows = self._rows, None
         if error is not None or not rows:
             return
-        tbl = pa.table(
-            {
-                "body": pa.array([r[0] for r in rows], pa.binary()),
-                "partition": pa.array([r[1] for r in rows], pa.string()),
-                "partitionKey": pa.array([r[2] for r in rows], pa.string()),
-                "properties": pa.array(
-                    [r[3] for r in rows], pa.map_(pa.string(), pa.string())
-                ),
-            }
-        )
-        staging = os.path.join(self.hub_dir, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        papq.write_table(
-            tbl,
-            os.path.join(
-                staging,
-                f"foreach-{self._epoch:010d}-{self._pid:05d}-{os.getpid()}.parquet",
-            ),
+        stage_rows(
+            self.hub_dir,
+            f"foreach-{self._epoch:010d}-{self._pid:05d}-{os.getpid()}.parquet",
+            rows,
+            write_columns(rows[0]),
         )
 
 

@@ -1,20 +1,23 @@
-"""Pure-Python tests for the bench tooling under scripts/ — no Spark.
+"""Tests for bench.py and the bench tooling under scripts/.
 
-These pin the measurement-honesty contracts the round-9/10 verdicts
-asked for: the ratios-section classifier must not mask a streaming
-scale regression behind the backlog-proportional shortcut, and the
-replica builder must be deterministic enough that two independently
-built replicas carry the same layout fingerprint.
+The ratios-section classifier must not mask a streaming scale
+regression behind the backlog-proportional shortcut; the replica
+builder must be deterministic enough that two independently built
+replicas carry the same layout fingerprint; and bench.py's cells must
+each carry their probe figures, with a raising cell named under
+failures while the rest are still timed.
 """
 
 import importlib.util
 import pathlib
 
-SCRIPTS = pathlib.Path(__file__).resolve().parent.parent / "scripts"
+from conftest import SF_DIR
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
-def _load(name):
-    spec = importlib.util.spec_from_file_location(name, SCRIPTS / f"{name}.py")
+def _load(name, where=ROOT / "scripts"):
+    spec = importlib.util.spec_from_file_location(name, where / f"{name}.py")
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -43,29 +46,43 @@ def test_replica_build_is_deterministic(spark, tmp_path):
     same (source, k) must produce the same file counts and
     byte-identical part files — proven by the stamped layout
     fingerprint, which hashes per-table sorted file sizes."""
+    import hashlib
     import json
-    import os
 
-    os.environ["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
-    try:
-        ss = _load("scale_stepup")
-        a, b = str(tmp_path / "a"), str(tmp_path / "b")
-        ss.build_upsampled(spark, 2, a)
-        ss.build_upsampled(spark, 2, b)
-        fa = json.load(open(f"{a}/_layout.json"))
-        fb = json.load(open(f"{b}/_layout.json"))
-        assert fa["fingerprint"] == fb["fingerprint"]
-        assert fa["k"] == 2
-        # replicated content, not just metadata parity
-        n = spark.read.parquet(f"{a}/lineitem.parquet").count()
-        assert n == 2 * spark.read.parquet(
-            "/root/testdata/sf0.001/lineitem.parquet"
-        ).count()
-        # the fingerprint must actually react to a layout change
-        fb["tables"]["lineitem"]["n_files"] += 1
-        import hashlib
-        assert fa["fingerprint"] != hashlib.md5(
-            repr(sorted(fb["tables"].items())).encode()
-        ).hexdigest()[:16]
-    finally:
-        os.environ.pop("SPARK_GRAFT_SF_DIR", None)
+    br = _load("build_replica")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    br.build_upsampled(spark, 2, a, SF_DIR)
+    br.build_upsampled(spark, 2, b, SF_DIR)
+    fa = json.load(open(f"{a}/_layout.json"))
+    fb = json.load(open(f"{b}/_layout.json"))
+    assert fa["fingerprint"] == fb["fingerprint"]
+    assert fa["k"] == 2
+    # replicated content, not just metadata parity
+    n = spark.read.parquet(f"{a}/lineitem.parquet").count()
+    assert n == 2 * spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
+    # the fingerprint must actually react to a layout change
+    fb["tables"]["lineitem"]["n_files"] += 1
+    assert fa["fingerprint"] != hashlib.md5(
+        repr(sorted(fb["tables"].items())).encode()
+    ).hexdigest()[:16]
+
+
+def _raising_entry(spark, sf_dir):
+    raise RuntimeError("this cell fails\nsecond line")
+
+
+def test_bench_cells_carry_probe_figures_and_name_failures(spark):
+    bench = _load("bench", ROOT)
+    names = ["q3_shipping_priority", "stream_running_counters",
+             "test_bench_tools:_raising_entry"]
+    cells, failures = bench.time_cells(spark, names, SF_DIR, reps=1)
+    assert failures == {"test_bench_tools:_raising_entry": "this cell fails"}
+    assert list(cells) == names[:2]
+    for c in cells.values():
+        assert c["median"] > 0 and c["q1"] <= c["median"] <= c["q3"]
+        assert len(c["samples"]) == 1 and c["rows"] > 0
+        assert set(c["plan"]) == {"shuffle_stages", "reused", "scans", "py_eval"}
+        assert len(c["artifact_builds"]) == 2
+    assert cells["q3_shipping_priority"]["stream"] is None
+    assert cells["stream_running_counters"]["stream"]["triggers"] > 1
+    assert not spark.streams.active

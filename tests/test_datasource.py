@@ -911,6 +911,31 @@ def test_commit_with_no_rows_writes_nothing(tmp_path):
     assert _committed(hub) == {}
 
 
+def test_foreach_writer_stages_bodies_by_the_writer_rules(tmp_path):
+    """The foreach sink stages rows with the DataSource writer's rules: a
+    string or binary body is kept byte for byte, and an int or null body
+    is refused with a ValueError instead of staged as zero bytes or a
+    bare TypeError."""
+    from pyspark.sql import Row
+
+    from spark_eventhubs_spark.sources.foreach import EventHubsForeachWriter, flush_foreach_staged
+
+    hub = str(tmp_path / "hub")
+    w = EventHubsForeachWriter(hub)
+    for bad in (5, None):
+        w.open(0, 0)
+        w.process(Row(body=bad))
+        with pytest.raises(ValueError, match="body"):
+            w.close(None)
+    assert flush_foreach_staged(hub) == 0
+    w.open(0, 1)
+    w.process(Row(body="a", partition="1"))
+    w.process(Row(body=bytearray(b"\x00b"), partition="1"))
+    w.close(None)
+    assert flush_foreach_staged(hub) == 2
+    assert [r[1] for r in _committed(hub)[1]] == [b"a", b"\x00b"]
+
+
 def test_writer_rejects_both_routings_at_write_time(tmp_path):
     from pyspark.sql import Row
     from pyspark.sql.types import StringType, StructField, StructType

@@ -22,6 +22,9 @@ def test_probe_records_plan_and_trigger_figures(spark):
         assert len(rec["samples"]) == 1
         assert rec["q1"] == rec["median"] == rec["q3"] == rec["samples"][0] > 0
         assert set(rec["plan"]) == {"shuffle_stages", "reused", "scans", "py_eval"}
+        # [warm-up, timed] ingest-artifact builds: the warm-up pays them,
+        # the timed rep finds them in the session cache
+        assert rec["artifact_builds"][1] == 0
     assert batch["target"] == "q3_shipping_priority"
     assert batch["plan"]["scans"] >= 3  # customer, orders, lineitem
     assert batch["stream"] is None

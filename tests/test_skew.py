@@ -97,8 +97,8 @@ def test_aqe_splits_skewed_join_partition(spark):
 
 def test_aqe_splits_scd2_hot_user_enrich_join(spark):
     """The §8 skew story for the SCD2/funnel user-key family, pinned on
-    the REAL topology (scripts/scale_smoke.py's hot-user family is the
-    measured version): one user holds 10% of events; the SCD2 window
+    the REAL topology (NOTES_r06.md records the measured 20M-row
+    hot-user runs): one user holds 10% of events; the SCD2 window
     runs (per-key sequential scan — not splittable by design), and the
     downstream current-state enrich join's oversized probe partition IS
     split by AQE. Thresholds are scaled down because skew stats are
