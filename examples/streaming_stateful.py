@@ -62,14 +62,10 @@ def main() -> None:
     assert n_dedup == n_batch
 
     # 2. running per-user counters across rate-limited micro-batches
-    # a DISTINCT consumer group: part 1's unlimited query advanced the
-    # default group's cursor to the hub end, which would defeat the
-    # rate limit (two queries = two receivers, as the reference requires)
     sdf = (
         spark.readStream.format("eventhubs")
         .option("path", hub_dir)
         .option("eventhubs.maxEventsPerTrigger", "300")
-        .option("eventhubs.consumerGroup", "counters_demo")
         .load()
     )
     q2 = (
@@ -81,7 +77,10 @@ def main() -> None:
         .start()
     )
     q2.processAllAvailable()
+    triggers = sum(p["numInputRows"] > 0 for p in q2.recentProgress)
     q2.stop()
+    print(f"rate-limited triggers with data: {triggers}")
+    assert triggers >= 2
     total = spark.sql(
         "SELECT SUM(n) AS t FROM (SELECT user_id, MAX(n_events) AS n "
         "FROM cnt_sink GROUP BY user_id)"

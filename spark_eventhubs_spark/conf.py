@@ -278,16 +278,16 @@ class EventHubsConf(Mapping[str, str]):
     def set_max_events_per_trigger(self, n: int) -> "EventHubsConf":
         return self.set(MAX_EVENTS_PER_TRIGGER_KEY, int(n))
 
-    def max_events_per_trigger(self, partition_count: int) -> int:
-        """Default = partitionCount * 1000 (ref EventHubsSource.scala:91-96).
-        Accepts the bare key or its ``eventhubs.``-prefixed alias
-        (EventHubsConf.scala:711-712); the bare key wins if both set."""
+    def max_events_per_trigger(self) -> Optional[int]:
+        """The per-trigger event cap, or None (no cap) when unset —
+        unlike the reference, which defaults to partitionCount * 1000
+        (EventHubsSource.scala:91-96). Accepts the bare key or its
+        ``eventhubs.``-prefixed alias (EventHubsConf.scala:711-712); the
+        bare key wins if both set."""
         v = self.get(MAX_EVENTS_PER_TRIGGER_KEY)
         if v is None:
             v = self.get(MAX_EVENTS_PER_TRIGGER_ALIAS_KEY)
-        if v is not None:
-            return int(v)
-        return partition_count * DEFAULT_MAX_RATE_PER_PARTITION
+        return None if v is None else int(v)
 
     def set_max_rate_per_partition(self, n: int) -> "EventHubsConf":
         return self.set(MAX_RATE_PER_PARTITION_KEY, int(n))

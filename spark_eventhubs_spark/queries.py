@@ -2837,11 +2837,13 @@ def _await_state_flush(q, deadline_s: float, name: str,
 
 
 def _run_stream_to_memory(df, name: str, available_now: bool = True,
-                          mode: str | None = None):
+                          mode: str | None = None, then: Callable | None = None):
     """Drain a stream into a memory table. availableNow drains in one
     bounded pass; the multi-trigger path (rate-limited sources) runs a
     fast processingTime trigger until processAllAvailable, so state
-    demonstrably carries across several real micro-batches.
+    demonstrably carries across several real micro-batches. On that
+    path an optional ``then(q, deadline_s)`` runs after the drain,
+    inside the same 300 s budget (``deadline_s`` is its absolute end).
 
     The drain runs under 8 shuffle/state partitions: stateful streaming
     fixes its state-store partition count from shuffle.partitions at
@@ -2898,7 +2900,16 @@ def _run_stream_to_memory(df, name: str, available_now: bool = True,
                 # _threaded_drain also re-raises any exception the
                 # drain itself hits (a failed query must surface as an
                 # error, never as a partial sink aggregated silently).
-                _threaded_drain(q.processAllAvailable, 300, name)
+                import time as _time
+
+                deadline_s = _time.time() + 300
+
+                def _drain():
+                    q.processAllAvailable()
+                    if then is not None:
+                        then(q, deadline_s)
+
+                _threaded_drain(_drain, 300, name)
             finally:
                 q.stop()
     finally:
@@ -2914,10 +2925,8 @@ def _rate_limited_hub_stream(
     """Shared setup for the rate-limited streaming twins: a reader of
     the session-cached hub (or an entry-private ``path``), throttled
     to ~4 micro-batches at any sf (multi-batch state carry-over is
-    what's under test, not wall-clock proportional to the backlog),
-    with a unique per-run consumer group so cursors never interfere
-    across entries or repeated runs. Returns (stream DataFrame,
-    unique sink name)."""
+    what's under test, not wall-clock proportional to the backlog).
+    Returns (stream DataFrame, unique sink name)."""
     path = path or _hub_stream_dir(spark, sf_dir)
     run = next(_STREAM_RUNS)
     name = f"{tag}_{run}"
@@ -2933,7 +2942,6 @@ def _rate_limited_hub_stream(
         spark.readStream.format("eventhubs")
         .option("path", path)
         .option("eventhubs.maxEventsPerTrigger", str(max(500, n_events // 4 + 64)))
-        .option("eventhubs.consumerGroup", name)
         .load()
     )
     return sdf, name
@@ -3589,61 +3597,32 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     gap_str = f"{_SESSION_GAP_US // 60_000_000} minutes"
     sess = streaming_sessionize(sdf, gap=gap_str, delay=f"{span_h} hours")
 
-    from spark_eventhubs_spark import workdirs as _wd
-
-    spark_sess = spark
-    prev = spark_sess.conf.get("spark.sql.shuffle.partitions")
-    spark_sess.conf.set("spark.sql.shuffle.partitions", "8")
-    ck = _wd.scratch_dir("seh_ckpt_")
-    try:
-        q = (
-            sess.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ck)
-            .trigger(processingTime=_STREAM_TICK)
-            .start()
+    def _flush(q, deadline_s):
+        # coalesce(1): a local 1-row frame otherwise fans out to
+        # defaultParallelism write tasks (32 here), each spinning
+        # up a Python DataSource writer worker for an empty
+        # iterator — measured 49 s cold / 6 s warm for ONE event
+        # vs ~1.5 s single-task (guide §5: the driver/task count,
+        # not the data, was the cost). Commit semantics unchanged:
+        # empty staged files contribute no rows either way.
+        sent = spark.createDataFrame([("sentinel",)], "body string").coalesce(1).select(
+            "body",
+            F.create_map(
+                F.lit("user_id"), F.lit("zz_sentinel"),
+                F.lit("event_type"), F.lit("sentinel"),
+                F.lit("run"), F.lit(name),
+            ).alias("properties"),
         )
-        import time as _time
+        sent.write.format("eventhubs").mode("append").option("path", path).save()
+        q.processAllAvailable()  # sentinel ingested
+        # flush is complete exactly when every real session has
+        # been closed and evicted — i.e. the state operator holds
+        # only the sentinel's own still-open session; the wait
+        # consumes whatever of the one drain budget remains
+        _await_state_flush(q, deadline_s, name)
 
-        # ONE outer drain budget; the watermark-flush wait consumes
-        # whatever of it remains (the r11 code stacked a separate
-        # 120 s flush deadline whose RuntimeError died silently in
-        # the daemon thread — the round-11 driver red)
-        _budget_s = 300.0
-        _t0 = _time.time()
-
-        def _drain():
-            q.processAllAvailable()  # real backlog, fully ordered
-            # coalesce(1): a local 1-row frame otherwise fans out to
-            # defaultParallelism write tasks (32 here), each spinning
-            # up a Python DataSource writer worker for an empty
-            # iterator — measured 49 s cold / 6 s warm for ONE event
-            # vs ~1.5 s single-task (guide §5: the driver/task count,
-            # not the data, was the cost). Commit semantics unchanged:
-            # empty staged files contribute no rows either way.
-            sent = spark.createDataFrame([("sentinel",)], "body string").coalesce(1).select(
-                "body",
-                F.create_map(
-                    F.lit("user_id"), F.lit("zz_sentinel"),
-                    F.lit("event_type"), F.lit("sentinel"),
-                    F.lit("run"), F.lit(name),
-                ).alias("properties"),
-            )
-            sent.write.format("eventhubs").mode("append").option("path", path).save()
-            q.processAllAvailable()  # sentinel ingested
-            # flush is complete exactly when every real session has
-            # been closed and evicted — i.e. the state operator holds
-            # only the sentinel's own still-open session
-            _await_state_flush(q, _t0 + _budget_s, name)
-
-        try:
-            _threaded_drain(_drain, _budget_s, name)
-        finally:
-            q.stop()
-    finally:
-        spark_sess.conf.set("spark.sql.shuffle.partitions", prev)
-        _wd.release(ck)
+    _run_stream_to_memory(sess, name, available_now=False, mode="append",
+                          then=_flush)
     return spark.sql(
         f"""SELECT user_id AS user_id_str,
                    unix_micros(session_start) AS start_us,

@@ -669,17 +669,21 @@ class EventHubsStreamReader(DataSourceStreamReader):
     by the tracker's performance percentages, rebuilt from the
     :class:`_ReceiveLog` that ``partitions()`` and ``read()`` write.
 
-    **Cursor file.** Spark serves initialOffset/latestOffset/partitions/
-    commit from more than one python worker process, so admission-control
-    state cannot live on the instance. The throttle cursor is a JSON file
-    under ``<hub>/_cursors/<consumerGroup>.json`` — the file-backed
-    analogue of the service's per-consumer-group receiver cursor — with
-    per-partition **monotonic max-merge** on every update, which makes
-    the sequence of latestOffset answers non-decreasing across processes:
-    the engine's offset log can never regress, so no event is planned
-    twice. Two concurrent queries should use distinct consumer groups,
-    exactly as the reference requires for two receivers
-    (docs/structured-streaming-eventhubs-integration.md).
+    **Throttle cursor.** Within a query Spark calls ``latestOffset``,
+    ``initialOffset``, ``partitions`` and ``commit`` on ONE reader
+    instance in one process (the streaming source runner); only
+    ``read()`` runs in worker processes, each on its own copy. A fresh
+    query calls ``latestOffset`` -> ``initialOffset`` -> ``partitions``;
+    a restart first replays its offset log through ``partitions()``
+    (the last committed range, then any uncommitted one) and only then
+    calls ``latestOffset``. So the throttle position is plain instance
+    state: ``_start`` is the configured start, resolved once, which
+    ``initialOffset`` returns and a fresh query's first throttled
+    ``latestOffset`` starts from; ``_cursor`` is the per-partition max
+    of the last ``latestOffset`` answer and every ``partitions()`` end,
+    which keeps the answers non-decreasing. The query's offset log is
+    the only durable record of where the source stands, as in the
+    reference (EventHubsSource.scala:118-244).
 
     **Trigger.AvailableNow + maxEventsPerTrigger.** Spark's Python
     streaming API exposes no SupportsTriggerAvailableNow hook, so an
@@ -699,8 +703,9 @@ class EventHubsStreamReader(DataSourceStreamReader):
         self._conf = _open_conf(options)
         self.name = self._conf.name or os.path.basename(self.hub_dir.rstrip("/")) or "events"
         group = self._conf.consumer_group.replace("$", "_")
-        self._cursor_path = os.path.join(self.hub_dir, "_cursors", f"{group}.json")
         self._receive_log = _ReceiveLog(self.hub_dir, group)
+        self._start: Optional[Dict[int, int]] = None
+        self._cursor: Dict[int, int] = {}
 
     def _pack(self, seq_nos: Dict[int, int]) -> dict:
         return {self.name: {str(p): int(s) for p, s in sorted(seq_nos.items())}}
@@ -709,33 +714,17 @@ class EventHubsStreamReader(DataSourceStreamReader):
         (_, inner), = offset.items()
         return {int(p): int(s) for p, s in inner.items()}
 
-    # -- cursor file ops --
-    def _cursor_read(self) -> Optional[Dict[int, int]]:
-        cur = _read_json(self._cursor_path)
-        return None if cur is None else {int(k): int(v) for k, v in cur.items()}
+    def _start_for(self, bounds: Dict[int, Tuple[int, int]]) -> Dict[int, int]:
+        if self._start is None:
+            self._start = _resolve_positions(self._conf, self.hub_dir, bounds, use_start=True)
+        return self._start
 
-    def _cursor_write(self, seq_nos: Dict[int, int], merge: bool = True) -> Dict[int, int]:
-        """Max-merge ``seq_nos`` into the cursor (``merge=False``: reset
-        it) and return the result. A merge that advances no partition
-        writes nothing: idle polls would otherwise rewrite the file."""
-        if merge:
-            read = self._cursor_read()
-            cur = dict(read or {})
-            for pid, s in seq_nos.items():
-                cur[pid] = max(cur.get(pid, 0), s)
-            if cur == read:
-                return cur
-        else:
-            cur = dict(seq_nos)
-        os.makedirs(os.path.dirname(self._cursor_path), exist_ok=True)
-        _write_json(self._cursor_path, {str(p): s for p, s in cur.items()})
-        return cur
+    def _advance(self, seq_nos: Dict[int, int]) -> None:
+        for pid, s in seq_nos.items():
+            self._cursor[pid] = max(self._cursor.get(pid, 0), s)
 
     def initialOffset(self) -> dict:
-        bounds = hub_bounds(self.hub_dir, self._conf.partition_count)
-        start = _resolve_positions(self._conf, self.hub_dir, bounds, use_start=True)
-        # a fresh query = a fresh consumer: reset (not merge) the cursor
-        self._cursor_write(start, merge=False)
+        start = self._start_for(hub_bounds(self.hub_dir, self._conf.partition_count))
         if self._conf.slow_partition_adjustment:
             self._receive_log.reset()
         return self._pack(start)
@@ -746,19 +735,13 @@ class EventHubsStreamReader(DataSourceStreamReader):
         conf = self._conf
         bounds = hub_bounds(self.hub_dir, conf.partition_count)
         latest = {pid: b[1] for pid, b in bounds.items()}
-        # bare key first, prefixed alias second (EventHubsConf.scala:711-712)
-        raw = conf.get("maxEventsPerTrigger") or conf.get("eventhubs.maxEventsPerTrigger")
-        if raw is None and not conf.max_rate_configured:
+        max_events = conf.max_events_per_trigger()
+        if max_events is None and not conf.max_rate_configured:
             target = latest
         else:
-            cursor = self._cursor_read()
-            if cursor is None:
-                # the engine calls latestOffset before initialOffset on a
-                # fresh stream: seed the cursor from the configured start so
-                # the very first trigger is already throttled
-                cursor = self._cursor_write(
-                    _resolve_positions(conf, self.hub_dir, bounds, use_start=True)
-                )
+            # a fresh query's first call precedes initialOffset: start
+            # from the configured position so that trigger is throttled
+            cursor = self._cursor or self._start_for(bounds)
             earliest = {pid: b[0] for pid, b in bounds.items()}
             start = {pid: max(cursor.get(pid, 0), earliest[pid]) for pid in latest}
             if conf.max_rate_configured:
@@ -770,22 +753,22 @@ class EventHubsStreamReader(DataSourceStreamReader):
                     for pid, hi in latest.items()
                 }
             target = latest
-            if raw is not None:
+            if max_events is not None:
                 factors = None
                 if conf.slow_partition_adjustment:
                     factors = self._receive_log.performance_percentages(
                         len(latest), conf.max_acceptable_batch_receive_time_ms
                     )
-                target = rate_limit(int(raw), start, latest, earliest, factors)
-        # monotonic merge guarantees this answer is >= every previous one
-        merged = self._cursor_write(target)
-        return self._pack({pid: merged.get(pid, s) for pid, s in target.items()})
+                target = rate_limit(max_events, start, latest, earliest, factors)
+        self._advance(target)
+        return self._pack({pid: self._cursor[pid] for pid in target})
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         s, e = self._unpack(start), self._unpack(end)
         bounds = hub_bounds(self.hub_dir, self._conf.partition_count)
-        # the offset log is authoritative: fold it into the cursor
-        self._cursor_write({pid: max(s.get(pid, 0), e.get(pid, 0)) for pid in set(s) | set(e)})
+        # the offset log is authoritative: a restart replays it through
+        # here before its first latestOffset
+        self._advance(e)
         # new partitions appearing mid-stream start at their default
         # translated position (ref EventHubsSource.scala:183-192,350-366)
         for pid in set(e) - set(s):
@@ -807,12 +790,6 @@ class EventHubsStreamReader(DataSourceStreamReader):
         if self._conf.slow_partition_adjustment:
             return _read_range(partition, self._receive_log.record_receive)
         return _read_range(partition)
-
-    def commit(self, end: dict) -> None:
-        self._cursor_write(self._unpack(end))
-
-    def stop(self) -> None:
-        pass
 
 
 # ---------------------------------------------------------------------------
@@ -1199,9 +1176,9 @@ def materialize_hub(spark, sf_dir_or_events: str, hub_dir: str,
     return hub_dir
 
 
-# hub side-dirs a log rewrite carries over: the sink's batchId ledgers,
-# the consumer cursors and the slow-partition receive logs
-_META_DIRS = ("_commits", "_batch_commits", "_cursors", "_receive")
+# hub side-dirs a log rewrite carries over: the sink's batchId ledgers
+# and the slow-partition receive logs
+_META_DIRS = ("_commits", "_batch_commits", "_receive")
 
 
 def _rewrite_hub_log(spark, hub_dir: str, partition_count: int, tag: str,

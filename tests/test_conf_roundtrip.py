@@ -92,10 +92,11 @@ def test_reference_canonical_casings_resolve():
 
 def test_max_events_per_trigger_bare_key_beats_alias():
     conf = EventHubsConf(CONN)
+    assert conf.max_events_per_trigger() is None  # unset = no cap
     conf.set(C.MAX_EVENTS_PER_TRIGGER_ALIAS_KEY, 6000)
-    assert conf.max_events_per_trigger(4) == 6000  # alias alone works
+    assert conf.max_events_per_trigger() == 6000  # alias alone works
     conf.set(C.MAX_EVENTS_PER_TRIGGER_KEY, 5000)
-    assert conf.max_events_per_trigger(4) == 5000  # bare key wins
+    assert conf.max_events_per_trigger() == 5000  # bare key wins
 
 
 def test_trimmed_matches_reference_include_list():

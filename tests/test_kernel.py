@@ -31,8 +31,9 @@ def test_conf_defaults():
     conf = EventHubsConf(file_hub_connection_string("/tmp/x"))
     assert conf.consumer_group == DEFAULT_CONSUMER_GROUP
     assert conf.partition_count == 4
-    # default maxEventsPerTrigger = partitionCount * 1000 (EventHubsSource.scala:91-96)
-    assert conf.max_events_per_trigger(4) == 4000
+    # unset maxEventsPerTrigger = no cap (the reference defaults to
+    # partitionCount * 1000, EventHubsSource.scala:91-96)
+    assert conf.max_events_per_trigger() is None
     assert conf.max_rate_per_partition_for(0) == 1000
 
 

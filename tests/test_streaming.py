@@ -210,12 +210,27 @@ def _per_partition(df):
 def test_microbatch_progression_rate_limited(spark, stream_hub, tmp_path):
     # 80 events, 40 per trigger -> 2 batches of 40 (10 per partition)
     seen = []
+    before = sorted(os.listdir(stream_hub))
     _drain(spark, stream_hub, str(tmp_path / "ckpt"),
            lambda df, bid: seen.append((bid, df.count())),
            {"maxEventsPerTrigger": 40})
     assert seen == [(0, 40), (1, 40)]
-    # slowPartitionAdjustment is off: no receive log is written
-    assert not os.path.exists(os.path.join(stream_hub, "_receive"))
+    # the reader adds nothing to the hub: no receive log (slowPartition-
+    # Adjustment is off) and no throttle state beside the partition logs
+    assert sorted(os.listdir(stream_hub)) == before
+
+
+def test_earlier_query_on_the_group_leaves_the_throttle_intact(spark, stream_hub, tmp_path):
+    """A throttled query's first trigger admits one quota from the
+    configured start, whatever an earlier query on the same consumer
+    group consumed: the throttle position lives in the query, not in
+    the hub."""
+    _drain(spark, stream_hub, str(tmp_path / "ck1"), lambda df, bid: df.count())
+    seen = []
+    _drain(spark, stream_hub, str(tmp_path / "ck2"),
+           lambda df, bid: seen.append((bid, df.count())),
+           {"maxEventsPerTrigger": 40})
+    assert seen == [(0, 40), (1, 40)]
 
 
 def test_microbatch_no_limit_single_batch(spark, stream_hub, tmp_path):
