@@ -12,7 +12,6 @@ Layout:
     conf        EventHubsConf options model  (ref: eventhubs/EventHubsConf.scala)
     connstr     connection-string builder     (ref: eventhubs/ConnectionStringBuilder.scala)
     position    EventPosition                 (ref: eventhubs/EventPosition.scala)
-    offsets     OffsetRange / source offsets  (ref: eventhubs/rdd/OffsetRange.scala, sql/eventhubs/JsonUtils.scala)
     plans/      canonical hub view derivation (ref: sql/eventhubs/EventHubsSourceProvider.scala eventHubsSchema)
     sources/    format("eventhubs") DataSource: batch + stream reader and
                 writer, position translation, read_eventhubs/write_eventhubs
@@ -29,14 +28,10 @@ __version__ = "0.1.0"
 
 from spark_eventhubs_spark.conf import EventHubsConf
 from spark_eventhubs_spark.position import EventPosition
-from spark_eventhubs_spark.offsets import NameAndPartition, OffsetRange, EventHubsSourceOffset
 
 __all__ = [
     "EventHubsConf",
     "EventPosition",
-    "NameAndPartition",
-    "OffsetRange",
-    "EventHubsSourceOffset",
     # lazy (PEP 562) — resolved on first touch so `import
     # spark_eventhubs_spark` stays light; these pull pyspark:
     "read_eventhubs",

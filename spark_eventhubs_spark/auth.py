@@ -28,7 +28,7 @@ from __future__ import annotations
 import importlib
 import json
 from abc import ABC, abstractmethod
-from typing import Any, Dict, Optional
+from typing import Any, Optional
 
 from spark_eventhubs_spark.conf import (
     AAD_AUTH_CALLBACK_KEY,
@@ -63,8 +63,17 @@ def resolve_aad_callback(conf: EventHubsConf) -> Optional[AadAuthenticationCallb
     if not conf.use_aad_auth:
         return None
     path = conf.get(AAD_AUTH_CALLBACK_KEY)
-    if path is None:  # validate() rejects this combination already
+    if path is None:
         raise ValueError(f"{AAD_AUTH_CALLBACK_KEY} is required for AAD auth")
+    params_json = conf.get(AAD_AUTH_CALLBACK_PARAMS_KEY) or "{}"
+    try:
+        params: Any = json.loads(params_json)
+    except json.JSONDecodeError:
+        params = None
+    if not isinstance(params, dict):
+        raise ValueError(
+            f"{AAD_AUTH_CALLBACK_PARAMS_KEY} must be a JSON object, got {params_json!r}"
+        )
     mod_name, _, cls_name = path.rpartition(".")
     if not mod_name:
         raise ValueError(
@@ -75,8 +84,6 @@ def resolve_aad_callback(conf: EventHubsConf) -> Optional[AadAuthenticationCallb
         cls = getattr(importlib.import_module(mod_name), cls_name)
     except (ImportError, AttributeError) as e:
         raise ValueError(f"cannot load AAD callback class {path!r}: {e}") from e
-    params_json = conf.get(AAD_AUTH_CALLBACK_PARAMS_KEY)
-    params: Dict[str, Any] = json.loads(params_json) if params_json else {}
     cb = cls(params) if params else cls()
     if not isinstance(cb, AadAuthenticationCallback):
         raise TypeError(

@@ -3,17 +3,24 @@
 Re-implements the semantics of
 ``core/src/main/scala/org/apache/spark/eventhubs/EventHubsConf.scala``:
 - case-insensitive string->string map with typed setters (lines 55-115)
-- the option-key namespace (lines 697-722)
+- the option-key namespace (lines 697-722), for the keys this package
+  reads
 - precedence: per-partition maps override global scalars which override
   defaults (lines 242-245, 344-346)
-- ``trimmed`` strips driver-only options before shipping to executors
-  (lines 163-191)
+- the connection string is stored encrypted and decrypted on read
+  (lines 137-144)
 
 Values are stored as strings (positions as JSON) exactly as PySpark
 users of the reference build them
-(docs/PySpark/structured-streaming-pyspark.md:52-120). Connection-string
-encryption (EventHubsConf.scala:137-144) is intentionally out of scope:
-no secrets exist for a file-backed hub.
+(docs/PySpark/structured-streaming-pyspark.md:52-120). An option map
+written for the reference is accepted unchanged: any key round-trips
+through ``to_map``/``from_map``, and the keys with no meaning for a
+file-backed hub (receiver and operation timeouts, prefetch, thread
+pool, exclusive receiver, simulated client, metric and throttling
+plugins, preferred-location strategy, partition discovery: the stream
+reader always picks up a new partition) are simply not read. Spark
+hands the reader and the writer the same options map, so no
+executor-side subset is built.
 """
 
 from __future__ import annotations
@@ -33,98 +40,22 @@ ENDING_POSITION_KEY = "eventhubs.endingPosition"
 ENDING_POSITIONS_KEY = "eventhubs.endingPositions"
 MAX_RATE_PER_PARTITION_KEY = "eventhubs.maxRatePerPartition"
 MAX_RATES_PER_PARTITION_KEY = "eventhubs.maxRatesPerPartition"
-RECEIVER_TIMEOUT_KEY = "eventhubs.receiverTimeout"
-MAX_SILENT_TIME_KEY = "eventhubs.maxSilentTime"
-OPERATION_TIMEOUT_KEY = "eventhubs.operationTimeout"
 MAX_ACCEPTABLE_BATCH_RECEIVE_TIME_KEY = "eventhubs.maxAcceptableBatchReceiveTime"
-PREFETCH_COUNT_KEY = "eventhubs.prefetchCount"
-THREAD_POOL_SIZE_KEY = "eventhubs.threadPoolSize"
-USE_EXCLUSIVE_RECEIVER_KEY = "eventhubs.useExclusiveReceiver"
 # the reference's primary key is the UN-prefixed "maxEventsPerTrigger";
 # the prefixed form is its documented alias (EventHubsConf.scala:711-712)
 MAX_EVENTS_PER_TRIGGER_KEY = "maxEventsPerTrigger"
 MAX_EVENTS_PER_TRIGGER_ALIAS_KEY = "eventhubs.maxEventsPerTrigger"
-USE_SIMULATED_CLIENT_KEY = "useSimulatedClient"
-METRIC_PLUGIN_KEY = "eventhubs.metricPlugin"
-PARTITION_PREFERRED_LOCATION_STRATEGY_KEY = "partitionPreferredLocationStrategy"
 SLOW_PARTITION_ADJUSTMENT_KEY = "eventhubs.slowPartitionAdjustment"
-THROTTLING_STATUS_PLUGIN_KEY = "eventhubs.throttlingStatusPlugin"
 USE_AAD_AUTH_KEY = "eventhubs.useAadAuth"
 AAD_AUTH_CALLBACK_KEY = "eventhubs.aadAuthCallback"
 AAD_AUTH_CALLBACK_PARAMS_KEY = "eventhubs.AadAuthCallbackParams"
-DYNAMIC_PARTITION_DISCOVERY_KEY = "eventhubs.DynamicPartitionDiscovery"
 PARTITION_COUNT_KEY = "eventhubs.partitionCount"  # ours: partition count of the simulated hub
-
-#: Every option key the reference enumerates, in its canonical casing
-#: (EventHubsConf.scala:697-722) — the round-trip compatibility test
-#: iterates this list.
-REFERENCE_OPTION_KEYS = [
-    CONNECTION_STRING_KEY,
-    CONSUMER_GROUP_KEY,
-    STARTING_POSITION_KEY,
-    STARTING_POSITIONS_KEY,
-    ENDING_POSITION_KEY,
-    ENDING_POSITIONS_KEY,
-    MAX_RATE_PER_PARTITION_KEY,
-    MAX_RATES_PER_PARTITION_KEY,
-    RECEIVER_TIMEOUT_KEY,
-    MAX_SILENT_TIME_KEY,
-    OPERATION_TIMEOUT_KEY,
-    PREFETCH_COUNT_KEY,
-    THREAD_POOL_SIZE_KEY,
-    USE_EXCLUSIVE_RECEIVER_KEY,
-    MAX_EVENTS_PER_TRIGGER_KEY,
-    MAX_EVENTS_PER_TRIGGER_ALIAS_KEY,
-    USE_SIMULATED_CLIENT_KEY,
-    METRIC_PLUGIN_KEY,
-    PARTITION_PREFERRED_LOCATION_STRATEGY_KEY,
-    SLOW_PARTITION_ADJUSTMENT_KEY,
-    THROTTLING_STATUS_PLUGIN_KEY,
-    MAX_ACCEPTABLE_BATCH_RECEIVE_TIME_KEY,
-    USE_AAD_AUTH_KEY,
-    AAD_AUTH_CALLBACK_KEY,
-    AAD_AUTH_CALLBACK_PARAMS_KEY,
-    DYNAMIC_PARTITION_DISCOVERY_KEY,
-]
 
 # Defaults — ref eventhubs/package.scala:37-59
 DEFAULT_CONSUMER_GROUP = "$Default"
 DEFAULT_MAX_RATE_PER_PARTITION = 1000
-DEFAULT_RECEIVER_TIMEOUT_MS = 60_000
-DEFAULT_OPERATION_TIMEOUT_MS = 300_000
 DEFAULT_MAX_ACCEPTABLE_BATCH_RECEIVE_TIME_MS = 30_000
-DEFAULT_PREFETCH_COUNT = 500
-DEFAULT_THREAD_POOL_SIZE = 16
 DEFAULT_PARTITION_COUNT = 4  # ref utils/EventHubsTestUtils.scala:189
-
-# Options shipped to executors by trimmed() — the reference uses an
-# INCLUDE list, not an exclude list (EventHubsConf.scala:163-191), so
-# unknown/driver-only keys are dropped rather than leaked. Same list
-# here, plus our partitionCount (the simulated hub's geometry, which
-# executor-side range readers need).
-_EXECUTOR_KEYS = {
-    k.lower()
-    for k in (
-        CONNECTION_STRING_KEY,
-        CONSUMER_GROUP_KEY,
-        RECEIVER_TIMEOUT_KEY,
-        MAX_SILENT_TIME_KEY,
-        OPERATION_TIMEOUT_KEY,
-        PREFETCH_COUNT_KEY,
-        THREAD_POOL_SIZE_KEY,
-        USE_EXCLUSIVE_RECEIVER_KEY,
-        USE_SIMULATED_CLIENT_KEY,
-        METRIC_PLUGIN_KEY,
-        SLOW_PARTITION_ADJUSTMENT_KEY,
-        THROTTLING_STATUS_PLUGIN_KEY,
-        MAX_ACCEPTABLE_BATCH_RECEIVE_TIME_KEY,
-        USE_AAD_AUTH_KEY,
-        AAD_AUTH_CALLBACK_KEY,
-        AAD_AUTH_CALLBACK_PARAMS_KEY,
-        DYNAMIC_PARTITION_DISCOVERY_KEY,
-        PARTITION_COUNT_KEY,
-    )
-}
 
 
 class EventHubsConf(Mapping[str, str]):
@@ -166,24 +97,6 @@ class EventHubsConf(Mapping[str, str]):
 
     def to_map(self) -> Dict[str, str]:
         return {self._names[lk]: v for lk, v in self._map.items()}
-
-    def clone(self) -> "EventHubsConf":
-        c = EventHubsConf()
-        c._map = dict(self._map)
-        c._names = dict(self._names)
-        return c
-
-    def trimmed(self) -> "EventHubsConf":
-        """Keep only the options executors need, dropping everything
-        else — include-list semantics per ref EventHubsConf.scala:163-191
-        (positions, rate limits and trigger caps are driver-side
-        planner state and never ship)."""
-        c = EventHubsConf()
-        for lk, v in self._map.items():
-            if lk in _EXECUTOR_KEYS:
-                c._map[lk] = v
-                c._names[lk] = self._names[lk]
-        return c
 
     @classmethod
     def from_map(cls, m: Mapping[str, str]) -> "EventHubsConf":
@@ -337,66 +250,14 @@ class EventHubsConf(Mapping[str, str]):
     def partition_count(self) -> int:
         return int(self.get(PARTITION_COUNT_KEY, str(DEFAULT_PARTITION_COUNT)))
 
-    # ---- receiver/client tuning knobs (executor-shipped) ----
-    def set_receiver_timeout_ms(self, ms: int) -> "EventHubsConf":
-        return self.set(RECEIVER_TIMEOUT_KEY, int(ms))
-
-    @property
-    def receiver_timeout_ms(self) -> int:
-        return int(self.get(RECEIVER_TIMEOUT_KEY, str(DEFAULT_RECEIVER_TIMEOUT_MS)))
-
-    def set_max_silent_time_ms(self, ms: int) -> "EventHubsConf":
-        return self.set(MAX_SILENT_TIME_KEY, int(ms))
-
-    def set_operation_timeout_ms(self, ms: int) -> "EventHubsConf":
-        return self.set(OPERATION_TIMEOUT_KEY, int(ms))
-
-    @property
-    def operation_timeout_ms(self) -> int:
-        return int(self.get(OPERATION_TIMEOUT_KEY, str(DEFAULT_OPERATION_TIMEOUT_MS)))
-
-    def set_prefetch_count(self, n: int) -> "EventHubsConf":
-        return self.set(PREFETCH_COUNT_KEY, int(n))
-
-    @property
-    def prefetch_count(self) -> int:
-        return int(self.get(PREFETCH_COUNT_KEY, str(DEFAULT_PREFETCH_COUNT)))
-
-    def set_thread_pool_size(self, n: int) -> "EventHubsConf":
-        return self.set(THREAD_POOL_SIZE_KEY, int(n))
-
-    def set_use_exclusive_receiver(self, b: bool) -> "EventHubsConf":
-        return self.set(USE_EXCLUSIVE_RECEIVER_KEY, "true" if b else "false")
-
-    def set_metric_plugin(self, class_name: str) -> "EventHubsConf":
-        return self.set(METRIC_PLUGIN_KEY, class_name)
-
-    def set_throttling_status_plugin(self, class_name: str) -> "EventHubsConf":
-        return self.set(THROTTLING_STATUS_PLUGIN_KEY, class_name)
-
-    def set_partition_preferred_location_strategy(self, s: str) -> "EventHubsConf":
-        if s not in ("Hash", "BalancedHash"):
-            raise ValueError(
-                "partitionPreferredLocationStrategy must be 'Hash' or "
-                f"'BalancedHash' (ref eventhubs/package.scala:84-87), got {s!r}"
-            )
-        return self.set(PARTITION_PREFERRED_LOCATION_STRATEGY_KEY, s)
-
-    def set_dynamic_partition_discovery(self, b: bool) -> "EventHubsConf":
-        return self.set(DYNAMIC_PARTITION_DISCOVERY_KEY, "true" if b else "false")
-
-    @property
-    def dynamic_partition_discovery(self) -> bool:
-        return self.get(DYNAMIC_PARTITION_DISCOVERY_KEY, "false").lower() == "true"
-
     # ---- AAD auth surface ----
     # The reference authenticates via a user-supplied
     # AadAuthenticationCallback class shipped in the conf
     # (utils/AadAuthenticationCallback.scala:1,
     # docs/use-aad-authentication-to-connect-eventhubs.md). The conf
-    # surface and validation live here; the execution path — class
+    # surface lives here; the checks and the execution path — class
     # resolution, constructor selection, token acquisition at
-    # connection-open time — is spark_eventhubs_spark/auth.py, invoked
+    # connection-open time — are spark_eventhubs_spark/auth.py, invoked
     # when a format("eventhubs") reader is created, the moment the
     # reference's ClientConnectionPool invokes it.
     def set_use_aad_auth(self, b: bool) -> "EventHubsConf":
@@ -416,19 +277,3 @@ class EventHubsConf(Mapping[str, str]):
         return self.set(
             AAD_AUTH_CALLBACK_PARAMS_KEY, json.dumps(dict(params), sort_keys=True)
         )
-
-    def validate(self) -> None:
-        if self.connection_string is None:
-            raise ValueError(f"Must set {CONNECTION_STRING_KEY}")
-        if self.use_aad_auth and self.get(AAD_AUTH_CALLBACK_KEY) is None:
-            raise ValueError(
-                f"{USE_AAD_AUTH_KEY}=true requires {AAD_AUTH_CALLBACK_KEY} "
-                "(ref docs/use-aad-authentication-to-connect-eventhubs.md)"
-            )
-        if AAD_AUTH_CALLBACK_PARAMS_KEY in self:
-            try:
-                json.loads(self[AAD_AUTH_CALLBACK_PARAMS_KEY])
-            except json.JSONDecodeError as e:
-                raise ValueError(
-                    f"{AAD_AUTH_CALLBACK_PARAMS_KEY} must be a JSON object: {e}"
-                ) from e

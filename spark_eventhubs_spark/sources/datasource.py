@@ -13,7 +13,8 @@ write exactly the idiomatic calls the reference documents:
     df  = spark.read.format("eventhubs").options(**conf).load()
     sdf = spark.readStream.format("eventhubs").options(**conf).load()
     df.write.format("eventhubs").mode("append").options(**conf).save()
-    sdf.writeStream.format("eventhubs").options(**conf).start()
+    (sdf.writeStream.format("eventhubs").options(**conf)
+        .option("checkpointLocation", ckpt).start())
 
 Storage is a **materialized hub directory**: hive layout
 ``partition=<pid>/*.parquet`` in the canonical 9-column schema minus the
@@ -63,6 +64,7 @@ import logging
 import os
 import threading
 import time
+import uuid
 from dataclasses import dataclass
 from typing import Callable, Dict, Iterator, List, NamedTuple, Optional, Sequence, Tuple
 
@@ -82,6 +84,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from spark_eventhubs_spark.conf import (
+    DEFAULT_PARTITION_COUNT,
+    PARTITION_COUNT_KEY,
+    EventHubsConf,
+)
 from spark_eventhubs_spark.streaming.tracker import (
     TRACKING_BATCH_COUNT,
     PartitionsStatusTracker,
@@ -334,15 +341,6 @@ def _hub_dir_from_options(options) -> str:
     )
 
 
-def _conf_from_options(options):
-    from spark_eventhubs_spark.conf import EventHubsConf
-
-    conf = EventHubsConf()
-    for k in options:
-        conf.set(k, options[k])
-    return conf
-
-
 def _resolve_positions(
     conf, hub_dir: str, bounds: Dict[int, Tuple[int, int]], use_start: bool
 ) -> Dict[int, int]:
@@ -534,7 +532,7 @@ def _open_conf(options):
     planned; the file-backed hub needs no token afterwards."""
     from spark_eventhubs_spark.auth import acquire_connection_token
 
-    conf = _conf_from_options(options)
+    conf = EventHubsConf.from_map(options)
     acquire_connection_token(conf)
     return conf
 
@@ -885,7 +883,7 @@ class EventHubsWriterBase:
         self.schema = schema
         self.hub_dir = _hub_dir_from_options(options)
         self.cols = _validate_write_schema(schema)
-        pc = options.get("eventhubs.partitioncount")
+        pc = EventHubsConf.from_map(options).get(PARTITION_COUNT_KEY)
         self.partition_count = int(pc) if pc else None
 
     # -- executor side: stage rows as a small parquet file --
@@ -908,10 +906,6 @@ class EventHubsWriterBase:
             if m is not None and os.path.exists(m.path):
                 os.remove(m.path)
 
-
-# Least partition count a sink routes over when eventhubs.partitionCount is
-# unset; a hub whose partition directories go higher routes over all of them.
-DEFAULT_PARTITION_COUNT = 4
 
 _STAGED_COLUMNS = ["body", "partition", "partitionKey", "properties"]
 
@@ -1019,11 +1013,10 @@ def commit_staged_paths(
 
 class EventHubsBatchWriter(EventHubsWriterBase, DataSourceWriter):
     def commit(self, messages) -> None:
-        cdir = os.path.join(self.hub_dir, "_commits")
-        os.makedirs(cdir, exist_ok=True)
-        idx = len([f for f in os.listdir(cdir) if f.startswith("batch-")])
-        self._commit_staged(messages, f"b{idx:06d}")
-        open(os.path.join(cdir, f"batch-{idx:06d}"), "w").close()
+        # a fresh tag per write: a reused one would os.replace an earlier
+        # write's commit file (batch-level idempotence is write_eventhubs'
+        # ``_batch_commits/<id>``)
+        self._commit_staged(messages, f"b{uuid.uuid4().hex}")
 
 
 class EventHubsStreamWriter(EventHubsWriterBase, DataSourceStreamWriter):
@@ -1034,8 +1027,10 @@ class EventHubsStreamWriter(EventHubsWriterBase, DataSourceStreamWriter):
     Batch ids count per query, so the ``_commits/epoch-*`` ledger is
     keyed by the query's checkpoint, which Spark passes as the
     ``checkpointLocation`` option when it is set with ``.option``: two
-    queries writing one hub each keep their own batches. Without that
-    option the marker is hub-wide."""
+    queries writing one hub each keep their own batches.
+    ``EventHubsDataSource.streamWriter`` refuses a query without that
+    option; a writer built directly without it keys its markers by
+    batch id alone."""
 
     def commit(self, messages, batchId: int) -> None:
         cdir = os.path.join(self.hub_dir, "_commits")
@@ -1088,6 +1083,15 @@ class EventHubsDataSource(DataSource):
         return EventHubsBatchWriter(self.options, schema)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> EventHubsStreamWriter:
+        # a checkpoint set only through spark.sql.streaming.checkpointLocation
+        # never reaches the writer, which would then key its markers by
+        # batch id alone and skip a second such query's batches
+        if not self.options.get("checkpointlocation"):
+            raise ValueError(
+                'an eventhubs stream sink needs .option("checkpointLocation", ...) '
+                "on its writeStream; the spark.sql.streaming.checkpointLocation "
+                "conf alone does not reach the sink"
+            )
         return EventHubsStreamWriter(self.options, schema)
 
 

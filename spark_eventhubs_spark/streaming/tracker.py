@@ -134,8 +134,8 @@ class PartitionsStatusTracker:
 
     # ---- batch lifecycle ----
     def add_batch(self, batch_id: int, offset_ranges) -> None:
-        """offset_ranges: iterable of OffsetRange (uses partition_id,
-        from_seq_no, until_seq_no)."""
+        """offset_ranges: iterable of the batch's PlannedRanges (uses
+        partition_id, from_seq_no, until_seq_no)."""
         if batch_id in self._batches:
             log.error("batch %s already exists in tracker; batches are not updated",
                       batch_id)

@@ -264,6 +264,30 @@ def test_batch_write_roundrobin_and_key_routing(spark, tmp_path):
     assert k1.count() == 1  # same key -> same partition
 
 
+def test_batch_write_after_a_lost_ledger_keeps_earlier_events(spark, tmp_path):
+    """Each batch write commits under its own tag, so a write that runs
+    after the hub's ``_commits/`` dir is lost (a crash, a hand clean-up)
+    appends to the partitions instead of replacing an earlier write's
+    commit files."""
+    import shutil
+
+    register_eventhubs(spark)
+    hub = str(tmp_path / "hub")
+    first = spark.createDataFrame([(f"a{i}",) for i in range(8)], "body string")
+    second = spark.createDataFrame([(f"b{i}",) for i in range(8)], "body string")
+    first.write.format("eventhubs").mode("append").option("path", hub).save()
+    shutil.rmtree(os.path.join(hub, "_commits"), ignore_errors=True)
+    second.write.format("eventhubs").mode("append").option("path", hub).save()
+    back = _read(spark, hub).collect()
+    assert sorted(r["body"].decode() for r in back) == sorted(
+        [f"a{i}" for i in range(8)] + [f"b{i}" for i in range(8)])
+    by_part = {}
+    for r in back:
+        by_part.setdefault(r["partition"], []).append(r["sequenceNumber"])
+    for pid, seqs in by_part.items():
+        assert sorted(seqs) == list(range(len(seqs))), (pid, seqs)
+
+
 def test_write_rejects_overwrite_and_bad_schema(spark, tmp_path):
     hub4 = str(tmp_path / "hub4")
     os.makedirs(hub4)
@@ -364,29 +388,29 @@ def test_write_rejects_partition_and_key_both_set(spark, tmp_path):
 
 def test_compact_hub_log_preserves_data_and_metadata(spark, tmp_path):
     """Compaction folds per-commit files into one per partition while
-    keeping rows, seqNo density, cursors, and the batchId ledger."""
+    keeping rows, seqNo density, and the batchId ledger."""
     import os
 
+    from spark_eventhubs_spark.conf import EventHubsConf
     from spark_eventhubs_spark.sources.datasource import (
         compact_hub_log,
         materialize_hub,
         register_eventhubs,
+        write_eventhubs,
     )
 
     register_eventhubs(spark)
     hub = materialize_hub(spark, SF_DIR, str(tmp_path / "hub"))
-    # simulate streaming commits: write a few extra commit files
+    # simulate sink commits: write a few extra commit files
     df = spark.createDataFrame(
         [(f"m{i}".encode(), str(i % 4)) for i in range(20)],
         "body BINARY, partition STRING",
     )
+    conf = EventHubsConf().set("path", hub)
     for i in range(3):
-        (
-            df.write.format("eventhubs").mode("append")
-            .option("path", hub).save()
-        )
-    ledger = sorted(os.listdir(os.path.join(hub, "_commits")))
-    assert len([f for f in ledger if f.startswith("batch-")]) == 3
+        assert write_eventhubs(df, conf, batch_id=i) == 20
+    ledger = sorted(os.listdir(os.path.join(hub, "_batch_commits")))
+    assert ledger == ["0", "1", "2"]
 
     pre = spark.read.parquet(hub)
     pre_count = pre.count()
@@ -414,7 +438,7 @@ def test_compact_hub_log_preserves_data_and_metadata(spark, tmp_path):
                      if f.endswith(".parquet")]
             assert len(files) == 1
     # metadata survived: the sink's batch ledger
-    assert sorted(os.listdir(os.path.join(hub, "_commits"))) == ledger
+    assert sorted(os.listdir(os.path.join(hub, "_batch_commits"))) == ledger
     # seqNos stay dense per partition
     for pid_s, m in post_max.items():
         n = post.where(F.col("partition") == pid_s).count()

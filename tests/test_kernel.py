@@ -1,20 +1,16 @@
-"""Unit tests for the pure-Python kernel: conf, position, offsets,
-connection strings — modeled on the reference's unit tier
-(EventHubsConfSuite, EventPositionSuite, JsonUtilsSuite,
-ConnectionStringBuilderSuite; SURVEY §5 tier 2)."""
+"""Unit tests for the pure-Python kernel: conf, position, connection
+strings — modeled on the reference's unit tier (EventHubsConfSuite,
+EventPositionSuite, ConnectionStringBuilderSuite; SURVEY §5 tier 2)."""
 
+import json
 from datetime import datetime, timezone
 
 import pytest
 
-from spark_eventhubs_spark.conf import (
-    DEFAULT_CONSUMER_GROUP,
-    EventHubsConf,
-    MAX_EVENTS_PER_TRIGGER_KEY,
-)
+from spark_eventhubs_spark.conf import DEFAULT_CONSUMER_GROUP, EventHubsConf
 from spark_eventhubs_spark.connstr import ConnectionStringBuilder, file_hub_connection_string
-from spark_eventhubs_spark.offsets import EventHubsSourceOffset, NameAndPartition, OffsetRange
 from spark_eventhubs_spark.position import EventPosition
+from spark_eventhubs_spark.sources.datasource import EventHubsStreamReader, _hub_dir_from_options
 
 
 # ---- EventHubsConf (ref EventHubsConfSuite.scala:66-408) ----
@@ -49,26 +45,10 @@ def test_conf_per_partition_overrides_global():
     assert conf.max_rate_per_partition_for(2) == 7
 
 
-def test_conf_trimmed_strips_driver_only_keys():
-    conf = EventHubsConf(file_hub_connection_string("/tmp/x"))
-    conf.set_starting_position(EventPosition.from_start_of_stream())
-    conf.set_max_events_per_trigger(123)
-    t = conf.trimmed()
-    assert MAX_EVENTS_PER_TRIGGER_KEY not in t
-    assert "eventhubs.startingPosition" not in t
-    assert t.connection_string == conf.connection_string
-
-
-def test_conf_clone_independent():
-    conf = EventHubsConf(file_hub_connection_string("/tmp/x"))
-    c2 = conf.clone().set_consumer_group("other")
-    assert conf.consumer_group == DEFAULT_CONSUMER_GROUP
-    assert c2.consumer_group == "other"
-
-
 def test_conf_validate_requires_connection_string():
-    with pytest.raises(ValueError):
-        EventHubsConf().validate()
+    # the reader and writer refuse options naming no hub
+    with pytest.raises(ValueError, match="connectionString"):
+        _hub_dir_from_options({})
 
 
 # ---- EventPosition (ref EventPositionSuite.scala:26-55) ----
@@ -95,40 +75,15 @@ def test_position_negative_seqno_rejected():
         EventPosition.from_sequence_number(-2)
 
 
-# ---- OffsetRange (ref OffsetRangeSuite.scala:23) ----
-
-def test_offset_range_count_and_validation():
-    nap = NameAndPartition("eh", 0)
-    r = OffsetRange(nap, 10, 25)
-    assert r.count == 15
-    assert "fromSeqNo: 10" in str(r)
-    with pytest.raises(ValueError):
-        OffsetRange(nap, 5, 4)
-
-
-# ---- offset JSON + metadata log (ref JsonUtilsSuite.scala:26-43,
-#      EventHubsSourceSuite.scala:128-187) ----
+# ---- offset JSON (ref JsonUtilsSuite.scala:26-43) ----
 
 def test_source_offset_json_wire_format():
-    off = EventHubsSourceOffset(
-        {NameAndPartition("eh", 0): 23, NameAndPartition("eh", 1): 45}
-    )
-    assert off.json() == '{"eh":{"0":23,"1":45}}'
-    assert EventHubsSourceOffset.from_json(off.json()) == off
-
-
-def test_metadata_log_v1_and_legacy_and_future():
-    off = EventHubsSourceOffset({NameAndPartition("eh", 0): 7})
-    content = off.serialize_metadata()
-    assert content.startswith("v1\n")
-    assert EventHubsSourceOffset.deserialize_metadata(content) == off
-    # legacy: raw JSON without version header still parses
-    assert EventHubsSourceOffset.deserialize_metadata(off.json()) == off
-    # future versions rejected
-    with pytest.raises(ValueError):
-        EventHubsSourceOffset.deserialize_metadata("v99999\n{}")
-    with pytest.raises(ValueError):
-        EventHubsSourceOffset.deserialize_metadata("")
+    # the stream reader's offsets are the reference's {"ehName": {"<pid>":
+    # seqNo}} JSON, which Spark writes to the checkpoint offset log
+    reader = EventHubsStreamReader({"path": "/tmp/hubs/eh"})
+    off = reader._pack({1: 45, 0: 23})
+    assert json.dumps(off) == '{"eh": {"0": 23, "1": 45}}'
+    assert reader._unpack(json.loads(json.dumps(off))) == {0: 23, 1: 45}
 
 
 # ---- ConnectionStringBuilder (ref ConnectionStringBuilderSuite.scala:41-104) ----

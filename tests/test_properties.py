@@ -2,12 +2,14 @@
 kernels — the pieces with reference-pinned rounding/edge semantics that
 golden cases alone can miss. No Spark session needed; runs in ms."""
 
+import json
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from spark_eventhubs_spark.connstr import ConnectionStringBuilder
-from spark_eventhubs_spark.offsets import EventHubsSourceOffset
 from spark_eventhubs_spark.position import EventPosition
+from spark_eventhubs_spark.sources.datasource import EventHubsStreamReader
 from spark_eventhubs_spark.streaming.ratelimit import rate_limit
 
 # --- rate_limit invariants (ref EventHubsSource.scala:263-319) ---
@@ -60,33 +62,20 @@ def test_rate_limit_zero_factor_freezes_partition(parts, limit):
         assert out[pid] == min(from_seq[pid], until_seq[pid]) or out[pid] == from_seq[pid]
 
 
-# --- offset JSON codec (ref JsonUtils.scala:63-100) ---
+# --- stream offset JSON (ref JsonUtils.scala:63-100) ---
 
 @settings(max_examples=200, deadline=None)
 @given(
-    st.dictionaries(
-        st.text(st.characters(codec="ascii", exclude_characters='"\\{}:,'), min_size=1, max_size=10),
-        st.dictionaries(st.integers(0, 255), st.integers(0, 2**62), min_size=1, max_size=8),
-        min_size=1,
-        max_size=3,
-    )
+    name=st.text(st.characters(codec="ascii", exclude_characters="/\x00"), min_size=1, max_size=10),
+    seq_nos=st.dictionaries(st.integers(0, 255), st.integers(0, 2**62), min_size=1, max_size=8),
 )
-def test_offset_json_roundtrip(mapping):
-    from spark_eventhubs_spark.offsets import NameAndPartition
-
-    flat = {
-        NameAndPartition(name, pid): seq
-        for name, parts in mapping.items()
-        for pid, seq in parts.items()
-    }
-    off = EventHubsSourceOffset(flat)
-    assert EventHubsSourceOffset.from_json(off.json()).partition_to_seq_nos == flat
-    # the v1 metadata-log framing round-trips too
-    assert (
-        EventHubsSourceOffset.deserialize_metadata(off.serialize_metadata())
-        .partition_to_seq_nos
-        == flat
-    )
+def test_offset_json_roundtrip(name, seq_nos):
+    """The stream reader's offsets survive the JSON text Spark keeps in
+    its checkpoint offset log, keyed by the hub name."""
+    reader = EventHubsStreamReader({"path": "/tmp/hubs/" + name})
+    off = json.loads(json.dumps(reader._pack(seq_nos)))
+    assert list(off) == [name]
+    assert reader._unpack(off) == seq_nos
 
 
 # --- EventPosition JSON (ref EventPosition.scala) ---

@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 
 from spark_eventhubs_spark.conf import EventHubsConf
 from spark_eventhubs_spark.connstr import file_hub_connection_string
-from spark_eventhubs_spark.offsets import NameAndPartition, OffsetRange
 from spark_eventhubs_spark.plans.hubview import configure_session
 from spark_eventhubs_spark.sources.datasource import (
+    PlannedRange,
     _ReceiveLog,
     commit_staged_paths,
     read_eventhubs,
@@ -82,11 +82,8 @@ def test_rate_limit_performance_factor_throttles():
 
 # ---- tracker (ref PartitionsStatusTracker.scala) ----
 
-def _ranges(sizes, name="eh", start=0):
-    return [
-        OffsetRange(NameAndPartition(name, pid), start, start + n)
-        for pid, n in sizes.items()
-    ]
+def _ranges(sizes, start=0):
+    return [PlannedRange(pid, start, start + n, ()) for pid, n in sizes.items()]
 
 
 def test_tracker_quorum_and_outlier_math():
@@ -309,6 +306,26 @@ def test_second_query_into_one_sink_keeps_its_batches(spark, stream_hub, tmp_pat
     assert sorted(rows) == sorted(want * 2)
     markers = [f for f in os.listdir(os.path.join(out, "_commits")) if f.startswith("epoch-")]
     assert len(markers) == 2
+
+
+def test_stream_sink_refuses_a_query_without_a_checkpoint_option(spark, stream_hub, tmp_path):
+    """A checkpoint set only through the session conf never reaches the
+    sink, so its per-query batch markers could not tell two such queries
+    apart: the sink refuses the query and names the option to set."""
+    out = str(tmp_path / "out")
+    spark.conf.set("spark.sql.streaming.checkpointLocation", str(tmp_path / "ck-conf"))
+    try:
+        with pytest.raises(Exception, match=r'option\("checkpointLocation"'):
+            q = (_stream(spark, stream_hub)
+                 .select("body", "partition")
+                 .writeStream.format("eventhubs")
+                 .option("path", out)
+                 .trigger(availableNow=True)
+                 .start())
+            _run(q, available_now=True)
+    finally:
+        spark.conf.unset("spark.sql.streaming.checkpointLocation")
+    assert not os.path.exists(os.path.join(out, "_commits"))
 
 
 _CHECKPOINT_CONF = "spark.sql.streaming.checkpointFileManagerClass"
